@@ -1,7 +1,8 @@
 """The traced run's per-layer figures: span self times, event-log task
 metrics attributed by span property, prefix-leg differences for the lazy
-layers, the streaming query's own progress timings, and the local[1]
-scaling leg. ``PER_LAYER`` is the table ``BENCHMARK.json`` lists."""
+layers, the streaming query's own progress timings, the dataops leg and
+the local[1] scaling leg. ``PER_LAYER`` is the table ``BENCHMARK.json``
+lists."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import glob
 import os
 import time
 
-from . import stats
+from . import inputs, stats
 from .stats import median
 
 SINKS = ["sink_catchall", "sink_logs", "sink_audit", "sink_app-json", "sink_metrics-json"]
@@ -56,12 +57,12 @@ PER_LAYER: list[tuple[str, str, str, str]] = [
     ("streaming.gen_lag_s", "s", "lower", "none (generator health)"),
     ("streaming.backlog_files", "count", "lower", "throughput_per_s, trickle"),
     ("streaming.freshness_p90_s", "s", "lower", "latency_p50_s, trickle"),
-    ("dataops.curate_call_s", "s", "lower", "latency_p50_s, curate"),
-    ("dataops.materialize_s", "s", "lower", "latency_p50_s, curate"),
-    ("dataops.jobs", "count", "lower", "throughput_per_s, curate"),
-    ("dataops.cpu_s.curation", "s", "lower", "throughput_per_s, curate"),
-    ("dataops.cpu_s.entry", "s", "lower", "throughput_per_s, curate"),
-    ("dataops.shuffle_write_bytes", "B", "lower", "throughput_per_s, curate"),
+    ("dataops.curate_call_s", "s", "lower", "none (dataops leg, backfill traced run)"),
+    ("dataops.materialize_s", "s", "lower", "none (dataops leg, backfill traced run)"),
+    ("dataops.jobs", "count", "lower", "none (dataops leg, backfill traced run)"),
+    ("dataops.cpu_s.curation", "s", "lower", "none (dataops leg, backfill traced run)"),
+    ("dataops.cpu_s.entry", "s", "lower", "none (dataops leg, backfill traced run)"),
+    ("dataops.shuffle_write_bytes", "B", "lower", "none (dataops leg, backfill traced run)"),
     ("spark.jobs", "count", "lower", "latency_p50_s, this workload"),
     ("spark.tasks", "count", "lower", "latency_p50_s, this workload"),
     ("spark.cpu_s", "s", "lower", "throughput_per_s, this workload"),
@@ -84,25 +85,18 @@ def _noop(df) -> float:
     return time.monotonic() - t0
 
 
-def prefix_legs(spark, day, lookups, reps: int = 3) -> dict:
-    """Execution self time of the lazy layers on the backfill input: each
-    leg adds one layer to the previous one's plan and is forced by a
-    ``noop`` write; a layer's self time is the difference between
-    successive legs' median times. The per-sink legs read the routed rows
-    from a cache, so transform and enrich are measured against a
-    per-sink filter-only baseline."""
+def _prefix_plans(spark, day):
+    """(scan, +with_parsed, +route) plans over the backfill input, built the
+    way ``Pipeline.run`` builds them."""
     from pyspark.sql import functions as F
 
     from punt_spark.config import default_config
-    from punt_spark.enrich import apply_mutators
     from punt_spark.parse import with_parsed
     from punt_spark.pipeline import slim_parse_projection
     from punt_spark.route import route, routes_df
     from punt_spark.sink import CHUNK_COL, chunk_expr
-    from punt_spark.transform import apply_transformer
 
     cfg = default_config()
-    types = list(cfg.types.values())
     base = day.withColumn(CHUNK_COL, chunk_expr("ts")).withColumnRenamed("ts", "turn_ts")
     parsed = slim_parse_projection(with_parsed(base, "text", cfg.reference_year))
     envelope = (
@@ -111,32 +105,72 @@ def prefix_legs(spark, day, lookups, reps: int = 3) -> dict:
         .withColumn("source", F.concat(F.lit("conv:"), F.col("conv_id")))
     )
     routed, _ = route(envelope, routes_df(spark, cfg), job_id=cfg.job_id)
+    return base, parsed, routed
 
-    def leg(build) -> float:
-        return median([build() for _ in range(reps)])
 
-    legs = {
-        "scan": leg(lambda: _noop(base)),
-        "parse": leg(lambda: _noop(parsed)),
-        "route": leg(lambda: _noop(routed)),
-    }
+def prefix_legs(spark, day, lookups) -> dict:
+    """Execution self time of the lazy layers on the backfill input: each
+    leg adds one layer to the previous one's plan and is forced by one
+    ``noop`` write; a layer's self time is the difference between
+    successive legs' times. The per-sink legs read the routed rows from a
+    cache, so transform and enrich are measured against a per-sink
+    filter-only baseline."""
+    from pyspark.sql import functions as F
+
+    from punt_spark.config import default_config
+    from punt_spark.enrich import apply_mutators
+    from punt_spark.transform import apply_transformer
+
+    types = list(default_config().types.values())
+    base, parsed, routed = _prefix_plans(spark, day)
+    legs = {"scan": _noop(base), "parse": _noop(parsed), "route": _noop(routed)}
     cached = routed.cache()
     cached.count()
     try:
         per_sink = [(t, cached.filter(F.col("sink") == t.sink_name)) for t in types]
-        legs["sink_filter"] = leg(lambda: sum(_noop(sub) for _, sub in per_sink))
-        legs["transform"] = leg(
-            lambda: sum(_noop(apply_transformer(sub, t)[0]) for t, sub in per_sink)
-        )
-        legs["enrich"] = leg(
-            lambda: sum(
-                _noop(apply_mutators(apply_transformer(sub, t)[0], t.mutators, lookups))
-                for t, sub in per_sink
-            )
+        legs["sink_filter"] = sum(_noop(sub) for _, sub in per_sink)
+        legs["transform"] = sum(_noop(apply_transformer(sub, t)[0]) for t, sub in per_sink)
+        legs["enrich"] = sum(
+            _noop(apply_mutators(apply_transformer(sub, t)[0], t.mutators, lookups))
+            for t, sub in per_sink
         )
     finally:
         cached.unpersist()
     return legs
+
+
+def scaling_leg(bench, w) -> dict:
+    """The scan+parse+route prefix leg at local[nproc], then at local[1]
+    (restarting the session), each timed on its second pass, once the
+    session's Python workers have started."""
+
+    def second_pass() -> float:
+        routed = _prefix_plans(bench.spark, w.day)[2]
+        return [_noop(routed) for _ in range(2)][-1]
+
+    tn = second_pass()
+    bench.start_session("local[1]")
+    w.prepare()
+    return {"t1_s": second_pass(), "tn_s": tn}
+
+
+def dataops_leg(bench, calls: int = 2):
+    """The dataops layer, which neither workload touches: one warm-up
+    ``curate_corpus`` call on the 1k-doc corpus, then ``calls`` traced calls
+    on the seeded 5k-doc twin, each checked against the DuckDB oracle."""
+    from .workloads import Curate
+
+    leg = Curate(bench)
+    leg.inputs()
+    leg.warmup()
+    bench.tracer.enabled = True
+    for i in range(calls):
+        start = time.time()
+        rec = leg.op(i)
+        rec.update(start=start, end=time.time())
+        leg.records.append(rec)
+    bench.tracer.enabled = False
+    return leg
 
 
 def read_event_logs(ev_dir: str) -> dict:
@@ -161,7 +195,7 @@ LEG_METRICS = {
 }
 
 
-def collect(bench, w, legs: dict | None, scaling: dict | None, events: dict) -> tuple[dict, dict]:
+def collect(bench, w, legs, scaling, dataops, events: dict) -> tuple[dict, dict]:
     """(values, notes): every PER_LAYER metric, and for each one the run
     could not measure, the reason (its value is then 0)."""
     spans = bench.tracer.spans
@@ -188,7 +222,7 @@ def collect(bench, w, legs: dict | None, scaling: dict | None, events: dict) -> 
         return sum(by_span.get(str(s["id"]), {}).get(field, 0) for s in picked)
 
     # -- session, Spark totals over the traced operations, trace overhead
-    v["session.start_s"] = median(bench.session_starts)
+    v["session.start_s"] = bench.session_starts[0]  # the cold one
     v["spark.jobs"] = len(op_jobs) / n
     v["spark.tasks"] = len(op_tasks) / n
     for key, field in (
@@ -212,6 +246,11 @@ def collect(bench, w, legs: dict | None, scaling: dict | None, events: dict) -> 
         notes["trace.overhead_frac"] = (
             f"{len(traced)} traced vs {len(untraced)} untraced operations in one "
             "session; the event log is on for both, so its cost is not included"
+        )
+    elif w.name == "trickle":
+        notes["trace.overhead_frac"] = (
+            "every drain is traced: drains differ in size, so traced and "
+            "untraced ones would not compare like work"
         )
 
     # -- sink write and read, alerts, metrics (pipeline workloads)
@@ -282,8 +321,7 @@ def collect(bench, w, legs: dict | None, scaling: dict | None, events: dict) -> 
         v["pipeline.scaling_eff"] = scaling["t1_s"] / (bench.nproc * scaling["tn_s"])
         notes["pipeline.scaling_eff"] = (
             f"local[1] {scaling['t1_s']:.2f} s vs local[{bench.nproc}] "
-            f"{scaling['tn_s']:.2f} s over the warm-up slice, warm JVM; local[1] "
-            "includes starting its Python workers"
+            f"{scaling['tn_s']:.2f} s on the scan+parse+route prefix leg, warm JVM"
         )
 
     # -- lazy layers from the prefix legs
@@ -295,8 +333,8 @@ def collect(bench, w, legs: dict | None, scaling: dict | None, events: dict) -> 
         if v["parse.self_s"] > 0:
             v["parse.rows_per_s"] = legs["rows"] / v["parse.self_s"]
         notes["parse.self_s"] = (
-            "prefix-leg differences (median of 3 noop writes each); a "
-            "negative value is below the legs' noise"
+            "prefix-leg differences (one noop write each); a negative "
+            "value is below the legs' noise"
         )
 
     # -- streaming: the query's own progress timings, over every drain
@@ -326,27 +364,37 @@ def collect(bench, w, legs: dict | None, scaling: dict | None, events: dict) -> 
         else:
             notes["streaming.freshness_p90_s"] = "fewer than 11 freshness samples"
 
-    # -- dataops
+    # -- dataops, from the dataops leg's calls
     calls = named("curate.op")
-    if calls:
+    if dataops is not None and calls:
+        k = len(dataops.records)
+        d_windows = [(r["start"], r["end"]) for r in dataops.records]
+        d_tasks = [t for t in tasks if _in_windows(t["launch"], d_windows)]
         curations = named("curate_corpus")
         cur_cpu = attributed(curations, "cpu_s")
-        v["dataops.curate_call_s"] = median(w.latencies())
+        v["dataops.curate_call_s"] = median(dataops.latencies())
         v["dataops.materialize_s"] = (wall(calls) - wall(curations)) / len(calls)
-        v["dataops.jobs"] = len(op_jobs) / n
-        v["dataops.cpu_s.curation"] = cur_cpu / n
-        v["dataops.cpu_s.entry"] = (sum(t["cpu_s"] for t in op_tasks) - cur_cpu) / n
-        v["dataops.shuffle_write_bytes"] = sum(t["shuffle_write"] for t in op_tasks) / n
+        v["dataops.jobs"] = sum(_in_windows(j["submit"], d_windows) for j in jobs) / k
+        v["dataops.cpu_s.curation"] = cur_cpu / k
+        v["dataops.cpu_s.entry"] = (sum(t["cpu_s"] for t in d_tasks) - cur_cpu) / k
+        v["dataops.shuffle_write_bytes"] = sum(t["shuffle_write"] for t in d_tasks) / k
+        notes["dataops.curate_call_s"] = (
+            f"{k} calls of curate_corpus on the {inputs.CURATE_DOCS}-doc twin, "
+            "after one warm-up call"
+        )
 
     for name, _, _, _ in PER_LAYER:
         if name not in v and name != "process.peak_pss_mb":
             v[name] = 0.0
             notes.setdefault(
                 name,
-                "prefix legs and the scaling leg run on backfill only"
+                "skipped: the run passed its trace-leg deadline"
+                if w.name == "backfill"
+                and (name in LEG_METRICS or name.startswith("dataops."))
+                else "measured by backfill's traced run (prefix and scaling legs)"
                 if name in LEG_METRICS
-                else "measured by --workload trickle only"
-                if name.startswith("streaming.")
+                else "measured by backfill's traced run (dataops leg)"
+                if name.startswith("dataops.")
                 else f"layer idle on {w.name}",
             )
     return v, notes

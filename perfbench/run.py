@@ -1,11 +1,11 @@
 """Seeded benchmark for punt_spark at local[nproc].
 
-    python3 perfbench/run.py --workload backfill --seed 1 --seconds 10 --trace 0
-    python3 perfbench/run.py --workload trickle --seed 1 --repeat 5
+    python3 perfbench/run.py --workload backfill --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload trickle --seed 1 --seconds 5 --repeat 5
 
-One run: seeded inputs (cached under .bench_cache/), three set-ups
-(session start + input preparation) and one warm-up pass, the workload's
-operation for ``--seconds``, then the correctness gate. ``--trace 0``
+One run: seeded inputs (cached under .bench_cache/), one cold set-up
+(session start in a fresh JVM, input preparation, one warm-up pass), the
+workload's operation for ``--seconds``, then the correctness gate. ``--trace 0``
 prints the end-to-end metrics, ``--trace 1`` the per-layer table; the last
 stdout line is one JSON object {correct, attempted, failed, metrics}.
 ``--repeat N`` runs N fresh processes on seeds seed..seed+N-1 and prints
@@ -25,16 +25,17 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-SETUP_REPS = 3
-# A run must end within 180 s; the traced run's optional legs are skipped
-# (and reported as not measured) once this much of it has passed.
-TRACE_EXTRAS_DEADLINE_S = 110
+# A run must end within 180 s: a traced run's extra legs are skipped (and
+# reported as not measured) when one, at about 1.5x its usual length, would
+# end past this mark.
+TRACE_DEADLINE_S = 150
+LEG_BUDGET_S = {"prefix": 30, "dataops": 35, "scaling": 20}
 
 E2E = [
     # name, unit, what it is
-    ("setup_s", "s", "median of 3 set-ups (session start + input prep) + warm-up pass"),
-    ("latency_p50_s", "s", "median operation latency (trickle: file freshness)"),
-    ("throughput_per_s", "1/s", "input items (turns, docs) completed per second"),
+    ("setup_s", "s", "cold set-up: session start in a fresh JVM + input prep + warm-up pass"),
+    ("latency_p50_s", "s", "backfill: median Pipeline.run time; trickle: median file freshness"),
+    ("throughput_per_s", "1/s", "turns completed per second"),
 ]
 
 
@@ -162,15 +163,14 @@ def run_once(args) -> dict:
     try:
         w.inputs()
         phase("inputs")
-        setups = []
-        for _ in range(SETUP_REPS):
-            t0 = time.monotonic()
-            bench.start_session()
-            w.prepare()
-            setups.append(time.monotonic() - t0)
+        # One cold set-up, as a user pays it: repeating it in-process would
+        # only repeat warm restarts, since get_spark reuses the running JVM.
         t0 = time.monotonic()
+        bench.start_session()
+        w.prepare()
+        prep_s = time.monotonic() - t0
         w.warmup()
-        warmup_s = time.monotonic() - t0
+        setup_s = time.monotonic() - t0
         phase("setup")
         if bench.trace:
             bench.tracer.install()
@@ -186,9 +186,9 @@ def run_once(args) -> dict:
         bench.set_traced(None)
         phase("check")
 
-        per_layer = notes = None
+        per_layer = notes = dataops = None
         if bench.trace:
-            per_layer, notes = _traced_extras(bench, w, layers)
+            per_layer, notes, dataops = _traced_extras(bench, w, layers)
             per_layer["process.peak_pss_mb"] = sampler.peak_mb
             phase("trace")
     finally:
@@ -198,15 +198,18 @@ def run_once(args) -> dict:
     phase("shutdown")
     print("phases " + ", ".join(f"{k} {v:.1f} s" for k, v in phases.items()), file=sys.stderr)
 
-    attempted = len(w.records) + 1  # + the read-back / final check
-    failed = sum(r["failed"] for r in w.records) + (1 if mismatches else 0)
+    ops = w.records + (dataops.records if dataops else [])
+    attempted = len(ops) + 1  # + the read-back / final check
+    failed = sum(r["failed"] for r in ops) + (1 if mismatches else 0)
+    if dataops:
+        mismatches = mismatches + dataops.notes
     lat = w.latencies()
     e2e = {
-        "setup_s": stats.median(setups) + warmup_s,
+        "setup_s": setup_s,
         "latency_p50_s": stats.median(lat),
         "throughput_per_s": w.throughput(),
     }
-    _print_e2e(w, e2e, lat, setups, warmup_s, attempted, failed, mismatches)
+    _print_e2e(w, e2e, lat, prep_s, attempted, failed, mismatches)
     print(f"  peak memory (PSS) of the process tree while measuring: {sampler.peak_mb:.1f} MB")
     if bench.trace:
         _print_layers(w, per_layer, notes)
@@ -224,43 +227,40 @@ def run_once(args) -> dict:
 
 
 def _traced_extras(bench, w, layers):
-    legs = scaling = None
+    """Backfill's traced run adds the batch legs: prefix legs for the lazy
+    layers, the dataops leg and the local[1] scaling leg, in that order (the
+    last one restarts the session)."""
+    legs = scaling = dataops = None
 
-    def in_time() -> bool:
-        return time.monotonic() - bench.t_start < TRACE_EXTRAS_DEADLINE_S
+    def in_time(leg: str) -> bool:
+        return time.monotonic() - bench.t_start + LEG_BUDGET_S[leg] < TRACE_DEADLINE_S
 
-    if w.name in ("backfill", "trickle"):
-        alerts = (w.pipe if w.name == "backfill" else w.sp).alerts_table.read(bench.spark)
-        w.alert_windows = alerts.count() if alerts is not None else 0
-    if w.name == "backfill" and in_time():
+    alerts = (w.pipe if w.name == "backfill" else w.sp).alerts_table.read(bench.spark)
+    w.alert_windows = alerts.count() if alerts is not None else 0
+    if w.name == "backfill" and in_time("prefix"):
         legs = layers.prefix_legs(bench.spark, w.day, w.lookups)
         legs["rows"] = len(w.day_rows)
-    if w.name == "backfill" and in_time():
-        # the warm-up slice at local[nproc] and at local[1], both on a warm
-        # JVM (the local[1] pass also starts its Python workers)
-        tn = w.warmup()
-        bench.start_session("local[1]")
-        w.prepare()
-        t1 = w.warmup()
-        scaling = {"t1_s": t1, "tn_s": tn}
+    if w.name == "backfill" and in_time("dataops"):
+        dataops = layers.dataops_leg(bench)
+    if w.name == "backfill" and in_time("scaling"):
+        scaling = layers.scaling_leg(bench, w)
     bench.spark.stop()  # flushes the event log
     bench.spark = None
     events = layers.read_event_logs(bench.ev_dir)
-    values, notes = layers.collect(bench, w, legs, scaling, events)
-    if w.name == "backfill" and scaling is None:
-        for name in layers.LEG_METRICS:
-            if legs is None or name == "pipeline.scaling_eff":
-                notes[name] = f"skipped: the run passed {TRACE_EXTRAS_DEADLINE_S} s"
-    return values, notes
+    values, notes = layers.collect(bench, w, legs, scaling, dataops, events)
+    return values, notes, dataops
 
 
-def _print_e2e(w, e2e, lat, setups, warmup_s, attempted, failed, mismatches):
+def _print_e2e(w, e2e, lat, prep_s, attempted, failed, mismatches):
     from perfbench import stats
 
     print(f"workload {w.name}: {len(w.records)} operations, {attempted} attempted, {failed} failed")
     for name, unit, what in E2E:
         print(f"  {name:<18} {e2e[name]:>12.4f} {unit:<4} {what}")
-    print(f"  setup reps {[round(s, 3) for s in setups]} s, warm-up {warmup_s:.3f} s")
+    print(
+        f"  set-up: session start + input prep {prep_s:.3f} s, "
+        f"warm-up {e2e['setup_s'] - prep_s:.3f} s"
+    )
     tail = stats.tail_percentile(len(lat))
     if tail is not None:
         print(
@@ -317,10 +317,15 @@ def repeat(args) -> int:
             return out.returncode
         res = json.loads(out.stdout.strip().splitlines()[-1])
         results.append(res)
+        per_op = [
+            ln.strip() for ln in out.stdout.splitlines()
+            if "per operation" in ln or "drains (s, rows)" in ln
+        ]
         print(
             f"seed {args.seed + k}: {time.monotonic() - t0:.1f} s wall, correct "
             f"{res['correct']}, "
-            + ", ".join(f"{m}={v['value']:.4f}" for m, v in res["metrics"].items()),
+            + ", ".join(f"{m}={v['value']:.4f}" for m, v in res["metrics"].items())
+            + "".join(f"\n  {ln}" for ln in per_op),
             flush=True,
         )
     print(f"{args.workload}: {args.repeat} runs")
@@ -341,7 +346,7 @@ def main(argv=None) -> int:
         os.path.join(ROOT, "__spark_entry__.py")
     )
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    p.add_argument("--workload", required=True, choices=["backfill", "trickle", "curate"])
+    p.add_argument("--workload", required=True, choices=["backfill", "trickle"])
     p.add_argument("--seed", type=int, default=1)
     p.add_argument("--seconds", type=float, default=10)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)

@@ -1,9 +1,10 @@
-"""The three workloads. Each one prepares its seeded inputs, warms up, runs
-its operation back-to-back for the measured window and checks every
-operation's output against the oracle outside the timed interval.
+"""The two workloads and the dataops leg. Each workload prepares its seeded
+inputs, warms up, runs its operation back-to-back for the measured window
+and checks every operation's output against the oracle outside the timed
+interval.
 
 * ``backfill`` — closed loop: ``Pipeline.run(resume=False)``, metrics ON,
-  over one seeded day of turns into a fresh output directory. Bulk
+  over six seeded hours of turns into a fresh output directory. Bulk
   catch-up after an outage: parse, route, transform, enrich and the
   fanned-out sink commits do the work; streaming is idle.
 * ``trickle`` — open loop: a generator thread drops small seeded files
@@ -11,9 +12,10 @@ operation's output against the oracle outside the timed interval.
   drains it with ``StreamingPipeline.run_available_now`` back-to-back
   (same output and checkpoint). The daemon shape: per-micro-batch fixed
   costs dominate and parse does little.
-* ``curate`` — closed loop: ``__spark_entry__`` ``curate_corpus`` over a
-  seeded documents twin; the ``dataops`` layer does all the work and
-  the transcript pipeline none.
+* ``Curate`` — ``__spark_entry__`` ``curate_corpus`` over a seeded
+  documents twin, checked against DuckDB. Not a workload of its own: the
+  backfill traced run calls it as its dataops leg, the one layer neither
+  workload touches.
 """
 
 from __future__ import annotations
@@ -30,10 +32,9 @@ from .procs import steal_ticks, tree_cpu_s
 
 
 class Workload:
-    """Per-workload hooks. ``prepare`` runs in every set-up repetition
-    (after the session start), ``warmup`` once, ``op`` in the measured
-    loop; ``op`` returns a record with at least ``latency_s``, ``items``
-    and ``failed``."""
+    """Per-workload hooks. ``prepare`` runs after each session start,
+    ``warmup`` once, ``op`` in the measured loop; ``op`` returns a record
+    with at least ``latency_s``, ``items`` and ``failed``."""
 
     name = ""
     alert_windows = 0
@@ -113,7 +114,6 @@ class Backfill(Workload):
         spark = self.bench.spark
         self.lookups = load_lookups(spark, self.dir)
         self.day = spark.read.parquet(os.path.join(self.dir, "day.parquet"))
-        self.warm = spark.read.parquet(os.path.join(self.dir, "warmup.parquet"))
 
     def _run(self, df, out: str):
         from punt_spark.config import default_config
@@ -125,8 +125,10 @@ class Backfill(Workload):
         res = pipe.run(df, resume=False)
         return pipe, res, time.monotonic() - t0
 
-    def warmup(self) -> float:
-        return self._run(self.warm, self.bench.work("backfill_warmup"))[2]
+    def warmup(self):
+        """One pass of the operation itself, so every plan, partition
+        layout and Python worker the operation uses has run once."""
+        self._run(self.day, self.bench.work("backfill_warmup"))
 
     def op(self, i: int) -> dict:
         out = self.bench.work(f"backfill_{i % 2}")
@@ -247,12 +249,13 @@ class Trickle(Workload):
         gen = threading.Thread(target=self._generate, args=(t0,), daemon=True)
         gen.start()
         i = 0
+        # a traced run traces every drain: the drains differ in size, so
+        # alternating traced and untraced ones would compare unlike work
+        self.bench.tracer.enabled = self.bench.trace
         while gen.is_alive():
-            self.bench.set_traced(i)
             self.records.append(self._drain(i))
             i += 1
         gen.join()
-        self.bench.set_traced(i)
         self.records.append(self._drain(i))  # the one final drain
         self.bench.set_traced(None)
         self.window = (t0, self.records[-1]["end"])
@@ -308,6 +311,9 @@ class Trickle(Workload):
 
 
 class Curate(Workload):
+    """The dataops leg: ``op`` is one ``curate_corpus`` call on the seeded
+    5k-doc twin, result collected and compared with the DuckDB oracle."""
+
     name = "curate"
 
     def inputs(self):
@@ -340,5 +346,5 @@ class Curate(Workload):
         return rec
 
 
-WORKLOADS = {w.name: w for w in (Backfill, Trickle, Curate)}
+WORKLOADS = {w.name: w for w in (Backfill, Trickle)}
 
