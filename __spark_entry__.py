@@ -23,6 +23,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from punt_spark.session import local_table
+
 AT_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss'+00:00'"
 HOUR_BUCKET_FMT = "yyyy.MM.dd.HH"
 
@@ -83,10 +85,10 @@ _scope_width_stack: list = [None]
 
 @contextmanager
 def _small_input_scope(spark: SparkSession, sf_dir: str, *tables: str):
-    # plan-capture hook (bench_extra --plans): a no-op scope returns the
-    # LAZY frame, exposing the full physical plan instead of the
-    # localCheckpoint scan the materialized path would show — exactly
-    # the production-scale plan, since the scope no-ops there anyway
+    # plan-capture hook: a no-op scope returns the LAZY frame, exposing
+    # the full physical plan instead of the localCheckpoint scan the
+    # materialized path would show — exactly the production-scale plan,
+    # since the scope no-ops there anyway
     if os.environ.get("PUNT_SCOPE_DISABLE"):
         yield None
         return
@@ -136,29 +138,13 @@ def _scratch_dir() -> str | None:
     return "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
 
 
-def _values_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Tiny literal dimension as a VALUES LocalRelation. createDataFrame
-    over a Python list plans Scan ExistingRDD (applySchemaToPythonRDD) —
-    one extra Python-RDD job per invocation just to ship 2-3 constant
-    rows; a VALUES literal folds into the plan with zero jobs."""
-
-    def lit(v) -> str:
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        return repr(v)
-
-    vals = ",".join("(" + ",".join(lit(v) for v in r) + ")" for r in rows)
-    cols = ",".join(c.strip().split()[0] for c in schema.split(","))
-    return spark.sql(f"SELECT * FROM VALUES {vals} AS t({cols})")
-
-
 def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events joined to the route registry: broadcast join + '*' fallback
     (reference cluster.go:253-263) + route_key (cluster.go:284).
     spread=False: the route join is broadcast and the per-row work is one
     date_format — the blanket spread exchange was the whole cost."""
     e = _t(spark, sf_dir, "events", spread=False)
-    routes = _values_df(spark, ROUTES, "rtag string, prefix string")
+    routes = local_table(spark, ROUTES, "rtag string, prefix string")
     j = e.join(F.broadcast(routes), e.event_type == F.col("rtag"), "left")
     return j.withColumn(
         "route_key",
@@ -331,7 +317,7 @@ def q_lookup_enrich(spark, sf_dir):
     # broadcast join + projection only: no exchange at all once the
     # blanket spread is off — no scope needed either
     e = _t(spark, sf_dir, "events", spread=False)
-    dim = _values_df(
+    dim = local_table(
         spark, LOOKUP_DIM, "ltag string, category string, risk_code int"
     )
     return (

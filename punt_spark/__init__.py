@@ -9,7 +9,7 @@ re-expresses the same semantics as set-oriented DataFrame transforms:
 * per-message parse stage      → vectorized pandas-UDF regex bank (parse.py)
 * transformer chain            → from_json column transforms (transform.py)
 * mutator chain                → column exprs + broadcast joins (enrich.py)
-* tag→type dispatch            → broadcast route join (route.py)
+* tag→type dispatch            → plan-time literal CASE on the tag (route.py)
 * ES bulk buffer + commit      → atomic snapshot commits (sink.py)
 * statsd counters              → per-stage/per-partition metric tables (metrics.py)
 * alert rollup windows         → tumbling window aggregation (alerts.py)

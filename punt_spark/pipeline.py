@@ -15,7 +15,8 @@ Execution shape (scale rationale):
   bench scale this is the difference between per-job latency dominating and
   actual throughput.
 * The parse output (the one Python/Arrow stage) is cached once per group;
-  the route join is a broadcast hash join recomputed cheaply per consumer.
+  routing is plan-time literal expressions over it (route.py), a narrow
+  projection each consumer recomputes at no job cost.
 * Sink writes are independent → submitted concurrently from driver threads
   (Spark schedules them in parallel), like the reference's per-type
   goroutine fan-out (R7).
@@ -106,7 +107,7 @@ class MetricsPlumbing:
         * ``lineage.routed.partition_rows`` — per-Spark-partition routed row
           counts (north_rule lineage; ``spark_partition_id`` is captured
           before the aggregation shuffle and is identical to the pid the
-          downstream narrow route join sees);
+          downstream narrow route projection sees);
         * the arbitrary-tag bucket, whose tag values are data-dependent and
           so can never ride a plan-time observation: with a '*' type,
           ``msgs.received/processed[/failed]`` per (chunk, tag) for
@@ -539,7 +540,7 @@ class Pipeline(MetricsPlumbing):
 
             parser = with_parsed_native if self.use_native_parse else with_parsed
             # Cache at the parse boundary: parse is the expensive stage (the
-            # one Python/Arrow round-trip); errors sweep, route join, K sink
+            # one Python/Arrow round-trip); errors sweep, routing, K sink
             # writes, alerts and metrics all re-read the cached batch. The
             # cache is SLIM: envelope fields flattened, raw text retained
             # only for failed rows (the errors side output) — good rows drop
@@ -577,7 +578,8 @@ class Pipeline(MetricsPlumbing):
                 .drop("parse_ok", "raw_text", "parse_error")
                 .withColumn("source", F.concat(F.lit("conv:"), F.col("conv_id")))
             )
-            # Broadcast route join — cheap to recompute per consumer.
+            # Tag dispatch is plan-time literal expressions (route.py): no
+            # join, no broadcast and no Spark job for any consumer.
             routed, unhandled = route(envelope, self._routes, job_id=cfg.job_id)
             try:
                 # Row-level counters ride jobs that run anyway: each

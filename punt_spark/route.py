@@ -3,17 +3,21 @@
 Reference: the worker loop head at /root/reference/lib/punt/cluster.go:
 
 * tag dispatch with ``"*"`` catch-all fallback, else drop + ``msgs.unhandled``
-  (cluster.go:253-263) → broadcast join against the (tiny) routes table with
-  a coalesce onto the catch-all row.
+  (cluster.go:253-263) → the registry is collected at *plan time* and
+  compiled into one literal ``when/otherwise`` chain on the tag per route
+  column; a specific route's NULL field takes the catch-all's value.
 * ``indexString = prefix + timestamp.Format(date_format)`` (cluster.go:284)
   → ``route_key`` column. The timestamp is the *envelope* timestamp captured
   before transform (cluster.go:265) — unpack-take does not change the bucket.
 * ``@timestamp`` + ``punt-server`` stamps (cluster.go:285-286).
 
-Physical note (100 TB): the routes table is a handful of rows — always
-``F.broadcast``; the per-route date_format is resolved at *plan time* into a
-when/otherwise chain over the distinct formats (never per-row interpretation
-of a format string), so route_key stays inside whole-stage codegen.
+Physical note: the registry is a handful of rows, so dispatch is plan-time
+literals — no join, no broadcast, and no Spark job: ``routes_df`` is a
+driver-local LocalRelation (``session.local_table``) whose collect runs no
+job, where every collect or broadcast of a list-built one is a Python-worker
+job. The per-route date_format is likewise resolved into a when/otherwise
+chain over the distinct formats (never per-row interpretation of a format
+string), so route_key stays inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -22,18 +26,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import AT_TIMESTAMP_FORMAT, PipelineConfig
+from .session import local_table
+
+ROUTE_COLS = ["prefix", "mapping_type", "date_format", "transformer", "sink"]
+ROUTE_SCHEMA = "tag string, " + ", ".join(f"{c} string" for c in ROUTE_COLS)
 
 
 def routes_df(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """Materialize the Type registry (state.go:31-33) as a DataFrame."""
+    """The Type registry (state.go:31-33) as a driver-local DataFrame."""
     rows = [
         (t.name, t.prefix, t.mapping_type, t.java_date_format, t.transformer, t.sink_name)
         for t in cfg.types.values()
     ]
-    return spark.createDataFrame(
-        rows, "tag string, prefix string, mapping_type string, "
-        "date_format string, transformer string, sink string"
-    )
+    return local_table(spark, rows, ROUTE_SCHEMA)
 
 
 def route(
@@ -50,38 +55,40 @@ def route(
     unhandled = rows whose tag matches no route and no '*' exists
     (cluster.go:258-262) — kept as a side table for the metric.
     """
-    specific = routes.filter(F.col("tag") != "*")
-    catch_rows = routes.filter(F.col("tag") == "*").collect()
-    catch = catch_rows[0] if catch_rows else None
+    registry = routes.collect()  # a LocalRelation: no Spark job
+    catch = next((r for r in registry if r["tag"] == "*"), None)
+    fallback = {c: catch[c] if catch is not None else None for c in ROUTE_COLS}
+    specific: dict[str, dict] = {}
+    for r in registry:
+        if r["tag"] is None or r["tag"] == "*":
+            continue
+        if r["tag"] in specific:
+            raise ValueError(f"route registry lists tag {r['tag']!r} twice")
+        # a NULL field in a specific route takes the catch-all's value
+        specific[r["tag"]] = {
+            c: r[c] if r[c] is not None else fallback[c] for c in ROUTE_COLS
+        }
 
-    r_cols = ["prefix", "mapping_type", "date_format", "transformer", "sink"]
-    r = specific.select(
-        F.col("tag").alias("__r_tag"),
-        *[F.col(c).alias(f"__r_{c}") for c in r_cols],
-    )
-    joined = df.join(
-        F.broadcast(r), df[tag_col] == F.col("__r_tag"), "left"
-    ).drop("__r_tag")
+    # One literal when/otherwise chain on the tag per route column. A NULL
+    # or unknown tag matches no branch and takes the catch-all's value; with
+    # no catch-all that is NULL, and a NULL sink marks the row unhandled.
+    tag = F.col(tag_col)
+    resolved = []
+    for c in ROUTE_COLS:
+        e = F.lit(fallback[c]).cast("string")
+        for t, vals in specific.items():
+            e = F.when(tag == t, F.lit(vals[c]).cast("string")).otherwise(e)
+        resolved.append(e.alias(c))
+    dispatched = df.select("*", *resolved)
 
-    if catch is not None:
-        for c in r_cols:
-            joined = joined.withColumn(
-                f"__r_{c}", F.coalesce(F.col(f"__r_{c}"), F.lit(catch[c]))
-            )
-
-    matched = joined.filter(F.col("__r_sink").isNotNull())
-    unhandled = joined.filter(F.col("__r_sink").isNull()).drop(
-        *[f"__r_{c}" for c in r_cols]
-    )
-
-    for c in r_cols:
-        matched = matched.withColumnRenamed(f"__r_{c}", c)
+    matched = dispatched.filter(F.col("sink").isNotNull())
+    unhandled = dispatched.filter(F.col("sink").isNull()).drop(*ROUTE_COLS)
 
     # Resolve the per-route date format at plan time: one branch per distinct
     # format actually present in the registry. An EMPTY registry (no types
     # configured) is degenerate but constructible: every row is unhandled
     # and the routed side is empty — not an IndexError on fmts[0].
-    fmts = sorted({row["date_format"] for row in routes.collect()})
+    fmts = sorted({row["date_format"] for row in registry})
     if not fmts:
         empty = matched.withColumns(
             {

@@ -8,7 +8,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -79,3 +82,19 @@ def get_spark(
         for k, v in conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_table(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A tiny literal table (rows of tuples, DDL ``schema``) as a driver-local
+    LocalRelation built from an Arrow table. ``createDataFrame`` over a Python
+    list plans a Python RDD instead: every collect or broadcast of it is a
+    4-task job that starts Python workers (measured ~0.4 s each), where a
+    LocalRelation collects in ~10 ms with no job at all. The explicit Arrow
+    schema keeps None, bools, quotes and backslashes exact, rejects values of
+    the wrong type, and does not depend on
+    ``spark.sql.execution.arrow.pyspark.enabled``."""
+    arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    return spark.createDataFrame(table)

@@ -1,6 +1,6 @@
 """spark-submit entry for the north-rule scaling measurement — the
-parsed+routed CORE job (scan → pandas-UDF RFC3164 parse → broadcast route
-join → noop write) run under the exact deployment shape the rule names:
+parsed+routed CORE job (scan → pandas-UDF RFC3164 parse → literal route
+dispatch → noop write) run under the exact deployment shape the rule names:
 
     zip -r punt_spark.zip punt_spark
     spark-submit --master local[N]  --py-files punt_spark.zip \\

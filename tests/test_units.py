@@ -18,7 +18,8 @@ from punt_spark.config import (
 from punt_spark.enrich import apply_lookup, apply_unixtime
 from punt_spark.framing import frame_newlines, frame_octet_counted, frame_octets_str
 from punt_spark.parse import parse_rfc3164_batch
-from punt_spark.route import route, routes_df
+from punt_spark.route import ROUTE_SCHEMA, route, routes_df
+from punt_spark.session import local_table
 from punt_spark.tail import tail
 from punt_spark.transform import apply_transformer
 
@@ -229,6 +230,7 @@ def test_route_catchall_and_unhandled(spark):
         [
             ("logs", datetime.datetime(2017, 3, 14, 4, 0, 0)),
             ("nosuch", datetime.datetime(2017, 3, 14, 5, 0, 0)),
+            (None, datetime.datetime(2017, 3, 14, 6, 0, 0)),
         ],
         "tag string, ts timestamp",
     )
@@ -236,14 +238,91 @@ def test_route_catchall_and_unhandled(spark):
     rows = {r["tag"]: r for r in routed.collect()}
     assert rows["logs"]["route_key"] == "logs-2017.03.14.04"
     assert rows["nosuch"]["route_key"] == "test-2017.03.14.05"  # '*' fallback
+    assert rows[None]["route_key"] == "test-2017.03.14.06"  # NULL tag → '*'
+    assert rows[None]["sink"] == "sink_catchall"
     assert rows["logs"]["@timestamp"] == "2017-03-14T04:00:00+00:00"
     assert unhandled.count() == 0
 
-    # without a catch-all, unmatched tags are unhandled (cluster.go:258-262)
+    # without a catch-all, unmatched and NULL tags are unhandled
+    # (cluster.go:258-262)
     no_catch = routes.filter(F.col("tag") != "*")
     routed2, unhandled2 = route(df, no_catch)
     assert routed2.count() == 1
-    assert [r["tag"] for r in unhandled2.collect()] == ["nosuch"]
+    assert sorted(unhandled2.collect(), key=lambda r: r["ts"]) == [
+        ("nosuch", datetime.datetime(2017, 3, 14, 5, 0, 0)),
+        (None, datetime.datetime(2017, 3, 14, 6, 0, 0)),
+    ]
+    assert unhandled2.columns == df.columns
+
+    # a NULL field in a specific route takes the catch-all's value
+    reg = [
+        tuple(None if (r["tag"], c) == ("logs", "prefix") else r[c] for c in r.__fields__)
+        for r in routes.collect()
+    ]
+    routed3, _ = route(df, local_table(spark, reg, ROUTE_SCHEMA))
+    rows3 = {r["tag"]: r for r in routed3.collect()}
+    assert rows3["logs"]["prefix"] == "test-"
+    assert rows3["logs"]["route_key"] == "test-2017.03.14.04"
+    assert rows3["logs"]["sink"] == "sink_logs"
+
+
+def _jobs_submitted(spark, fn):
+    """(result of fn(), number of Spark jobs fn submitted)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-probe-{uuid.uuid4().hex}"  # the tracker keeps old groups
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_route_plan_submits_no_jobs(spark):
+    """Collecting the registry and building route()'s plan runs no Spark
+    job, and the routed plan dispatches by literals: no join, no broadcast."""
+    cfg = default_config()
+    df = spark.range(8).select(
+        F.when(F.col("id") % 3 == 0, "logs")
+        .when(F.col("id") % 3 == 1, "nosuch")
+        .alias("tag"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+    )
+
+    def build():
+        routes = routes_df(spark, cfg)
+        assert len(routes.collect()) == len(cfg.types)
+        return route(df, routes)
+
+    (routed, unhandled), jobs = _jobs_submitted(spark, build)
+    assert jobs == 0
+    for plan in (routed, unhandled):
+        qe = plan._jdf.queryExecution()
+        assert "Join" not in qe.optimizedPlan().toString()
+        assert "BroadcastExchange" not in qe.executedPlan().toString()
+    assert routed.count() == 8
+
+
+def test_local_table_roundtrip_exact_without_jobs(spark):
+    rows = [
+        ("it's", True, 1),
+        ("back\\slash", False, None),
+        (None, None, -2),
+        ("'); DROP --", True, 0),
+    ]
+    schema = "s string, b boolean, i int"
+    out, jobs = _jobs_submitted(
+        spark, lambda: local_table(spark, rows, schema).collect()
+    )
+    assert jobs == 0
+    assert [tuple(r) for r in out] == rows
+    assert local_table(spark, [], schema).collect() == []
+    # values of the wrong type are rejected, not coerced into the table
+    with pytest.raises(TypeError):
+        local_table(spark, [(True, "x", 1)], schema)
 
 
 # --- tail ---------------------------------------------------------------------------------
