@@ -91,12 +91,15 @@ class MappingConfig:
 class ClusterConfig:
     """One output cluster (reference: lib/punt/cluster.go:31-40,
     config.json:2-27). Each cluster is an independent lane — its own ES
-    URL (here: output root), worker pool (partition parallelism) and
-    ingest servers — sharing the global Type registry (state.go:27-33)."""
+    URL (here: output root), worker pool and ingest servers — sharing the
+    global Type registry (state.go:27-33). Only ``out_root`` changes
+    behavior: Spark sizes task and write widths from the data (session
+    parallelism, AQE-coalesced sink exchanges), so the worker and bulk
+    knobs are parsed but informational."""
 
     name: str
     out_root: str = ""  # ES URL analog: where this cluster's sinks live
-    num_workers: int | None = None  # → output_partitions override
+    num_workers: int | None = None  # informational (worker pool size)
     bulk_size: int | None = None  # informational (ES bulk buffer)
     commit_interval: int | None = None  # informational (ES commit loop)
 
@@ -174,12 +177,13 @@ class PipelineConfig:
     mappings: dict[str, MappingConfig] = field(default_factory=dict)
     clusters: dict[str, ClusterConfig] = field(default_factory=dict)
     gc: list[GCConfig] = field(default_factory=list)
-    # Execution knobs (reference: num_workers/bulk_size/commit_interval —
-    # config.json:5-7). In Spark these become partition counts / file sizes.
-    output_partitions: int = 32
-    # Salted repartition width for hot (route_key, ts_day) cells. Output
-    # file count ≈ salt_buckets × partition values — keep small; raise only
-    # when a single cell overflows a task (hot-conversation days).
+    # The reference's execution knobs (num_workers/bulk_size/commit_interval,
+    # config.json:5-7) have no field here: a bulk request commits when it
+    # holds bulk_size actions (cluster.go:307-317), and the Spark analog is
+    # a sink write sized by its data (AQE-coalesced, sink.salted_write_layout).
+    # Salt fan-out for hot (route_key, ts_day) cells: a cell larger than a
+    # target partition writes up to salt_buckets files — keep small; raise
+    # only when a single cell overflows a task (hot-conversation days).
     salt_buckets: int = 4
     reference_year: int = 2017  # pinned RFC3164 year back-fill (parser.go:73-84)
     job_id: str = "punt-spark"  # plays the `punt-server` hostname stamp

@@ -19,15 +19,19 @@ BUCKETS = 10_000
 
 
 def round_signed(col: Column, dp: int) -> Column:
-    """``round()`` with DuckDB's DOUBLE signed-zero behavior: a strictly
-    negative value that rounds to zero yields ``-0.0`` (Spark's round
-    drops the sign bit; DuckDB's keeps it — r6 failed semantic_dedup's
-    byte-level hash gate on exactly a (-0.005, 0) input). Use this on
-    every rounded float OUTPUT column whose raw value can be negative;
-    keep plain ``F.round`` for values used in internal sorts/comparisons
-    (engines normalize ±0.0 inconsistently inside compare paths)."""
+    """``round()`` with DuckDB's DOUBLE signed-zero behavior: a value with
+    the sign bit set that rounds to zero — a negative value or an exact
+    ``-0.0`` — yields ``-0.0`` (Spark's round drops the sign bit; DuckDB's
+    keeps it — r6 failed semantic_dedup's byte-level hash gate on exactly
+    a (-0.005, 0) input). The sign bit is read from the string form
+    because ``col < 0.0`` is false for -0.0; the cast only runs on rows
+    that round to zero. Use this on every rounded float OUTPUT column
+    whose raw value can be negative; keep plain ``F.round`` for values
+    used in internal sorts/comparisons (engines normalize ±0.0
+    inconsistently inside compare paths)."""
     r = F.round(col, dp)
-    return F.when((r == 0.0) & (col < 0.0), F.lit(-0.0)).otherwise(r)
+    negative = col.cast("string").startswith("-")
+    return F.when((r == 0.0) & negative, F.lit(-0.0)).otherwise(r)
 
 
 def salted_md5(id_col: str, salt: str) -> Column:

@@ -402,8 +402,8 @@ class Pipeline(MetricsPlumbing):
         """``cluster`` selects a ClusterConfig lane (reference: one Punt
         Config drives several clusters, each with its own ES URL + worker
         pool, config.go:14-21 / state.go:27-29): the cluster's out_root
-        replaces ``out_dir`` and its num_workers overrides
-        output_partitions. All clusters share the Type registry."""
+        replaces ``out_dir``; its num_workers is informational, since write
+        widths follow the data. All clusters share the Type registry."""
         if frame_mode not in ("none", "newline", "octet"):
             raise ValueError(f"unknown frame_mode {frame_mode!r}")
         self.spark = spark
@@ -415,12 +415,6 @@ class Pipeline(MetricsPlumbing):
                 raise ValueError(f"unknown cluster {cluster!r}")
             if cc.out_root:
                 out_dir = cc.out_root
-            if cc.num_workers:
-                import dataclasses
-
-                self.cfg = dataclasses.replace(
-                    self.cfg, output_partitions=cc.num_workers
-                )
         self.out_dir = out_dir
         self.lookups = lookups or {}
         self.use_native_parse = use_native_parse
@@ -617,9 +611,7 @@ class Pipeline(MetricsPlumbing):
                     final = enforce_mapping(
                         final, cfg.mappings.get(t.mapping_type)
                     )
-                    out = salted_write_layout(
-                        final, cfg.output_partitions, cfg.salt_buckets
-                    )
+                    out = salted_write_layout(final, cfg.salt_buckets)
                     with m.timing(f"write_latency.{t.sink_name}", glabel):
                         # footer lineage gated like streaming: with
                         # metrics OFF the driver-side footer reads are

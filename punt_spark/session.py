@@ -45,14 +45,15 @@ SESSION_CONF: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "zstd",
 }
 
-# Local-mode-only tuning, NOT shipped to spark-submit sessions: small scan
-# partitions + high per-file open cost keep a handful of modest part-files
-# from collapsing into one scan task (on a real cluster the input is
-# thousands of files and the defaults are fine), and the broadcast
-# threshold is pinned so the intent survives config drift.
+# Local-mode-only tuning, NOT shipped to spark-submit sessions: the
+# broadcast threshold is pinned so the intent survives config drift, and the
+# UI is off. Scan widths are left to Spark: FilePartition.maxSplitBytes
+# divides (bytes + openCostInBytes per file) by defaultParallelism, so up to
+# P small files keep one partition each (backfill's 4 part files scan as 4)
+# and more pack into about P (a 100-file trickle micro-batch scans as ~4).
+# Every extra scan partition is a task in the parse cache, the scan stats,
+# each sink's map stage and the alert union, which all re-scan the input.
 LOCAL_CONF: dict[str, str] = {
-    "spark.sql.files.maxPartitionBytes": "16m",
-    "spark.sql.files.openCostInBytes": "8m",
     "spark.sql.autoBroadcastJoinThreshold": "10m",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",

@@ -810,44 +810,50 @@ def ddl_for_session_catalog(ddl: str, location: str | None = None) -> str:
 
 def salted_write_layout(
     df: DataFrame,
-    n: int,
     salt_buckets: int,
     salt_keys: tuple[str, ...] = ("conv_id", "turn_idx", "record_idx"),
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx", "record_idx"),
 ) -> DataFrame:
-    """Arrange a frame for an efficient dynamic-partition write.
+    """Arrange a routed frame (``route_key`` and ``ts_day`` stamped) for an
+    efficient dynamic-partition write.
 
     Two problems at once:
 
     * **Write-side skew** (SURVEY.md §4): hot conversations (Zipf conv_id)
       would pile a hot (route_key, ts_day) cell into one task. The salt
-      splits each cell across up to ``salt_buckets`` tasks. AQE skew
-      handling covers joins, not writes — this is the explicit fix.
+      splits each cell across up to ``salt_buckets`` shuffle partitions.
+      AQE skew handling covers joins, not writes — this is the explicit fix.
     * **Small-file blow-up**: repartitioning on a salt alone scatters every
       (route_key, ts_day) value across ALL tasks → tasks × partitions tiny
       files, and the dynamic-partition writer juggles many open files
       (measured 10× slower). ``sortWithinPartitions`` on the partition keys
-      makes each task stream one file at a time; total files ≈
-      salt_buckets × partition-values instead of n × partition-values.
+      makes each task stream one file at a time.
+
+    The exchange has no explicit count: it starts at
+    ``spark.sql.shuffle.partitions`` and AQE's ``CoalesceShufflePartitions``
+    merges adjacent partitions up to its target size from the measured
+    map-output bytes (``repartition(n, cols)`` is ``REPARTITION_BY_NUM``,
+    which AQE never coalesces). Files ≈ salt_buckets × cells only for cells
+    larger than a target partition; a small group writes one file per cell
+    (a 20k-turn backfill group writes 33 files over its five sinks).
 
     The salt hashes (conv_id, turn_idx) — NOT conv_id alone: a single hot
     conversation would map every row to one salt value and stay unsplit
     (measured: a 70%-hot conv left a 1.07M-row straggler task with
-    conv-only salt; row-level salt caps tasks at ~n/buckets). record_idx
-    joins the salt for the same reason: a framed blob explodes into many
-    rows sharing (conv_id, turn_idx). Order is still recoverable — the
-    invariant is equality under (conv_id, turn_idx[, record_idx]) sort,
-    and ``order_cols`` keeps runs clustered within files.
+    conv-only salt; row-level salt spreads it over salt_buckets
+    partitions). record_idx joins the salt for the same reason: a framed
+    blob explodes into many rows sharing (conv_id, turn_idx). Order is
+    still recoverable — the invariant is equality under (conv_id,
+    turn_idx[, record_idx]) sort, and ``order_cols`` keeps runs clustered
+    within files.
     """
-    if not {"route_key", "ts_day"}.issubset(df.columns):
-        return df.coalesce(max(1, n // 4))
     keys = [k for k in salt_keys if k in df.columns]
     salt = (
         F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(salt_buckets))
         if keys
         else F.lit(0)
     )
-    out = df.repartition(n, F.col("route_key"), F.col("ts_day"), salt)
+    out = df.repartition(F.col("route_key"), F.col("ts_day"), salt)
     sort_cols = [c for c in (CHUNK_COL, "route_key", "ts_day") if c in df.columns]
     sort_cols += [c for c in order_cols if c in df.columns]
     return out.sortWithinPartitions(*sort_cols)

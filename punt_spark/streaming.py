@@ -174,9 +174,7 @@ class StreamingPipeline(MetricsPlumbing):
                     "sink", CHUNK_COL,
                 )
                 final = enforce_mapping(final, cfg.mappings.get(t.mapping_type))
-                out = salted_write_layout(
-                    final, cfg.output_partitions, cfg.salt_buckets
-                )
+                out = salted_write_layout(final, cfg.salt_buckets)
                 with m.timing(f"write_latency.{t.sink_name}", sid):
                     man = self.sinks[t.sink_name].commit(
                         out,
@@ -287,8 +285,12 @@ def tail_stream(spark: SparkSession, table):
         (len(m.get("partition_cols", [])) for m in manifests.values()),
         default=0,
     )
-    # leaf-dir glob depth = batch=<id> dir + one level per partition col
-    leaf_glob = os.path.join(table.data_dir, *(["*"] * (1 + n_parts)))
+    # leaf-dir glob depth = batch=<id> dir + one level per partition col.
+    # The first level must name published batches: a glob's matches are
+    # listing roots, which skip Spark's hidden-file filter, so a bare ``*``
+    # would match an in-flight ``.tmp.batch=<id>/_temporary/0`` and fail
+    # the query on its deeper layout (or read uncommitted rows).
+    leaf_glob = os.path.join(table.data_dir, "batch=*", *(["*"] * n_parts))
     return (
         spark.readStream.schema(batch_df.schema)
         .option("basePath", table.data_dir)

@@ -462,6 +462,28 @@ def test_hash_split_and_stratified_sample(spark):
     assert sampling.stratified_sample(df2, "id", "stratum", {"a": 1.0}).count() == 0
 
 
+def test_round_signed_matches_duckdb_signed_zero(spark):
+    """round_signed keeps DuckDB's DOUBLE sign bit, including an exact -0.0
+    input (``col < 0.0`` is false for -0.0)."""
+    import math
+
+    import duckdb
+
+    from punt_spark.dataops.sampling import round_signed
+    from punt_spark.session import local_table
+
+    values = [-0.0, -0.001, 0.0, 0.001, -1.236]
+    df = local_table(spark, [(v,) for v in values], "v double")
+    got = [r["r"] for r in df.select(round_signed(F.col("v"), 2).alias("r")).collect()]
+    want = [
+        duckdb.sql(f"SELECT round(CAST('{v!r}' AS DOUBLE), 2)").fetchone()[0]
+        for v in values
+    ]
+    assert [(g, math.copysign(1.0, g)) for g in got] == [
+        (w, math.copysign(1.0, w)) for w in want
+    ]
+
+
 # --- similarity --------------------------------------------------------------------
 
 

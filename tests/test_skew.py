@@ -7,6 +7,8 @@ sandbox-measurable proxy for task-time skew: every row of these plans costs
 the same work, so rows-per-task tracks task time.
 """
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,6 +28,25 @@ def _partition_balance(df) -> tuple[int, float, int]:
     )
     counts = [r["count"] for r in rows]
     return max(counts), sum(counts) / len(counts), len(counts)
+
+
+@contextmanager
+def _conf_scope(spark, confs: dict[str, str]):
+    """Set session confs for the block, then restore them. conf.get(k, None)
+    is None for confs never explicitly set — restoring those means UNSET,
+    not skip (a skipped restore would leak the toy thresholds into the
+    shared session fixture for every later test)."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_lsh_band_join_hot_bucket_at_cap_boundary(spark):
@@ -73,23 +94,10 @@ def test_lsh_band_join_hot_bucket_at_cap_boundary(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with _conf_scope(spark, confs):
         pairs = dedup._bucket_join(pruned, "doc_id")
         mx, mean, n_parts = _partition_balance(pairs)
         total = pairs.count()
-    finally:
-        # conf.get(k, None) is None for confs never explicitly set —
-        # restoring those means UNSET, not skip (a skipped restore would
-        # leak the aggressive toy thresholds into the shared session
-        # fixture for every later test)
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     # the boundary bucket alone contributes C(200,2) = 19,900 pairs
     assert total >= cap * (cap - 1) // 2
     assert n_parts >= 3, "skew split should spread the hot key over tasks"
@@ -112,7 +120,15 @@ def test_salted_write_layout_hot_conversation(spark, hot_frac):
     row-level salt spreads it across salt_buckets tasks. Asserts the
     measured max/mean rows-per-task bound ≤ 3.2 (the figure recorded in
     BENCH/BASELINE.md) and that no task carries more than ~2× the hot
-    conversation's fair share."""
+    conversation's fair share.
+
+    The layout's exchange is sized by AQE from map-output bytes, so at
+    session defaults a 40k-row frame plans no wider than the session's
+    task slots (asserted last). The balance assertions run in a conf scope
+    that scales AQE's target partition down to toy data — 16 initial
+    partitions, a 1 KB target, no coalescing toward parallelism or a
+    minimum size — so each salted partition stays its own task, as a hot
+    cell's salted partitions larger than the target do at scale."""
     n = 40_000
     n_hot = int(n * hot_frac)
     rows = [
@@ -123,11 +139,22 @@ def test_salted_write_layout_hot_conversation(spark, hot_frac):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, route_key string, ts_day string"
     )
-    out = salted_write_layout(df, n=16, salt_buckets=8)
-    mx, mean, n_parts = _partition_balance(out)
+    confs = {
+        "spark.sql.shuffle.partitions": "16",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
+    }
+    with _conf_scope(spark, confs):
+        out = salted_write_layout(df, salt_buckets=8)
+        mx, mean, n_parts = _partition_balance(out)
     assert n_parts >= 8
     ratio = mx / mean
     assert ratio <= 3.2, f"salted layout imbalance {ratio:.2f} > 3.2"
     # the hot conversation's rows are genuinely split: its fair share per
     # salt bucket is n_hot/salt_buckets; no task may hold ~all of it
     assert mx <= 2 * (n_hot / 8) + (n - n_hot)
+    # at session defaults the small frame's write is not fanned out wider
+    # than the session's task slots
+    at_defaults = salted_write_layout(df, salt_buckets=8)
+    assert at_defaults.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism

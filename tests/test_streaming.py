@@ -302,6 +302,42 @@ def test_live_tail_follows_new_commits(spark, tmp_path):
         q.stop()
 
 
+def test_live_tail_ignores_in_flight_staging_dir(spark, tmp_path):
+    """A commit still being written sits under the dot-prefixed staging dir
+    (``.tmp.batch=<id>/_temporary/0/<task>/...``, one level deeper than a
+    published batch). A tail that lists while it is in flight neither fails
+    on that layout nor reads its uncommitted rows."""
+    import shutil
+
+    import pandas as pd
+    from punt_spark.sink import SnapshotTable
+    from punt_spark.streaming import live_tail
+
+    tbl = SnapshotTable(str(tmp_path / "staged_sink"))
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["c0", "c1"],
+            "turn_idx": [0, 1],
+            "tag": ["logs", "logs"],
+            "route_key": ["logs-2017.03.14.04"] * 2,
+            "ts_day": ["2017-03-14"] * 2,
+        }
+    )
+    man = tbl.commit(spark.createDataFrame(pdf), snapshot_id="s1")
+    cell = os.path.join("route_key=logs-2017.03.14.04", "ts_day=2017-03-14")
+    staged = os.path.join(
+        tbl.data_dir, ".tmp.batch=s2", "_temporary", "0", "task_0", cell
+    )
+    os.makedirs(staged)
+    shutil.copy(os.path.join(tbl.root, man["files"][0]), staged)
+
+    q = live_tail(spark, tbl, query_name="live_tail_staged")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    got = [r["conv_id"] for r in spark.sql("select conv_id from live_tail_staged").collect()]
+    assert sorted(got) == ["c0", "c1"]
+
+
 def test_live_tail_multi_table_fan_in(spark, tmp_path):
     """punt-cli tails the same stream on several hosts and merges the
     lines (cmd/punt-cli/main.go:22-74) — several sink tables fan into one

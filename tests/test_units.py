@@ -325,6 +325,25 @@ def test_local_table_roundtrip_exact_without_jobs(spark):
         local_table(spark, [(True, "x", 1)], schema)
 
 
+def test_scan_packs_many_small_files_into_session_parallelism(spark, tmp_path):
+    """Scan widths come from Spark's own file packing: P tiny files keep one
+    scan partition each, and 3×P tiny files (a trickle micro-batch's shape)
+    pack into at most P partitions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def scan_partitions(n_files: int) -> int:
+        d = tmp_path / f"files{n_files}"
+        d.mkdir()
+        for i in range(n_files):
+            pq.write_table(pa.table({"x": [i]}), str(d / f"part-{i:03d}.parquet"))
+        return spark.read.parquet(str(d)).rdd.getNumPartitions()
+
+    p = spark.sparkContext.defaultParallelism
+    assert scan_partitions(p) == p
+    assert scan_partitions(3 * p) <= p
+
+
 # --- tail ---------------------------------------------------------------------------------
 
 
