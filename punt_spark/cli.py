@@ -4,7 +4,7 @@ The Spark analog of ``cmd/puntd/main.go`` (flag parse → LoadConfig →
 State.Run). Usage:
 
     python -m punt_spark.cli --input DIR --out DIR [--config cfg.json]
-        [--native-parse] [--no-resume] [--retention] [--master local[N]]
+        [--no-resume] [--retention] [--master local[N]]
     python -m punt_spark.cli --out DIR --tail SINK[,SINK...] [--follow]
         [--retention-interval SEC] [--limit N] [--sample PCT]
 
@@ -42,8 +42,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--out", required=True, help="output root (sinks, metrics)")
     ap.add_argument("--config", help="Punt-shaped JSON config (optional)")
     ap.add_argument("--master", default=None, help="Spark master override")
-    ap.add_argument("--native-parse", action="store_true",
-                    help="use the JVM regexp_extract parse path")
     ap.add_argument("--frame", choices=["none", "newline", "octet"],
                     default="none",
                     help="pre-parse record framing (reference: TCP newline / "
@@ -248,7 +246,6 @@ def main(argv: list[str] | None = None) -> int:
             cfg,
             out_dir=args.out,
             lookups=lookups,
-            use_native_parse=args.native_parse,
             frame_mode=args.frame,
             collect_metrics=True,
             dedup_within=args.dedup_within,
@@ -277,7 +274,6 @@ def main(argv: list[str] | None = None) -> int:
         cfg,
         out_dir=args.out,
         lookups=lookups,
-        use_native_parse=args.native_parse,
         frame_mode=args.frame,
     )
     result = pipe.run(transcripts, resume=not args.no_resume)

@@ -5,17 +5,15 @@ parser.go:47-106 (ParseRFC3164Inplace). The reference parses one line at a
 time inside a per-connection goroutine; here the same regex bank is applied
 to an entire Arrow batch at once.
 
-Two interchangeable implementations, tested equal:
-
-* ``parse_rfc3164`` — scalar pandas UDF returning a struct column. All six
-  capture groups extract in a single pass over the batch via pyarrow's RE2
-  ``extract_regex`` + C++ ``strptime`` (the contract path per BASELINE.json
-  input_hint: "vectorized pandas/Arrow UDFs, no per-row Python"; measured
-  2.05× the original pandas ``str.extract``+``to_datetime`` formulation,
-  which remains as the tested-equal fallback).
-* ``parse_rfc3164_native`` — pure Spark SQL expressions (``regexp_extract``
-  ×6 + ``to_timestamp``), JVM-side, whole-stage-codegen friendly. The fast
-  path at scale: zero Python, zero Arrow transfer.
+``parse_rfc3164`` is a scalar pandas UDF returning a struct column. All
+six capture groups extract in a single pass over the batch via pyarrow's
+RE2 ``extract_regex`` + C++ ``strptime`` (the contract path per
+BASELINE.json input_hint: "vectorized pandas/Arrow UDFs, no per-row
+Python"; measured 2.05× the original pandas ``str.extract``+``to_datetime``
+formulation, which remains as the tested-equal fallback). A JVM-only
+``regexp_extract``×6 variant was removed: a warm 20k-turn backfill at
+local[4] (third run in a fresh session) took 10.1/9.7 s with it against
+7.7/7.9 s with this UDF.
 
 Error semantics (parser.go:13-16, 56-106): a line yields exactly one of a
 parsed record or an error tag (Invalid Message / Invalid Priority /
@@ -34,7 +32,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -170,8 +168,7 @@ def parse_rfc3164_batch(text: pd.Series, year: int) -> pd.DataFrame:
     # don't fit the declared int32 schema count as INVALID, not as a job
     # crash: a single adversarial line like <99999999999> would otherwise
     # fail the whole task at Arrow conversion (Int64 → int32), violating
-    # the totality contract — and the JVM-native twin already tags these
-    # rows Invalid Priority / Invalid PID via try_cast.
+    # the totality contract.
     _I32_MAX = 2_147_483_647
     error = np.select(
         [
@@ -222,65 +219,6 @@ def with_parsed(df: DataFrame, text_col: str = "text", year: int = 2017) -> Data
     return df.withColumn("parsed", parse_udf(F.col(text_col))).withColumn(
         "parse_ok", F.col("parsed.error").isNull()
     )
-
-
-# --- JVM-native variant (no Python in the hot path) ------------------------
-
-
-def _native_group(text: Column, idx: int) -> Column:
-    return F.regexp_extract(text, RFC3164_REGEX, idx)
-
-
-def with_parsed_native(
-    df: DataFrame, text_col: str = "text", year: int = 2017
-) -> DataFrame:
-    """Same contract as :func:`with_parsed`, built from Spark built-ins only.
-
-    Stays inside whole-stage codegen; at 100 TB this avoids every
-    JVM↔Python Arrow round-trip. Semantics pinned equal to the UDF path by
-    tests/test_parse.py::test_native_matches_udf.
-    """
-    text = F.col(text_col)
-    matched = text.rlike(RFC3164_REGEX)
-    pri_s = _native_group(text, 1)
-    ts_s = _native_group(text, 2)
-    host_s = _native_group(text, 3)
-    tag_s = _native_group(text, 4)
-    pid_s = _native_group(text, 5)
-    content_s = _native_group(text, 6)
-
-    # try_cast / try_to_timestamp: malformed input → NULL → error tag (ANSI
-    # mode would throw the whole task instead).
-    pri = pri_s.try_cast("int")
-    ts = F.try_to_timestamp(
-        F.concat(F.lit(str(year) + " "), F.regexp_replace(ts_s, r"\s+", " ")),
-        F.lit("yyyy MMM d HH:mm:ss"),
-    )
-    pid_num = pid_s.try_cast("int")
-    pid_missing = pid_s == ""
-    pid = F.coalesce(pid_num, F.lit(0))
-
-    error = (
-        F.when(~matched, F.lit(ERR_INVALID_MESSAGE))
-        .when(pri.isNull(), F.lit(ERR_INVALID_PRIORITY))
-        .when(ts.isNull(), F.lit(ERR_INVALID_TIMESTAMP))
-        .when(pid_num.isNull() & ~pid_missing, F.lit(ERR_INVALID_PID))
-    )
-    ok = error.isNull()
-
-    def _ok(c: Column) -> Column:
-        return F.when(ok, c)
-
-    parsed = F.struct(
-        _ok(pri).alias("priority"),
-        _ok(ts).alias("ts"),
-        _ok(host_s).alias("hostname"),
-        _ok(tag_s).alias("tag"),
-        _ok(pid).alias("pid"),
-        _ok(content_s).alias("content"),
-        error.alias("error"),
-    )
-    return df.withColumn("parsed", parsed).withColumn("parse_ok", ok)
 
 
 def split_errors(df: DataFrame) -> tuple[DataFrame, DataFrame]:

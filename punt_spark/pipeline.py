@@ -46,7 +46,7 @@ from .alerts import matched_events, render_actions, rollup_all
 from .config import PipelineConfig, TypeConfig, default_config
 from .enrich import apply_mutators
 from .metrics import MetricsCollector
-from .parse import with_parsed, with_parsed_native
+from .parse import with_parsed
 from .route import route, routes_df
 from .sink import (
     CHUNK_COL,
@@ -61,10 +61,9 @@ from .transform import apply_transformer
 def slim_parse_projection(raw: DataFrame) -> DataFrame:
     """The slim parse-boundary projection — envelope fields flattened, raw
     text retained only for FAILED rows (the errors side output), roughly
-    halving cached bytes. ONE definition shared by the batch group body
-    and the streaming micro-batch body: the two had drifted copies of
-    this 18-line select, and any asymmetric edit here silently breaks the
-    batch/streaming parity the counters are pinned on."""
+    halving cached bytes. Used by the group body
+    (``MetricsPlumbing._process_group``) and by perfbench's prefix legs,
+    which rebuild the parse plan the way the pipeline does."""
     extra_meta = ["record_idx"] if "record_idx" in raw.columns else []
     return raw.select(
         CHUNK_COL,
@@ -87,16 +86,45 @@ def slim_parse_projection(raw: DataFrame) -> DataFrame:
 
 
 class MetricsPlumbing:
-    """Counter/lineage machinery shared by the batch ``Pipeline`` and the
-    ``StreamingPipeline`` (streaming.py): the scan-materialization
-    aggregate, the per-sink observation metrics, and the metrics.parquet
-    writer. Host class must provide ``metrics``, ``cfg``,
-    ``max_dynamic_tags``, and ``out_dir``."""
+    """The group body shared by the batch ``Pipeline`` and the
+    ``StreamingPipeline`` (streaming.py) — parse cache, scan stats,
+    errors, route, concurrent per-sink writes, alert fan-in and the
+    errors/alerts/actions commits — plus its counter/lineage machinery: the
+    scan-materialization aggregate, the per-sink observation metrics and
+    the metrics.parquet writer. The subclasses differ only in how they
+    form a group's input and what they do around it (chunk markers vs. the
+    streaming checkpoint)."""
 
-    metrics: MetricsCollector
-    cfg: PipelineConfig
-    max_dynamic_tags: int
-    out_dir: str
+    def __init__(
+        self,
+        spark: SparkSession,
+        cfg: PipelineConfig | None,
+        out_dir: str,
+        lookups: dict[str, DataFrame] | None,
+        collect_metrics: bool,
+        frame_mode: str,
+        max_dynamic_tags: int,
+    ):
+        if frame_mode not in ("none", "newline", "octet"):
+            raise ValueError(f"unknown frame_mode {frame_mode!r}")
+        self.spark = spark
+        self.cfg = cfg or default_config()
+        self.out_dir = out_dir
+        self.lookups = lookups or {}
+        self.collect_metrics = collect_metrics
+        self.frame_mode = frame_mode
+        # dynamic-tag metrics cap: top-K named tags per chunk + '__other__'
+        self.max_dynamic_tags = max_dynamic_tags
+        self.metrics = MetricsCollector(self.cfg.job_id)
+        self.sinks = {
+            t.sink_name: SnapshotTable(os.path.join(out_dir, t.sink_name))
+            for t in self.cfg.types.values()
+        }
+        self.errors_table = SnapshotTable(os.path.join(out_dir, "errors"))
+        self.alerts_table = SnapshotTable(os.path.join(out_dir, "alerts"))
+        self.actions_table = SnapshotTable(os.path.join(out_dir, "actions"))
+        self._routes = routes_df(spark, self.cfg)
+        self._emit_ddl()
 
     def _record_scan_stats(self, cached: DataFrame, glabel: str) -> list[str]:
         """The counters only the parse scan can supply, recorded by the
@@ -138,9 +166,10 @@ class MetricsPlumbing:
         vocabulary-bounded, and strictly smaller than the old plan, which
         shipped the same set to the driver.
 
-        Returns the sorted list of chunks with ≥1 parsed row — the
-        streaming pipeline derives its per-chunk observation expressions
-        from this roster (the batch pipeline knows its group upfront).
+        Returns the sorted list of chunks with ≥1 parsed row — the roster
+        the group body derives its per-sink observation expressions from
+        (a chunk with no parsed rows could only produce zero counts, which
+        are never emitted).
         """
         from .transform import json_ok
 
@@ -363,16 +392,15 @@ class MetricsPlumbing:
         for k, v in runtime_gauges(self.spark).items():
             self.metrics.gauge(k, chunk, v)
 
-
     def _emit_ddl(self):
         """Write each sink's CREATE TABLE DDL to ``<out>/_ddl/<sink>.sql``
         at init — the reference pushes its index templates at startup
         (type.go:63-97); a real deployment applies these files verbatim
         against its Iceberg catalog (no catalog jars in this sandbox, so
         the emission IS the binding, kept exact by the round-trip test
-        against every sink's written schema). Lives on MetricsPlumbing so
-        the batch Pipeline AND the streaming daemon emit identically
-        (needs only cfg / frame_mode / out_dir)."""
+        against every sink's written schema). Runs from
+        ``MetricsPlumbing.__init__``, so the batch Pipeline and the
+        streaming daemon leave the identical ``<out>/_ddl`` contract."""
         from .sink import sink_ddl
 
         ddl_dir = os.path.join(self.out_dir, "_ddl")
@@ -383,6 +411,206 @@ class MetricsPlumbing:
                 f.write(ddl + "\n")
             os.replace(tmp, os.path.join(ddl_dir, f"{sink_name}.sql"))
 
+    def _commit(
+        self, table: SnapshotTable, df: DataFrame, sid: str,
+        chunks: list[str] | None, **kw,
+    ) -> dict[str, dict]:
+        """Commit one group output; returns ``{label: manifest}``. Known
+        chunks (batch) → ONE write sliced into per-chunk manifests
+        (``commit_batch``, chunk as a partition dir, labels per chunk);
+        ``chunks=None`` (streaming) → one snapshot labelled ``sid``."""
+        if chunks is None:
+            return {
+                sid: table.commit(
+                    df, snapshot_id=sid, footer_lineage=self.collect_metrics,
+                    **kw,
+                )
+            }
+        return table.commit_batch(
+            df, batch_id=sid, chunks=chunks,
+            footer_lineage=self.collect_metrics, **kw,
+        )
+
+    def _count_committed(self, metric: str, manifests: dict, tag=None):
+        """Fold committed rows (manifest footer lineage) into ``metric``
+        per manifest label."""
+        for label, man in manifests.items():
+            n = man.get("lineage", {}).get("n_rows", 0)
+            if n:
+                self.metrics.count(metric, label, n, tag=tag)
+
+    def _process_group(
+        self, gdf: DataFrame, sid: str, label: str, chunks: list[str] | None
+    ):
+        """The one group body — the Spark re-expression of the reference's
+        worker loop (ClusterWorker.run, cluster.go:233-324). ``gdf`` is the
+        group's input with ``CHUNK_COL`` and ``turn_ts``; ``sid`` is the
+        snapshot id of every commit; ``label`` tags timings and gauges;
+        ``chunks`` selects the commit shape (see ``_commit``). Snapshot ids
+        are deterministic per group, so a re-run group overwrites
+        idempotently instead of duplicating."""
+        cfg = self.cfg
+        m = self.metrics
+        with m.timing("processing_latency", label):
+            # Framing (reference servers option `octet_counted`,
+            # config.json:23; newline framing is the TCP default): each
+            # framed record becomes its own row, sub-indexed by record_idx
+            # so the (conv_id, turn_idx, record_idx) ordering stays stable.
+            if self.frame_mode != "none":
+                from .framing import frame_records
+
+                gdf = frame_records(gdf, self.frame_mode, "text")
+
+            # Cache at the parse boundary: parse is the expensive stage (the
+            # one Python/Arrow round-trip); errors sweep, routing, K sink
+            # writes, alerts and metrics all re-read the cached batch. The
+            # cache is SLIM: envelope fields flattened, raw text retained
+            # only for failed rows (the errors side output) — good rows drop
+            # the original line, roughly halving cached bytes.
+            #
+            # (Measured dead end, kept for the record: caching one shared
+            # salted/sorted layout for all sinks — one shuffle instead of K —
+            # is 2.5× SLOWER here, because the union doubles the parse pass
+            # and the writer re-sorts anyway once the cache scan loses the
+            # ordering guarantee. Per-sink layout + warm parse cache wins.)
+            raw = with_parsed(gdf, "text", cfg.reference_year)
+            cached = slim_parse_projection(raw).cache()
+            try:
+                # Materialize BEFORE the concurrent sink writes — cold cache
+                # + parallel consumers would duplicate the parse work. When
+                # metrics are on, the materialization ACTION doubles as the
+                # one counter Spark can't observe statically: the per-(chunk,
+                # tag) breakdown of the arbitrary-tag bucket (catch-all rows
+                # when a '*' type exists, unhandled rows otherwise — tag
+                # values there are data-dependent, so no plan-time when/sum
+                # enumeration is possible) — and it yields the chunk roster
+                # for the per-sink observation expressions. A full-scan
+                # aggregate materializes every cached partition exactly like
+                # count() does, so this costs zero additional jobs.
+                with m.timing("parse_latency", label):
+                    if self.collect_metrics:
+                        roster = self._record_scan_stats(cached, label)
+                    else:
+                        cached.count()
+                        roster = []
+                errors = cached.filter(~F.col("parse_ok")).select(
+                    F.col(CHUNK_COL),
+                    F.col("raw_text").alias("data"),
+                    F.col("parse_error").alias("error"),
+                )
+                envelope = (
+                    cached.filter(F.col("parse_ok"))
+                    .drop("parse_ok", "raw_text", "parse_error")
+                    .withColumn(
+                        "source", F.concat(F.lit("conv:"), F.col("conv_id"))
+                    )
+                )
+                # Tag dispatch is plan-time literal expressions (route.py):
+                # no join, no broadcast and no Spark job for any consumer.
+                routed, _ = route(envelope, self._routes, job_id=cfg.job_id)
+                # Row-level counters ride jobs that run anyway: each
+                # static-tag sink's per-chunk received/failed sums sit on
+                # its pre-transform frame as observation metrics
+                # (CollectMetrics nodes — Spark never pushes filters through
+                # them), evaluated by the sink's own write job; lineage and
+                # the arbitrary-tag bucket rode the cache-materialization
+                # aggregate above; inserted counts and per-(route_key,
+                # ts_day) lineage come from the commit manifests (parquet
+                # footers) below. Metrics collection adds ZERO Spark jobs.
+                drop = [
+                    "prefix", "mapping_type", "date_format", "transformer",
+                    "sink",
+                ]
+                if chunks is None:
+                    # A snapshot spanning several ts-days partitions on
+                    # (route_key, ts_day) only, so CHUNK_COL is bookkeeping,
+                    # not sink data: retained, it would (a) be stored in
+                    # every sink file (batch stores it only as a partition
+                    # dir) and (b) lead salted_write_layout's
+                    # sortWithinPartitions, which the V1 writer's
+                    # (route_key, ts_day) required ordering is not a prefix
+                    # of — Spark would discard the salted sort and re-sort
+                    # every task.
+                    drop.append(CHUNK_COL)
+
+                def write_sink(t: TypeConfig):
+                    sub = routed.filter(F.col("sink") == t.sink_name)
+                    obs = None
+                    # Static-tag sinks (every row's tag == t.name): observe
+                    # per-chunk received + unpack-failure counts on the
+                    # pre-transform frame — they ride the write job free.
+                    # The catch-all sink's per-tag counts were recorded by
+                    # the cache-materialization aggregate instead.
+                    if self.collect_metrics and t.name != "*" and roster:
+                        obs, sub = self._observe_sink_counters(sub, t, roster)
+                    transformed, _failed = apply_transformer(sub, t)
+                    enriched = apply_mutators(transformed, t.mutators, self.lookups)
+                    # declared-mapping enforcement (the ES index-template
+                    # the reference pushes at startup, type.go:63-97)
+                    final = enforce_mapping(
+                        enriched.drop(*drop), cfg.mappings.get(t.mapping_type)
+                    )
+                    out = salted_write_layout(final, cfg.salt_buckets)
+                    with m.timing(f"write_latency.{t.sink_name}", label):
+                        manifests = self._commit(
+                            self.sinks[t.sink_name], out, sid, chunks
+                        )
+                    return t, enriched, manifests, obs, sub
+
+                types = list(cfg.types.values())
+                # NOTE (measured dead end): folding the errors commit into
+                # this pool — either as a 5th concurrent writer or queued
+                # behind the sinks on 4 workers — read equal-or-slower on
+                # this shared-disk box (more concurrent writers = more seek
+                # contention); errors stays a serial tail below.
+                with ThreadPoolExecutor(max_workers=min(4, len(types)) or 1) as ex:
+                    results = list(ex.map(write_sink, types))
+
+                alert_events: dict[str, list] = {a.name: [] for a in cfg.alerts}
+                for t, enriched, manifests, obs, sub in results:
+                    if self.collect_metrics:
+                        self._count_committed(
+                            "msgs.inserted", manifests, tag=t.sink_name
+                        )
+                        if obs is not None:
+                            self._record_observed_counters(obs, t, roster, sub)
+                    for a in cfg.alerts:
+                        ev = matched_events(enriched, a, t.name)
+                        if ev is not None:
+                            alert_events[a.name].append(ev)
+
+                err_manifests = self._commit(
+                    self.errors_table, errors.coalesce(4), sid, chunks,
+                    partition_cols=[],
+                )
+                if self.collect_metrics:
+                    self._count_committed("parse_errors", err_manifests)
+
+                # Alert rollup + rendered actions per group, same idempotent
+                # snapshot id. (Windows straddling a group or micro-batch
+                # boundary roll up per group — the reference's wall-clock
+                # windows have the same arrival-split behavior,
+                # alert.go:50-65.)
+                all_alerts = rollup_all(alert_events, cfg.alerts)
+                if all_alerts is not None:
+                    # The rollups feed two commits — cache so the second
+                    # (actions render) doesn't recompute the window agg.
+                    all_alerts = all_alerts.coalesce(4).cache()
+                    self.alerts_table.commit(
+                        all_alerts, snapshot_id=sid, partition_cols=[],
+                    )
+                    acts = render_actions(all_alerts, cfg.alerts, cfg.actions)
+                    if acts is not None:
+                        self.actions_table.commit(
+                            acts, snapshot_id=sid, partition_cols=[],
+                        )
+                    all_alerts.unpersist()
+                if self.collect_metrics:
+                    # A5 gauges at the group commit boundary
+                    self._snapshot_gauges(label)
+            finally:
+                cached.unpersist()
+
 
 class Pipeline(MetricsPlumbing):
     def __init__(
@@ -391,10 +619,8 @@ class Pipeline(MetricsPlumbing):
         cfg: PipelineConfig | None = None,
         out_dir: str = "./punt_out",
         lookups: dict[str, DataFrame] | None = None,
-        use_native_parse: bool = False,
         collect_metrics: bool = True,
         max_chunks_per_group: int = 64,
-        parallel_sink_writes: bool = True,
         frame_mode: str = "none",
         cluster: str | None = None,
         max_dynamic_tags: int = 100,
@@ -404,38 +630,20 @@ class Pipeline(MetricsPlumbing):
         pool, config.go:14-21 / state.go:27-29): the cluster's out_root
         replaces ``out_dir``; its num_workers is informational, since write
         widths follow the data. All clusters share the Type registry."""
-        if frame_mode not in ("none", "newline", "octet"):
-            raise ValueError(f"unknown frame_mode {frame_mode!r}")
-        self.spark = spark
-        self.cfg = cfg or default_config()
-        self.cluster = cluster
+        cfg = cfg or default_config()
         if cluster is not None:
-            cc = self.cfg.clusters.get(cluster)
+            cc = cfg.clusters.get(cluster)
             if cc is None:
                 raise ValueError(f"unknown cluster {cluster!r}")
             if cc.out_root:
                 out_dir = cc.out_root
-        self.out_dir = out_dir
-        self.lookups = lookups or {}
-        self.use_native_parse = use_native_parse
-        self.collect_metrics = collect_metrics
+        super().__init__(
+            spark, cfg, out_dir, lookups, collect_metrics, frame_mode,
+            max_dynamic_tags,
+        )
+        self.cluster = cluster
         self.max_chunks_per_group = max_chunks_per_group
-        self.parallel_sink_writes = parallel_sink_writes
-        self.frame_mode = frame_mode
-        # dynamic-tag metrics cap: top-K named tags per chunk + '__other__'
-        self.max_dynamic_tags = max_dynamic_tags
-        self.metrics = MetricsCollector(self.cfg.job_id)
         os.makedirs(os.path.join(out_dir, "_chunks"), exist_ok=True)
-        self.sinks = {
-            t.sink_name: SnapshotTable(os.path.join(out_dir, t.sink_name))
-            for t in self.cfg.types.values()
-        }
-        self.errors_table = SnapshotTable(os.path.join(out_dir, "errors"))
-        self.alerts_table = SnapshotTable(os.path.join(out_dir, "alerts"))
-        self.actions_table = SnapshotTable(os.path.join(out_dir, "actions"))
-        self._routes = routes_df(spark, self.cfg)
-        self._emit_ddl()
-
 
     # -- resume bookkeeping ----------------------------------------------------
 
@@ -453,16 +661,10 @@ class Pipeline(MetricsPlumbing):
 
     # -- main entry --------------------------------------------------------------
 
-    def run(
-        self,
-        transcripts: DataFrame,
-        resume: bool = True,
-        fail_after_first_sink: bool = False,
-    ) -> dict:
+    def run(self, transcripts: DataFrame, resume: bool = True) -> dict:
         """Process all pending ts-day chunks of ``transcripts``. Committed
         chunks are skipped when ``resume`` (exactly-once per chunk — the
-        reference's at-most-once R6 upgraded). ``fail_after_first_sink`` is a
-        test hook simulating a mid-group crash."""
+        reference's at-most-once R6 upgraded)."""
         t_start = time.monotonic()
         chunks = [
             r["c"]
@@ -478,13 +680,8 @@ class Pipeline(MetricsPlumbing):
         done: list[str] = []
         for i in range(0, len(pending), self.max_chunks_per_group):
             group = pending[i : i + self.max_chunks_per_group]
-            self._run_group(transcripts, group, fail_after_first_sink)
+            self._run_group(transcripts, group)
             done.extend(group)
-            if self.collect_metrics:
-                glabel = (
-                    f"{group[0]}..{group[-1]}" if len(group) > 1 else group[0]
-                )
-                self._snapshot_gauges(glabel)
         self._write_metrics()
         return {
             "chunks_processed": done,
@@ -498,190 +695,29 @@ class Pipeline(MetricsPlumbing):
     def _group_id(self, group: list[str]) -> str:
         return hashlib.md5(",".join(sorted(group)).encode()).hexdigest()[:12]
 
-    def _run_group(
-        self, transcripts: DataFrame, group: list[str], fail_hook: bool = False
-    ):
-        cfg = self.cfg
-        m = self.metrics
+    def _run_group(self, transcripts: DataFrame, group: list[str]):
+        """Batch prelude to the group body: the group's chunks in one pass,
+        committed per chunk, then marked done."""
         gid = self._group_id(group)
         glabel = f"{group[0]}..{group[-1]}" if len(group) > 1 else group[0]
-        with m.timing("processing_latency", glabel):
-            gdf = transcripts.withColumn(
-                CHUNK_COL, chunk_expr("ts")
-            ).filter(F.col(CHUNK_COL).isin(group))
-            gdf = gdf.withColumnRenamed("ts", "turn_ts")
-            # Spread the group across the cluster before the parse stage: a
-            # group read from few/large files would otherwise parse on a
-            # handful of tasks. Hash on conv_id (deterministic), skipped when
-            # the scan already yields enough parallelism (the normal case at
-            # scale — many files per day-partition).
-            want = self.spark.sparkContext.defaultParallelism
-            try:
-                n_files = len(transcripts.inputFiles())
-            except Exception:
-                n_files = 0
-            if n_files < max(2, want // 2):
-                gdf = gdf.repartition(want, "conv_id", "turn_idx")
-
-            # Framing (reference servers option `octet_counted`,
-            # config.json:23; newline framing is the TCP default): each
-            # framed record becomes its own row, sub-indexed by record_idx
-            # so the (conv_id, turn_idx, record_idx) ordering stays stable.
-            if self.frame_mode != "none":
-                from .framing import frame_records
-
-                gdf = frame_records(gdf, self.frame_mode, "text")
-
-            parser = with_parsed_native if self.use_native_parse else with_parsed
-            # Cache at the parse boundary: parse is the expensive stage (the
-            # one Python/Arrow round-trip); errors sweep, routing, K sink
-            # writes, alerts and metrics all re-read the cached batch. The
-            # cache is SLIM: envelope fields flattened, raw text retained
-            # only for failed rows (the errors side output) — good rows drop
-            # the original line, roughly halving cached bytes.
-            #
-            # (Measured dead end, kept for the record: caching one shared
-            # salted/sorted layout for all sinks — one shuffle instead of K —
-            # is 2.5× SLOWER here, because the union doubles the parse pass
-            # and the writer re-sorts anyway once the cache scan loses the
-            # ordering guarantee. Per-sink layout + warm parse cache wins.)
-            raw = parser(gdf, "text", cfg.reference_year)
-            cached = slim_parse_projection(raw).cache()
-            # Materialize BEFORE the concurrent sink writes — cold cache +
-            # parallel consumers would duplicate the parse work. When
-            # metrics are on, the materialization ACTION doubles as the one
-            # counter Spark can't observe statically: the per-(chunk, tag)
-            # breakdown of the arbitrary-tag bucket (catch-all rows when a
-            # '*' type exists, unhandled rows otherwise — tag values there
-            # are data-dependent, so no plan-time when/sum enumeration is
-            # possible). A full-scan aggregate materializes every cached
-            # partition exactly like count() does, so this costs zero
-            # additional jobs.
-            with m.timing("parse_latency", glabel):
-                if self.collect_metrics:
-                    self._record_scan_stats(cached, glabel)
-                else:
-                    cached.count()
-            errors = cached.filter(~F.col("parse_ok")).select(
-                F.col(CHUNK_COL),
-                F.col("raw_text").alias("data"),
-                F.col("parse_error").alias("error"),
-            )
-            envelope = (
-                cached.filter(F.col("parse_ok"))
-                .drop("parse_ok", "raw_text", "parse_error")
-                .withColumn("source", F.concat(F.lit("conv:"), F.col("conv_id")))
-            )
-            # Tag dispatch is plan-time literal expressions (route.py): no
-            # join, no broadcast and no Spark job for any consumer.
-            routed, unhandled = route(envelope, self._routes, job_id=cfg.job_id)
-            try:
-                # Row-level counters ride jobs that run anyway: each
-                # static-tag sink's per-chunk received/failed sums sit on
-                # its pre-transform frame as observation metrics
-                # (CollectMetrics nodes — Spark never pushes filters through
-                # them), evaluated by the sink's own write job; lineage and
-                # the arbitrary-tag bucket rode the cache-materialization
-                # aggregate above; inserted counts and per-(route_key,
-                # ts_day) lineage come from the commit manifests (parquet
-                # footers) below. Metrics collection adds ZERO Spark jobs.
-                alert_events: dict[str, list] = {a.name: [] for a in cfg.alerts}
-                static_sink = {
-                    t.sink_name: t.name != "*" for t in cfg.types.values()
-                }
-
-                def write_sink(t: TypeConfig):
-                    sub = routed.filter(F.col("sink") == t.sink_name)
-                    obs = None
-                    # Static-tag sinks (every row's tag == t.name): observe
-                    # per-chunk received + unpack-failure counts on the
-                    # pre-transform frame — they ride the write job free.
-                    # The catch-all sink's per-tag counts were recorded by
-                    # the cache-materialization aggregate instead.
-                    if self.collect_metrics and static_sink[t.sink_name]:
-                        obs, sub = self._observe_sink_counters(sub, t, group)
-                    transformed, _failed = apply_transformer(sub, t)
-                    enriched = apply_mutators(transformed, t.mutators, self.lookups)
-                    final = enriched.drop(
-                        "prefix", "mapping_type", "date_format", "transformer",
-                        "sink",
-                    )
-                    # declared-mapping enforcement (the ES index-template
-                    # the reference pushes at startup, type.go:63-97)
-                    final = enforce_mapping(
-                        final, cfg.mappings.get(t.mapping_type)
-                    )
-                    out = salted_write_layout(final, cfg.salt_buckets)
-                    with m.timing(f"write_latency.{t.sink_name}", glabel):
-                        # footer lineage gated like streaming: with
-                        # metrics OFF the driver-side footer reads are
-                        # pure waste, and leaving them on flattered the
-                        # ON-vs-OFF overhead comparison
-                        manifests = self.sinks[t.sink_name].commit_batch(
-                            out, batch_id=gid, chunks=group,
-                            footer_lineage=self.collect_metrics,
-                        )
-                    return t, enriched, manifests, obs, sub
-
-                results = []
-                types = list(cfg.types.values())
-                # NOTE (measured dead end): folding the errors commit into
-                # this pool — either as a 5th concurrent writer or queued
-                # behind the sinks on 4 workers — read equal-or-slower on
-                # this shared-disk box (more concurrent writers = more seek
-                # contention); errors stays a serial tail below.
-                if self.parallel_sink_writes and len(types) > 1 and not fail_hook:
-                    with ThreadPoolExecutor(max_workers=min(4, len(types))) as ex:
-                        results = list(ex.map(write_sink, types))
-                else:
-                    for t in types:
-                        results.append(write_sink(t))
-                        if fail_hook:
-                            raise RuntimeError(
-                                "simulated crash after first sink commit"
-                            )
-
-                for t, enriched, manifests, obs, sub in results:
-                    if self.collect_metrics:
-                        for c, man in manifests.items():
-                            n = man.get("lineage", {}).get("n_rows", 0)
-                            if n:
-                                m.count("msgs.inserted", c, n, tag=t.sink_name)
-                        if obs is not None:
-                            self._record_observed_counters(obs, t, group, sub)
-                    for a in cfg.alerts:
-                        ev = matched_events(enriched, a, t.name)
-                        if ev is not None:
-                            alert_events[a.name].append(ev)
-
-                err_manifests = self.errors_table.commit_batch(
-                    errors.coalesce(4), batch_id=gid, chunks=group,
-                    partition_cols=[],
-                    footer_lineage=self.collect_metrics,
-                )
-                if self.collect_metrics:
-                    for c, man in err_manifests.items():
-                        n = man.get("lineage", {}).get("n_rows", 0)
-                        if n:
-                            m.count("parse_errors", c, n)
-
-                all_alerts = rollup_all(alert_events, cfg.alerts)
-                if all_alerts is not None:
-                    # The rollups feed two commits — cache so the second
-                    # (actions render) doesn't recompute the window agg.
-                    all_alerts = all_alerts.coalesce(4).cache()
-                    self.alerts_table.commit(
-                        all_alerts, snapshot_id=gid, partition_cols=[],
-                    )
-                    acts = render_actions(all_alerts, cfg.alerts, cfg.actions)
-                    if acts is not None:
-                        self.actions_table.commit(
-                            acts, snapshot_id=gid, partition_cols=[],
-                        )
-                    all_alerts.unpersist()
-            finally:
-                cached.unpersist()
-
+        gdf = (
+            transcripts.withColumn(CHUNK_COL, chunk_expr("ts"))
+            .filter(F.col(CHUNK_COL).isin(group))
+            .withColumnRenamed("ts", "turn_ts")
+        )
+        # Spread the group across the cluster before the parse stage: a
+        # group read from few/large files would otherwise parse on a
+        # handful of tasks. Hash on conv_id (deterministic), skipped when
+        # the scan already yields enough parallelism (the normal case at
+        # scale — many files per day-partition).
+        want = self.spark.sparkContext.defaultParallelism
+        try:
+            n_files = len(transcripts.inputFiles())
+        except Exception:
+            n_files = 0
+        if n_files < max(2, want // 2):
+            gdf = gdf.repartition(want, "conv_id", "turn_idx")
+        self._process_group(gdf, gid, glabel, group)
         for chunk in group:
             self._mark_chunk(
                 chunk, {"chunk": chunk, "group": gid, "committed_at": time.time()}

@@ -684,7 +684,8 @@ def sink_ddl(cfg, frame_mode: str = "none") -> dict[str, str]:
     The column list is derived per type: transformer (direct keeps the
     envelope; unpack-merge merges the payload and drops content;
     unpack-take replaces the envelope) + mutator outputs + framing
-    sub-index — matching exactly what Pipeline._run_group writes.
+    sub-index — matching exactly what the group body
+    (``pipeline.MetricsPlumbing._process_group``) writes.
     """
     meta = ["conv_id string", "turn_idx int"]
     if frame_mode != "none":

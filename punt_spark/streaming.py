@@ -10,37 +10,35 @@ layout identical to the batch pipeline (one manifest per micro-batch,
 exactly-once via the streaming checkpoint + idempotent snapshot ids).
 
 ``Trigger.AvailableNow`` drains the backlog and stops — the batch/streaming
-boundary is just a trigger choice; all transform logic is shared with
-pipeline.py.
+boundary is just a trigger choice: each micro-batch runs the same group
+body as a batch group (``MetricsPlumbing._process_group`` in pipeline.py).
 
-The alert path in streaming mode uses event-time tumbling windows with a
-watermark (late rows beyond the watermark are dropped — the reference has
-no late-data concept at all; its windows are wall-clock arrival-based).
+Alerts in the daemon use that body's ``rollup_all`` per micro-batch, like
+batch (windows straddling a micro-batch boundary roll up per batch).
+``streaming_alert_counts`` (event-time tumbling windows with a watermark,
+late rows dropped) and ``stateful_alert_windows`` are separate helpers over
+a streaming frame.
 """
 
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .alerts import matched_events, render_actions, rollup_all
-from .config import PipelineConfig, TypeConfig, default_config
-from .enrich import apply_mutators
-from .metrics import MetricsCollector
-from .parse import with_parsed, with_parsed_native
-from .pipeline import MetricsPlumbing, slim_parse_projection
-from .route import route, routes_df
-from .sink import (
-    CHUNK_COL,
-    SnapshotTable,
-    chunk_expr,
-    enforce_mapping,
-    salted_write_layout,
-)
-from .transform import apply_transformer
+from .config import PipelineConfig
+from .pipeline import MetricsPlumbing
+from .sink import CHUNK_COL, chunk_expr
+
+# Not called here (the group body lives in pipeline.py): perfbench/trace.py
+# wraps these names on this module as well as on pipeline.
+from .alerts import render_actions, rollup_all  # noqa: F401
+from .enrich import apply_mutators  # noqa: F401
+from .parse import with_parsed  # noqa: F401
+from .route import route  # noqa: F401
+from .sink import salted_write_layout  # noqa: F401
+from .transform import apply_transformer  # noqa: F401
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -56,9 +54,7 @@ class StreamingPipeline(MetricsPlumbing):
         out_dir: str = "./punt_stream_out",
         lookups: dict[str, DataFrame] | None = None,
         dedup_within: str | None = None,
-        use_native_parse: bool = False,
         collect_metrics: bool = False,
-        parallel_sink_writes: bool = True,
         frame_mode: str = "none",
         max_dynamic_tags: int = 100,
     ):
@@ -67,175 +63,33 @@ class StreamingPipeline(MetricsPlumbing):
         at-least-once source (the reference's UDP listener, a retrying
         producer) stops double-counting without unbounded state.
 
-        The processing knobs mirror the batch ``Pipeline``:
-        ``use_native_parse`` (JVM regexp path), ``frame_mode``
-        (newline/octet framing before parse), ``parallel_sink_writes``
-        (concurrent snapshot commits from driver threads), and
-        ``collect_metrics`` — the same zero-extra-job counter set as batch
-        (scan-materialization aggregate + per-sink observe() + manifest
-        footer lineage), accumulated across micro-batches and written to
+        The processing knobs are the batch ``Pipeline``'s: ``frame_mode``
+        (newline/octet framing before parse) and ``collect_metrics`` — the
+        same zero-extra-job counter set as batch (scan-materialization
+        aggregate + per-sink observe() + manifest footer lineage),
+        accumulated across micro-batches and written to
         ``<out>/metrics.parquet`` when the drain finishes. Counter
         attribution granularity differs ONLY for commit-derived counters
         (msgs.inserted / parse_errors): their chunk label is the
         micro-batch id, because one streaming snapshot may span several
         ts-days; per-tag totals still line up with batch exactly."""
-        if frame_mode not in ("none", "newline", "octet"):
-            raise ValueError(f"unknown frame_mode {frame_mode!r}")
-        self.spark = spark
-        self.cfg = cfg or default_config()
-        self.out_dir = out_dir
-        self.lookups = lookups or {}
+        super().__init__(
+            spark, cfg, out_dir, lookups, collect_metrics, frame_mode,
+            max_dynamic_tags,
+        )
         self.dedup_within = dedup_within
-        self.use_native_parse = use_native_parse
-        self.collect_metrics = collect_metrics
-        self.parallel_sink_writes = parallel_sink_writes
-        self.frame_mode = frame_mode
-        self.max_dynamic_tags = max_dynamic_tags
-        self.metrics = MetricsCollector(self.cfg.job_id)
         self.checkpoint = os.path.join(out_dir, "_checkpoint")
-        self.sinks = {
-            t.sink_name: SnapshotTable(os.path.join(out_dir, t.sink_name))
-            for t in self.cfg.types.values()
-        }
-        self.errors_table = SnapshotTable(os.path.join(out_dir, "errors"))
-        self.alerts_table = SnapshotTable(os.path.join(out_dir, "alerts"))
-        self.actions_table = SnapshotTable(os.path.join(out_dir, "actions"))
-        self._routes = routes_df(spark, self.cfg)
-        # startup index-template push, same as the batch Pipeline — the
-        # daemon shape must leave the identical <out>/_ddl contract
-        self._emit_ddl()
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int):
-        """foreachBatch body — mirrors Pipeline._run_group for one
-        micro-batch: slim parse cache, scan-stats materialization,
-        concurrent per-sink transform→enrich→commit with observation
-        counters, errors/alerts/actions side outputs. Snapshot id = batch
-        id → re-delivered batches (after a checkpoint recovery) overwrite
-        idempotently instead of duplicating."""
-        cfg = self.cfg
-        m = self.metrics
+        """foreachBatch prelude to the group body: one micro-batch is one
+        group, committed as one snapshot with id = batch id, so a batch
+        re-delivered after a checkpoint recovery overwrites idempotently
+        instead of duplicating."""
         sid = f"batch-{batch_id:08d}"
         gdf = batch_df.withColumn(
             CHUNK_COL, chunk_expr("ts")
         ).withColumnRenamed("ts", "turn_ts")
-        if self.frame_mode != "none":
-            from .framing import frame_records
-
-            gdf = frame_records(gdf, self.frame_mode, "text")
-        parser = with_parsed_native if self.use_native_parse else with_parsed
-        raw = parser(gdf, "text", cfg.reference_year)
-        cached = slim_parse_projection(raw).cache()
-        try:
-            # Materialize before the concurrent consumers; when metrics are
-            # on the materialization aggregate doubles as the lineage +
-            # dynamic-tag counter collection AND yields the batch's chunk
-            # roster for the per-sink observation expressions (batch mode
-            # knows its chunk group upfront; a micro-batch discovers it).
-            with m.timing("parse_latency", sid):
-                if self.collect_metrics:
-                    chunks = self._record_scan_stats(cached, sid)
-                else:
-                    cached.count()
-                    chunks = []
-            errors = cached.filter(~F.col("parse_ok")).select(
-                F.col(CHUNK_COL),
-                F.col("raw_text").alias("data"),
-                F.col("parse_error").alias("error"),
-            )
-            envelope = (
-                cached.filter(F.col("parse_ok"))
-                .drop("parse_ok", "raw_text", "parse_error")
-                .withColumn("source", F.concat(F.lit("conv:"), F.col("conv_id")))
-            )
-            routed, _ = route(envelope, self._routes, job_id=cfg.job_id)
-            alert_events: dict[str, list] = {a.name: [] for a in cfg.alerts}
-            static_sink = {
-                t.sink_name: t.name != "*" for t in cfg.types.values()
-            }
-
-            def write_sink(t: TypeConfig):
-                sub = routed.filter(F.col("sink") == t.sink_name)
-                obs = None
-                if self.collect_metrics and static_sink[t.sink_name] and chunks:
-                    obs, sub = self._observe_sink_counters(sub, t, chunks)
-                transformed, _failed = apply_transformer(sub, t)
-                enriched = apply_mutators(transformed, t.mutators, self.lookups)
-                # CHUNK_COL is micro-batch bookkeeping (observe grouping),
-                # not table data: streaming commits partition on
-                # (route_key, ts_day) only, so a retained chunk column
-                # would (a) be physically stored in every sink file
-                # (batch stores it only as a partition dir) and (b) lead
-                # salted_write_layout's sortWithinPartitions, which the
-                # V1 writer's (route_key, ts_day) required ordering is
-                # not a prefix of — Spark would discard the salted sort
-                # and re-sort every task.
-                final = enriched.drop(
-                    "prefix", "mapping_type", "date_format", "transformer",
-                    "sink", CHUNK_COL,
-                )
-                final = enforce_mapping(final, cfg.mappings.get(t.mapping_type))
-                out = salted_write_layout(final, cfg.salt_buckets)
-                with m.timing(f"write_latency.{t.sink_name}", sid):
-                    man = self.sinks[t.sink_name].commit(
-                        out,
-                        snapshot_id=sid,
-                        footer_lineage=self.collect_metrics,
-                    )
-                return t, enriched, man, obs, sub
-
-            types = list(cfg.types.values())
-            if self.parallel_sink_writes and len(types) > 1:
-                with ThreadPoolExecutor(max_workers=min(4, len(types))) as ex:
-                    results = list(ex.map(write_sink, types))
-            else:
-                results = [write_sink(t) for t in types]
-
-            for t, enriched, man, obs, sub in results:
-                if self.collect_metrics:
-                    n = man.get("lineage", {}).get("n_rows", 0)
-                    if n:
-                        m.count("msgs.inserted", sid, n, tag=t.sink_name)
-                    if obs is not None:
-                        self._record_observed_counters(obs, t, chunks, sub)
-                for a in cfg.alerts:
-                    ev = matched_events(enriched, a, t.name)
-                    if ev is not None:
-                        alert_events[a.name].append(ev)
-            err_man = self.errors_table.commit(
-                errors.coalesce(2),
-                snapshot_id=sid,
-                partition_cols=[],
-                footer_lineage=self.collect_metrics,
-            )
-            if self.collect_metrics:
-                n = err_man.get("lineage", {}).get("n_rows", 0)
-                if n:
-                    m.count("parse_errors", sid, n)
-            # alert rollup + rendered actions per micro-batch, same idempotent
-            # snapshot id — re-delivered batches overwrite, not duplicate.
-            # (Windows straddling a batch boundary roll up per batch — the
-            # reference's wall-clock windows have the same arrival-split
-            # behavior, alert.go:50-65.)
-            rolled = rollup_all(alert_events, cfg.alerts)
-            if rolled is not None:
-                rolled = rolled.coalesce(2).cache()
-                self.alerts_table.commit(
-                    rolled, snapshot_id=sid,
-                    partition_cols=[],
-                )
-                acts = render_actions(rolled, cfg.alerts, cfg.actions)
-                if acts is not None:
-                    self.actions_table.commit(
-                        acts, snapshot_id=sid,
-                        partition_cols=[],
-                    )
-                rolled.unpersist()
-            if self.collect_metrics:
-                # A5 gauges at the micro-batch commit boundary — same
-                # zero-job JMX snapshot as the batch group boundary
-                self._snapshot_gauges(sid)
-        finally:
-            cached.unpersist()
+        self._process_group(gdf, sid, sid, None)
 
     def run_available_now(self, input_path: str, max_files_per_trigger: int | None = None):
         """Drain the input directory and stop (micro-batch mode)."""

@@ -1,6 +1,6 @@
 """Parse-stage goldens — every literal line from the reference's unit tests
-(lib/syslog/parser_test.go, buffer_test.go) must round-trip exactly, on both
-the pandas-UDF path and the JVM-native path."""
+(lib/syslog/parser_test.go, buffer_test.go) must round-trip exactly through
+the pandas-UDF parse."""
 
 import datetime
 
@@ -9,27 +9,22 @@ import pytest
 from pyspark.sql import functions as F
 
 from punt_spark.fixtures import GOLDEN_AUDIT, GOLDEN_MULTILINE, GOLDEN_SIMPLE
-from punt_spark.parse import (
-    parse_rfc3164_batch,
-    split_errors,
-    with_parsed,
-    with_parsed_native,
-)
+from punt_spark.parse import parse_rfc3164_batch, split_errors, with_parsed
 
 YEAR = 2017
 
 
-def _parse_one(spark, line, native=False):
+def _parse_one(spark, line, parse):
     df = spark.createDataFrame([(line,)], "text string")
-    fn = with_parsed_native if native else with_parsed
-    return fn(df, "text", YEAR).select("parsed.*").collect()[0]
+    return parse(df, "text", YEAR).select("parsed.*").collect()[0]
 
 
-@pytest.mark.parametrize("native", [False, True], ids=["pandas_udf", "jvm_native"])
+# One parse path; the id keeps the goldens' test names stable.
+@pytest.mark.parametrize("parse", [with_parsed], ids=["pandas_udf"])
 class TestGoldens:
-    def test_simple(self, spark, native):
+    def test_simple(self, spark, parse):
         # parser_test.go:9-17
-        r = _parse_one(spark, GOLDEN_SIMPLE, native)
+        r = _parse_one(spark, GOLDEN_SIMPLE, parse)
         assert r.priority == 190
         assert r.hostname == "test-hostname-with-stuff-1-32"
         assert r.tag == "my-application"
@@ -38,43 +33,43 @@ class TestGoldens:
         assert r.ts == datetime.datetime(YEAR, 2, 22, 4, 23, 32)
         assert r.error is None
 
-    def test_multiline(self, spark, native):
+    def test_multiline(self, spark, parse):
         # parser_test.go:19-25 — multi-line content preserved
-        r = _parse_one(spark, GOLDEN_MULTILINE, native)
+        r = _parse_one(spark, GOLDEN_MULTILINE, parse)
         assert r.priority == 34
         assert r.hostname == "mymachine"
         assert r.tag == "su"
         assert r.content == "'su root' failed for lonvick\non /dev/pts/8"
         assert r.error is None
 
-    def test_audit(self, spark, native):
+    def test_audit(self, spark, parse):
         # buffer_test.go:50-59 payload
-        r = _parse_one(spark, GOLDEN_AUDIT, native)
+        r = _parse_one(spark, GOLDEN_AUDIT, parse)
         assert r.priority == 133
         assert r.hostname == "example-host-prod-1-1"
         assert r.tag == "audit"
         assert r.content == "type=SYSCALL msg=audit(1489465219.995:1699): test"
 
-    def test_pid_extraction(self, spark, native):
-        r = _parse_one(spark, "<13>Jan 02 03:04:05 host mytag[4242]: hello", native)
+    def test_pid_extraction(self, spark, parse):
+        r = _parse_one(spark, "<13>Jan 02 03:04:05 host mytag[4242]: hello", parse)
         assert r.tag == "mytag"
         assert r.pid == 4242
         assert r.content == "hello"
 
-    def test_space_padded_day(self, spark, native):
+    def test_space_padded_day(self, spark, parse):
         # second reference layout "Jan  2 15:04:05" (parser.go:20)
-        r = _parse_one(spark, "<13>Jan  2 03:04:05 host t: x", native)
+        r = _parse_one(spark, "<13>Jan  2 03:04:05 host t: x", parse)
         assert r.ts == datetime.datetime(YEAR, 1, 2, 3, 4, 5)
 
-    def test_invalid_message(self, spark, native):
-        r = _parse_one(spark, "not a syslog line at all", native)
+    def test_invalid_message(self, spark, parse):
+        r = _parse_one(spark, "not a syslog line at all", parse)
         assert r.error == "Invalid Message"
         assert r.priority is None
 
-    def test_invalid_timestamp(self, spark, native):
+    def test_invalid_timestamp(self, spark, parse):
         # "Xyz" matches the regex month shape [A-Z][a-z][a-z]; the failure
         # surfaces at time parse, as in Go (parser.go:69-88)
-        r = _parse_one(spark, "<13>Xyz 99 99:99:99 host t: x", native)
+        r = _parse_one(spark, "<13>Xyz 99 99:99:99 host t: x", parse)
         assert r.error == "Invalid Timestamp"
 
 
@@ -84,26 +79,6 @@ def test_bad_calendar_date_is_invalid_timestamp(spark):
     df = spark.createDataFrame([("<13>Feb 30 01:02:03 host t: x",)], "text string")
     r = with_parsed(df, "text", YEAR).select("parsed.*").collect()[0]
     assert r.error == "Invalid Timestamp"
-
-
-def test_native_matches_udf(spark, transcripts):
-    """The JVM-native parse must be row-for-row identical to the pandas UDF
-    over the full mixed fixture corpus (plain/JSON/malformed/multiline)."""
-    a = (
-        with_parsed(transcripts, "text", YEAR)
-        .select("conv_id", "turn_idx", "parsed.*")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    b = (
-        with_parsed_native(transcripts, "text", YEAR)
-        .select("conv_id", "turn_idx", "parsed.*")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
 
 
 def test_split_errors_partition(spark, transcripts):

@@ -9,6 +9,7 @@ Pins the BASELINE.json north_rule equivalence criteria:
 """
 
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -19,6 +20,7 @@ from punt_spark.config import default_config
 from punt_spark.fixtures import lookup_role_pdf, lookup_tool_pdf
 from punt_spark.pipeline import Pipeline, load_lookups
 from punt_spark.reference_impl import run_reference
+from punt_spark.sink import SnapshotTable
 
 
 def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -54,19 +56,9 @@ def _compare(spark_pdf: pd.DataFrame, oracle_rows: list[dict], sort_keys, ctx=""
     pd.testing.assert_frame_equal(a, b, check_dtype=False, obj=ctx)
 
 
-@pytest.fixture(scope="module")
-def run(spark, fixtures_dir, transcripts, tmp_path_factory):
-    """One pipeline run + one oracle run over the same fixtures."""
-    out_dir = str(tmp_path_factory.mktemp("pipeline_out"))
-    cfg = default_config()
-    pipe = Pipeline(
-        spark,
-        cfg,
-        out_dir=out_dir,
-        lookups=load_lookups(spark, fixtures_dir),
-    )
-    result = pipe.run(transcripts)
-
+def reference_oracle(transcripts, cfg) -> dict:
+    """The pure-Python reference run over ``transcripts`` with the fixture
+    lookup dims."""
     rows = transcripts.toPandas()
     rows["ts"] = rows["ts"].astype("datetime64[us]")
     lookups = {
@@ -79,8 +71,22 @@ def run(spark, fixtures_dir, transcripts, tmp_path_factory):
             for _, r in lookup_role_pdf().iterrows()
         },
     }
-    oracle = run_reference(rows.to_dict("records"), cfg, lookups)
-    return pipe, result, oracle, cfg
+    return run_reference(rows.to_dict("records"), cfg, lookups)
+
+
+@pytest.fixture(scope="module")
+def run(spark, fixtures_dir, transcripts, tmp_path_factory):
+    """One pipeline run + one oracle run over the same fixtures."""
+    out_dir = str(tmp_path_factory.mktemp("pipeline_out"))
+    cfg = default_config()
+    pipe = Pipeline(
+        spark,
+        cfg,
+        out_dir=out_dir,
+        lookups=load_lookups(spark, fixtures_dir),
+    )
+    result = pipe.run(transcripts)
+    return pipe, result, reference_oracle(transcripts, cfg), cfg
 
 
 def test_sink_row_equality(spark, run):
@@ -310,16 +316,34 @@ def test_turn_ordering_invariant(spark, run):
     pd.testing.assert_frame_equal(got_pdf, want_pdf, check_dtype=False)
 
 
-def test_resume_skips_committed_chunks(spark, fixtures_dir, transcripts, tmp_path):
+def test_resume_skips_committed_chunks(
+    spark, fixtures_dir, transcripts, tmp_path, monkeypatch
+):
     """Exactly-once: a killed run resumes from the last committed chunk
-    without reprocessing or duplicating rows."""
+    without reprocessing or duplicating rows. The crash is injected into
+    the group's second sink commit, while the other sinks are committing
+    concurrently."""
     out_dir = str(tmp_path / "resume_out")
     cfg = default_config()
     lookups = load_lookups(spark, fixtures_dir)
 
+    orig = SnapshotTable.commit_batch
+    lock = threading.Lock()
+    calls = [0]
+
+    def crashing_commit_batch(self, *args, **kwargs):
+        with lock:
+            calls[0] += 1
+            n = calls[0]
+        if n == 2:
+            raise RuntimeError("simulated crash in the second sink commit")
+        return orig(self, *args, **kwargs)
+
     pipe1 = Pipeline(spark, cfg, out_dir=out_dir, lookups=lookups)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        pipe1.run(transcripts, fail_after_first_sink=True)
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotTable, "commit_batch", crashing_commit_batch)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pipe1.run(transcripts)
     # crash mid-chunk: no chunk marker was written
     assert not any(
         f.endswith(".json") for f in os.listdir(os.path.join(out_dir, "_chunks"))

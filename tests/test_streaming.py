@@ -2,12 +2,16 @@
 as the batch pipeline, and the checkpoint prevents reprocessing."""
 
 import os
+import threading
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from test_pipeline import _compare, reference_oracle
 
 from punt_spark.config import default_config
 from punt_spark.pipeline import Pipeline, load_lookups
+from punt_spark.sink import SnapshotTable
 from punt_spark.streaming import StreamingPipeline, streaming_alert_counts
 
 
@@ -15,6 +19,15 @@ from punt_spark.streaming import StreamingPipeline, streaming_alert_counts
 def stream_input(spark, transcripts, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("stream_in"))
     transcripts.write.mode("overwrite").parquet(d)
+    return d
+
+
+@pytest.fixture(scope="module")
+def multi_file_input(spark, transcripts, tmp_path_factory):
+    """The transcripts as six part files, so a ``max_files_per_trigger=2``
+    drain runs three micro-batches."""
+    d = str(tmp_path_factory.mktemp("stream_in_6"))
+    transcripts.repartition(6, "conv_id").write.mode("overwrite").parquet(d)
     return d
 
 
@@ -60,7 +73,7 @@ def test_streaming_matches_batch_counts(spark, fixtures_dir, transcripts, stream
 
 
 def test_streaming_metrics_match_batch(
-    spark, fixtures_dir, transcripts, stream_input, tmp_path
+    spark, fixtures_dir, transcripts, multi_file_input, tmp_path
 ):
     """Batch/streaming metrics parity: the same counter set (received /
     processed / failed / inserted / parse_errors, per tag) accumulates to
@@ -80,7 +93,10 @@ def test_streaming_metrics_match_batch(
         collect_metrics=True,
     )
     # several micro-batches, so cross-batch accumulation is exercised
-    s.run_available_now(stream_input, max_files_per_trigger=2)
+    s.run_available_now(multi_file_input, max_files_per_trigger=2)
+    assert {
+        r["chunk"] for r in s.metrics.rows if r["metric"] == "msgs.inserted"
+    } == {f"batch-{i:08d}" for i in range(3)}
 
     def totals(m):
         out = {}
@@ -105,10 +121,10 @@ def test_streaming_metrics_match_batch(
     assert os.path.exists(os.path.join(str(tmp_path / "s"), "metrics.parquet"))
 
 
-def test_streaming_framing_and_native_parse(spark, tmp_path):
-    """The batch pipeline's frame_mode / use_native_parse knobs work in
-    the streaming foreachBatch body too: a framed blob explodes into
-    per-record rows with record_idx, parsed JVM-side."""
+def test_streaming_framing(spark, tmp_path):
+    """The batch pipeline's frame_mode knob works in the streaming
+    foreachBatch body too: a framed blob explodes into per-record rows
+    with record_idx."""
     import pandas as pd
 
     line1 = "<13>Mar 14 04:00:00 h1 logs: first record"
@@ -132,7 +148,6 @@ def test_streaming_framing_and_native_parse(spark, tmp_path):
         default_config(),
         out_dir=str(tmp_path / "framed_out"),
         frame_mode="newline",
-        use_native_parse=True,
         collect_metrics=True,
     )
     s.run_available_now(src)
@@ -149,6 +164,70 @@ def test_streaming_framing_and_native_parse(spark, tmp_path):
     }
     assert got[("msgs.received", "logs")] == 2
     assert got[("msgs.inserted", "sink_logs")] == 2
+
+
+@pytest.mark.parametrize(
+    "crash", ["second_sink_commit", "after_actions_commit"]
+)
+def test_streaming_exactly_once_under_faults(
+    spark, fixtures_dir, transcripts, multi_file_input, tmp_path, monkeypatch,
+    crash,
+):
+    """A drain that crashes inside its second micro-batch — in a sink
+    commit while the other sinks commit concurrently, or after every
+    write of the batch but before the checkpoint commit — and is restarted
+    on the same dirs loses no row and doubles none: every sink equals the
+    reference row for row, and the manifest lineage accounts for exactly
+    the rows that read back."""
+    cfg = default_config()
+    lookups = load_lookups(spark, fixtures_dir)
+    out = str(tmp_path / "out")
+    crash_sid = "batch-00000001"
+    orig = SnapshotTable.commit
+    lock = threading.Lock()
+    calls = [0]
+
+    def crashing_commit(self, df, snapshot_id, *args, **kwargs):
+        if snapshot_id != crash_sid:
+            return orig(self, df, snapshot_id, *args, **kwargs)
+        with lock:
+            calls[0] += 1
+            n = calls[0]
+        # the batch's first five commits are its concurrent sink commits
+        if crash == "second_sink_commit" and n == 2:
+            raise RuntimeError("simulated crash in a sink commit")
+        man = orig(self, df, snapshot_id, *args, **kwargs)
+        if crash == "after_actions_commit" and self is actions_table:
+            raise RuntimeError("simulated crash before the checkpoint commit")
+        return man
+
+    s1 = StreamingPipeline(
+        spark, cfg, out_dir=out, lookups=lookups, collect_metrics=True
+    )
+    actions_table = s1.actions_table
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotTable, "commit", crashing_commit)
+        with pytest.raises(Exception, match="simulated crash"):
+            s1.run_available_now(multi_file_input, max_files_per_trigger=2)
+    assert s1.sinks["sink_logs"].has_snapshot("batch-00000000")
+
+    s2 = StreamingPipeline(
+        spark, cfg, out_dir=out, lookups=lookups, collect_metrics=True
+    )
+    s2.run_available_now(multi_file_input, max_files_per_trigger=2)
+    assert s2.sinks["sink_logs"].has_snapshot("batch-00000002")
+
+    oracle = reference_oracle(transcripts, cfg)
+    for t in cfg.types.values():
+        sink = s2.sinks[t.sink_name]
+        sdf = sink.read(spark)
+        got = sdf.toPandas() if sdf is not None else pd.DataFrame()
+        _compare(
+            got, oracle["sinks"][t.sink_name], ["conv_id", "turn_idx"],
+            ctx=t.sink_name,
+        )
+        lin = sink.lineage()
+        assert sum(s["n_rows"] for s in lin.values()) == len(got), t.sink_name
 
 
 def test_streaming_alert_window(spark, stream_input, tmp_path):

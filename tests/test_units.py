@@ -861,9 +861,9 @@ def test_unpack_payload_cannot_shadow_meta_columns(spark):
 
 
 def test_parse_out_of_int32_priority_and_pid_tag_not_crash(spark):
-    """An out-of-int32 priority or pid must tag the row invalid (matching
-    the JVM-native twin) — not kill the task at Arrow conversion."""
-    from punt_spark.parse import with_parsed, with_parsed_native
+    """An out-of-int32 priority or pid must tag the row invalid — not kill
+    the task at Arrow conversion."""
+    from punt_spark.parse import with_parsed
 
     rows = [
         ("c1", 0, "<99999999999>Mar 14 04:20:19 host tag: x"),
@@ -877,13 +877,6 @@ def test_parse_out_of_int32_priority_and_pid_tag_not_crash(spark):
             "conv_id", "parse_ok", "parsed"
         ).collect()
     }
-    nat_rows = {
-        r["conv_id"]: (r["parse_ok"], r["parsed"]["error"])
-        for r in with_parsed_native(df, "text", 2017).select(
-            "conv_id", "parse_ok", "parsed"
-        ).collect()
-    }
-    assert udf_rows == nat_rows  # pinned parity
     assert udf_rows["c1"] == (False, "Invalid Priority")
     assert udf_rows["c2"] == (False, "Invalid PID")
     assert udf_rows["c3"][0] is True
@@ -929,3 +922,21 @@ def test_route_empty_registry_all_unhandled(spark):
     routed, unhandled = route(df, routes)
     assert routed.count() == 0
     assert unhandled.count() == 1
+
+
+def test_perfbench_tracer_install_roundtrip():
+    """The benchmark's traced run wraps pipeline layers by module attribute
+    name (perfbench/trace.py): a refactor that moves one of those names
+    must fail here, not as an AttributeError deep in a traced run."""
+    import punt_spark.pipeline as pipeline
+    import punt_spark.streaming as streaming
+    from perfbench.trace import Tracer
+
+    before = (pipeline.with_parsed, streaming.route)
+    tracer = Tracer("t")
+    tracer.install()
+    try:
+        assert pipeline.with_parsed is not before[0]
+    finally:
+        tracer.uninstall()
+    assert (pipeline.with_parsed, streaming.route) == before
