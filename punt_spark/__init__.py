@@ -14,7 +14,7 @@ re-expresses the same semantics as set-oriented DataFrame transforms:
 * statsd counters              → per-stage/per-partition metric tables (metrics.py)
 * alert rollup windows         → tumbling window aggregation (alerts.py)
 * live tail                    → filter + sample query helpers (tail.py)
-* index GC / retention         → keep-N partition expiry (retention.py)
+* index GC / retention         → keep-N partition expiry (sink.expire_by_config)
 
 Everything is pyspark.sql DataFrame API — no RDDs, no per-row Python UDFs.
 """

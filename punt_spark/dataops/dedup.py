@@ -891,11 +891,11 @@ def dup_clusters(
     Small-graph fast path: after the pair set is checkpointed, a
     ``limit(small_graph_edges + 1)`` probe (cheap at any scale — it stops
     reading at the threshold) decides whether the whole edge set fits the
-    bound; if so the components are computed driver-side with union-find
-    in one pass — identical (id, min-id) labels, zero per-round Spark
-    jobs. Near-dup edge sets are O(duplicates), not O(corpus), so this
-    is the common case even for large corpora; past the bound the
-    distributed loop runs unchanged. ``small_graph_edges=0`` disables
+    bound; if so, and no id is NULL, the components are computed
+    driver-side with union-find in one pass — identical (id, min-id)
+    labels, zero per-round Spark jobs. Near-dup edge sets are
+    O(duplicates), not O(corpus), so this is the common case even for
+    large corpora; past the bound the distributed loop runs unchanged. ``small_graph_edges=0`` disables
     the fast path (used by tests to pin the two paths equal).
     """
     sc = pairs.sparkSession.sparkContext
@@ -982,7 +982,9 @@ def _dup_clusters_loop(
     )
     if small_graph_edges > 0:
         probe = half.limit(small_graph_edges + 1).collect()
-        if len(probe) <= small_graph_edges:
+        # a NULL id has no order for Python's min(); the loop handles it
+        nulls = any(r.src is None or r.dst is None for r in probe)
+        if len(probe) <= small_graph_edges and not nulls:
             return _dup_clusters_local(
                 pairs.sparkSession, probe, half.schema["src"].dataType
             )

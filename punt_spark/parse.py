@@ -220,13 +220,3 @@ def with_parsed(df: DataFrame, text_col: str = "text", year: int = 2017) -> Data
         "parse_ok", F.col("parsed.error").isNull()
     )
 
-
-def split_errors(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split a parsed frame into (good, errors). The errors side output is a
-    complete table — the reference's lossy non-blocking error channel
-    (server.go:161-168) upgraded to exact accounting."""
-    good = df.filter(F.col("parse_ok"))
-    errors = df.filter(~F.col("parse_ok")).select(
-        F.col("text").alias("data"), F.col("parsed.error").alias("error")
-    )
-    return good, errors

@@ -13,11 +13,11 @@ exactly-once via the streaming checkpoint + idempotent snapshot ids).
 boundary is just a trigger choice: each micro-batch runs the same group
 body as a batch group (``MetricsPlumbing._process_group`` in pipeline.py).
 
-Alerts in the daemon use that body's ``rollup_all`` per micro-batch, like
-batch (windows straddling a micro-batch boundary roll up per batch).
-``streaming_alert_counts`` (event-time tumbling windows with a watermark,
-late rows dropped) and ``stateful_alert_windows`` are separate helpers over
-a streaming frame.
+Alerts in the daemon use that body's ``rollup_all`` per micro-batch: the
+epoch-aligned tumbling windows of batch and the ``reference_impl`` oracle,
+so a window straddling a micro-batch boundary rolls up once per batch
+(alerts.py records why the reference's arrival-anchored windows are not
+reproduced).
 """
 
 from __future__ import annotations
@@ -25,7 +25,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .config import PipelineConfig
 from .pipeline import MetricsPlumbing
@@ -218,96 +217,6 @@ def live_tail(
     else:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stateful_alert_windows(
-    stream: DataFrame,
-    match: str,
-    window_sec: int = 2,
-    source_field: str = "text",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """EVENT-ALIGNED alert rollup windows via a custom stateful operator —
-    the reference's exact window semantics (alert.go:50-65: the FIRST
-    matching event opens the window; everything arriving within
-    rollup_window seconds piles in; then the window fires once), which
-    epoch-aligned ``F.window`` tumbling cannot express.
-
-    Implemented with ``applyInPandasWithState`` keyed by a constant alert
-    key: state = (open window start, count); a window is emitted as soon as
-    an event lands beyond its end. The trailing open window stays in state
-    until a later event closes it (a processing-time timeout would also
-    close it on a live stream, but a timeout keeps an AvailableNow drain
-    alive indefinitely — so flush-by-successor only). Demo-scale note: the
-    constant grouping key serializes this operator on one task — per
-    north_star there is one window state per alert (a handful), so this
-    matches the reference's one-goroutine-per-alert structure; it is not a
-    data-parallel path.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    matched = stream.filter(F.col(source_field).rlike(match)).select(
-        F.lit("alert").alias("k"), F.col(ts_col).alias("ts")
-    )
-
-    out_schema = "window_start timestamp, n_events int"
-    state_schema = "start long, n int"
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd  # noqa: F811
-
-        rows = []
-        start, n = state.get if state.exists else (None, 0)
-        # nanosecond event times: truncating to whole seconds changed
-        # window membership near boundaries (events 1.2 s apart could
-        # truncate to 0 and 2 and split a 2 s window the reference's
-        # first-event-anchored semantics would keep together)
-        window_ns = int(window_sec * 1_000_000_000)
-        events = []
-        for pdf in pdfs:
-            events.extend(int(t.value) for t in pd.to_datetime(pdf["ts"]))
-        for t in sorted(events):
-            if start is None:
-                start, n = t, 1
-            elif t < start + window_ns:
-                n += 1
-            else:
-                rows.append((pd.Timestamp(start, unit="ns"), n))
-                start, n = t, 1
-        if start is not None:
-            state.update((start, n))
-        yield pd.DataFrame(rows, columns=["window_start", "n_events"])
-
-    return matched.groupBy("k").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_alert_counts(
-    stream: DataFrame,
-    match: str,
-    window_sec: int = 2,
-    watermark: str = "10 seconds",
-    source_field: str = "text",
-) -> DataFrame:
-    """Watermarked tumbling-window alert rollup over a streaming frame —
-    the streaming analog of alerts.rollup (A4). Late rows beyond the
-    watermark are dropped."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .filter(F.col(source_field).rlike(match))
-        .groupBy(F.window("ts", f"{window_sec} seconds").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            F.col("n_events"),
-        )
-    )
 
 
 def dedup_stream(

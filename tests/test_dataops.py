@@ -1,4 +1,4 @@
-"""Dataops: dedup / similarity / textstats / multimodal, each pinned
+"""Dataops: dedup / similarity / textstats / sampling / curation, each pinned
 against a small pure-Python/numpy oracle."""
 
 import numpy as np
@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from punt_spark.dataops import dedup, multimodal, similarity, textstats
+from punt_spark.dataops import dedup, similarity, textstats
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -348,6 +348,14 @@ def test_dup_clusters_small_graph_path_matches_distributed(spark):
     # empty edge set → empty frame, same schema, no crash
     empty = pairs.filter("id_a < 0")
     assert dedup.dup_clusters(empty).count() == 0
+    # a NULL id in a component: same labels as the loop, no TypeError
+    nulls = spark.createDataFrame([(1, 2), (None, 5), (5, 6)], "id_a long, id_b long")
+    fast = {(r["id"], r["cluster_id"]) for r in dedup.dup_clusters(nulls).collect()}
+    dist = {
+        (r["id"], r["cluster_id"])
+        for r in dedup.dup_clusters(nulls, small_graph_edges=0).collect()
+    }
+    assert fast == dist == {(1, 1), (2, 1), (5, 5), (6, 5), (None, None)}
 
 
 def test_dup_clusters_reliable_checkpoint(spark, tmp_path):
@@ -1012,178 +1020,6 @@ def test_rolling_fingerprints(docs):
     row0 = out[out.doc_id == 0].iloc[0]
     n_tokens = len(DOCS[0][1].split())
     assert len(row0["rolling_fp"]) == n_tokens - 3
-
-
-# --- multimodal ------------------------------------------------------------------------
-
-
-def test_multimodal_features(spark):
-    media = multimodal.synth_media_df(spark, n=30)
-    feats = multimodal.extract_features(media, dim=16).toPandas()
-    assert len(feats) == 30
-    assert feats["decode_ok"].all()
-    assert all(len(v) == 16 for v in feats["feat"])
-    # deterministic: same payload → same vector across runs
-    feats2 = multimodal.extract_features(media, dim=16).toPandas()
-    a = feats.sort_values("media_id")["feat"].tolist()
-    b = feats2.sort_values("media_id")["feat"].tolist()
-    assert all(np.allclose(x, y) for x, y in zip(a, b))
-
-
-def test_multimodal_resize_and_frames(spark):
-    media = multimodal.synth_media_df(spark, n=30)
-    thumbs = multimodal.resize_images(media, max_side=32).toPandas()
-    n_images = media.filter(F.col("kind") == "image").count()
-    assert len(thumbs) == n_images
-    assert (thumbs[["thumb_w", "thumb_h"]].max(axis=1) <= 32).all()
-
-    frames = multimodal.sample_frames(media, every_ms=1000, max_frames=4).toPandas()
-    vids = media.filter(F.col("kind") == "video").toPandas()
-    expect = sum(min(4, max(1, d // 1000)) for d in vids["duration_ms"])
-    assert len(frames) == expect
-
-
-def test_bmp_codec_roundtrip():
-    rng = np.random.default_rng(7)
-    for h, w in [(1, 1), (5, 3), (16, 16), (7, 33)]:  # odd widths hit row padding
-        arr = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert np.array_equal(multimodal.bmp_decode(multimodal.bmp_encode(arr)), arr)
-
-
-def test_wav_codec_roundtrip():
-    rate = 8000
-    t = np.arange(rate // 4) / rate
-    x = 0.5 * np.sin(2 * np.pi * 440 * t)
-    got, got_rate = multimodal.wav_decode(multimodal.wav_encode(x, rate))
-    assert got_rate == rate
-    assert len(got) == len(x)
-    assert np.allclose(got, x, atol=1e-3)  # 16-bit quantization
-
-
-def test_multimodal_real_decode(spark):
-    media = multimodal.synth_real_media_df(spark, n=24)
-    feats = multimodal.extract_features(media, dim=16, decode_mode="real").toPandas()
-    by_kind = feats.groupby("kind")["decode_ok"].all()
-    # all three kinds decode pixel/sample-domain: WAV, BMP/JPEG images
-    # (fixture alternates formats), AVI whose frames the numpy JPEG
-    # codec decodes to pixels
-    assert by_kind["audio"] and by_kind["image"] and by_kind["video"]
-    ok = feats[feats["decode_ok"]]
-    assert all(len(v) == 16 for v in ok["feat"])
-    assert all(abs(np.linalg.norm(v) - 1.0) < 1e-5 for v in ok["feat"])
-    # pixel-domain video features: different brightness ramps → the two
-    # videos' luma histograms actually differ (a byte histogram over
-    # near-identical container bytes would not be pinned to pixels)
-    vids = ok[ok["kind"] == "video"].sort_values("media_id")["feat"].tolist()
-    assert len(vids) >= 2
-    assert not np.allclose(vids[0], vids[1])
-
-
-def test_frame_pixel_stats(spark):
-    """sample_frames → frame_pixel_stats: the numpy JPEG decoder turns
-    sampled MJPEG frames into real pixel statistics; the fixture's
-    brightness ramp across frames must show up in mean_luma."""
-    media = multimodal.synth_real_media_df(spark, n=24)
-    frames = multimodal.sample_frames(
-        media, every_ms=100, max_frames=8, decode_mode="real"
-    )
-    stats = multimodal.frame_pixel_stats(frames).toPandas()
-    assert stats["decode_ok"].all()
-    assert (stats["width"] == 16).all() and (stats["height"] == 16).all()
-    assert stats["mean_luma"].between(0, 255).all()
-    ramped = 0
-    for _mid, g in stats.groupby("media_id"):
-        g = g.sort_values("frame_idx")
-        if len(g) >= 3 and g["mean_luma"].is_monotonic_increasing:
-            ramped += 1
-    # the fixture ramps base brightness with frame index (mod 200), so
-    # most videos' sampled prefix is monotone in mean luma
-    assert ramped >= 1
-    # corrupt frame → per-row error, not a job abort
-    bad = frames.limit(1).withColumn(
-        "frame", F.lit(bytearray(b"\xff\xd8 not a real jpeg"))
-    )
-    bstats = multimodal.frame_pixel_stats(bad).toPandas()
-    assert not bstats["decode_ok"].any()
-    assert bstats["decode_error"].notna().all()
-
-
-def test_avi_walker_roundtrip():
-    rng = np.random.default_rng(11)
-    frames = [b"\xff\xd8" + rng.bytes(k) + b"\xff\xd9" for k in (10, 33, 7, 20)]
-    us, got = multimodal.avi_walk(multimodal.avi_encode(frames, 50_000))
-    assert us == 50_000
-    assert got == frames  # odd-sized chunks hit the RIFF pad byte
-    with pytest.raises(ValueError, match="RIFF/AVI magic"):
-        multimodal.avi_walk(b"garbage bytes here")
-
-
-def test_video_feature_zero_frames():
-    """A structurally valid AVI with zero movi frames takes the clean
-    per-row decode error path (avi_walk's own message), never an opaque
-    numpy crash from an empty concatenate."""
-    with pytest.raises(ValueError, match="no video frame chunks"):
-        multimodal._video_feature(multimodal.avi_encode([]), dim=8)
-
-
-def test_multimodal_real_frame_sampling(spark):
-    """sample_frames(decode_mode='real'): the planted MJPEG-AVI fixture
-    returns the planted frame count and container-derived timestamps."""
-    media = multimodal.synth_real_media_df(spark, n=24)
-    frames = multimodal.sample_frames(
-        media, every_ms=200, max_frames=4, decode_mode="real"
-    ).toPandas()
-    assert frames["decode_ok"].all()
-    vids = media.filter(F.col("kind") == "video").toPandas()
-    # fixture is 10 fps (100 ms/frame) → every_ms=200 samples every 2nd
-    # frame; n_frames from duration; capped at 4
-    for _, v in vids.iterrows():
-        n_frames = v["duration_ms"] // 100
-        expect = min(4, (n_frames + 1) // 2)
-        got = frames[frames["media_id"] == v["media_id"]]
-        assert len(got) == expect, v["media_id"]
-        assert got["frame_idx"].tolist() == [2 * i for i in range(expect)]
-        assert got["frame_ts_ms"].tolist() == [200 * i for i in range(expect)]
-        # frames are the actual on-disk JPEG chunk bytes
-        assert all(
-            bytes(f)[:2] == b"\xff\xd8" and bytes(f)[-2:] == b"\xff\xd9"
-            for f in got["frame"]
-        )
-
-
-def test_multimodal_real_resize(spark):
-    media = multimodal.synth_real_media_df(spark, n=24)
-    thumbs = multimodal.resize_images(media, max_side=16, decode_mode="real").toPandas()
-    assert len(thumbs) == media.filter(F.col("kind") == "image").count()
-    assert thumbs["decode_ok"].all()
-    assert (thumbs[["thumb_w", "thumb_h"]].max(axis=1) <= 16).all()
-    # thumbnails decode in the SAME format as their source (the fixture
-    # rotates BMP / JPEG / PNG images) with the recorded dimensions
-    formats = set()
-    for _, r in thumbs.iterrows():
-        raw = bytes(r["thumb"])
-        if raw[:2] == b"\xff\xd8":
-            formats.add("jpeg")
-        elif raw[:8] == b"\x89PNG\r\n\x1a\n":
-            formats.add("png")
-        else:
-            formats.add("bmp")
-        arr = multimodal.image_decode(raw)
-        assert arr.shape == (r["thumb_h"], r["thumb_w"], 3)
-    assert formats == {"bmp", "jpeg", "png"}
-
-
-def test_multimodal_real_mode_opaque_payloads(spark):
-    # opaque random bytes: every row records a decode error, nothing raises
-    media = multimodal.synth_media_df(spark, n=6)
-    feats = multimodal.extract_features(media, decode_mode="real").toPandas()
-    assert (~feats["decode_ok"]).all()
-    assert feats["decode_error"].notna().all()
-    # non-AVI payloads take the per-row error path in real frame sampling
-    frames = multimodal.sample_frames(media, decode_mode="real").toPandas()
-    assert len(frames) == media.filter(F.col("kind") == "video").count()
-    assert (~frames["decode_ok"]).all()
-    assert frames["decode_error"].str.contains("RIFF/AVI").all()
 
 
 # --- corpus curation (composed pipeline) -------------------------------------------------

@@ -6,10 +6,9 @@ import datetime
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from punt_spark.fixtures import GOLDEN_AUDIT, GOLDEN_MULTILINE, GOLDEN_SIMPLE
-from punt_spark.parse import parse_rfc3164_batch, split_errors, with_parsed
+from punt_spark.parse import parse_rfc3164_batch, with_parsed
 
 YEAR = 2017
 
@@ -79,15 +78,6 @@ def test_bad_calendar_date_is_invalid_timestamp(spark):
     df = spark.createDataFrame([("<13>Feb 30 01:02:03 host t: x",)], "text string")
     r = with_parsed(df, "text", YEAR).select("parsed.*").collect()[0]
     assert r.error == "Invalid Timestamp"
-
-
-def test_split_errors_partition(spark, transcripts):
-    """Parse is total: every row lands in exactly one of good/errors."""
-    parsed = with_parsed(transcripts, "text", YEAR)
-    good, errors = split_errors(parsed)
-    n = transcripts.count()
-    assert good.count() + errors.count() == n
-    assert errors.filter(F.col("error").isNull()).count() == 0
 
 
 def test_batch_matches_pandas_oracle(transcripts):

@@ -235,7 +235,7 @@ def test_inserted_counts(run):
         assert per_sink.get(t.sink_name, 0) == len(oracle["sinks"][t.sink_name])
 
 
-def test_errors_side_output(spark, run):
+def test_errors_side_output(spark, run, transcripts):
     pipe, result, oracle, cfg = run
     edf = pipe.errors_table.read(spark)
     got = (
@@ -245,12 +245,30 @@ def test_errors_side_output(spark, run):
     )
     want = {(e["data"], e["error"]) for e in oracle["errors"]}
     assert got == want
-    # parse is total: every input row is in exactly one of sinks/errors/
-    # (unhandled is empty — default config has a catch-all)
+    # parse is total: every input row is in exactly one of sinks /
+    # msgs.failed / errors / msgs.unhandled (empty — the default config has
+    # a catch-all), on the oracle and on the pipeline's own outputs
+    n_in = transcripts.count()
+
+    def total(counters, metric):
+        return sum(v for k, v in counters.items() if k.split("|")[0] == metric)
+
+    want_counters = oracle["counters"]
     n_sunk = sum(len(v) for v in oracle["sinks"].values())
-    n_failed = sum(
-        v for k, v in oracle["counters"].items() if k.startswith("msgs.failed")
+    assert total(want_counters, "msgs.unhandled") == 0
+    assert (
+        n_sunk
+        + total(want_counters, "msgs.failed")
+        + len(oracle["errors"])
+        + total(want_counters, "msgs.unhandled")
+        == n_in
     )
+
+    sunk = [pipe.sinks[t.sink_name].read(spark) for t in cfg.types.values()]
+    n_sunk = sum(df.count() for df in sunk if df is not None)
+    n_errors = edf.count() if edf is not None else 0
+    n_failed = sum(r["value"] for r in pipe.metrics.rows if r["metric"] == "msgs.failed")
+    assert n_sunk + n_errors + n_failed == n_in
 
 
 def test_alerts_rollup(spark, run):

@@ -12,7 +12,7 @@ from test_pipeline import _compare, reference_oracle
 from punt_spark.config import default_config
 from punt_spark.pipeline import Pipeline, load_lookups
 from punt_spark.sink import SnapshotTable
-from punt_spark.streaming import StreamingPipeline, streaming_alert_counts
+from punt_spark.streaming import StreamingPipeline
 
 
 @pytest.fixture(scope="module")
@@ -230,104 +230,6 @@ def test_streaming_exactly_once_under_faults(
         assert sum(s["n_rows"] for s in lin.values()) == len(got), t.sink_name
 
 
-def test_streaming_alert_window(spark, stream_input, tmp_path):
-    stream = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp"
-        ).parquet(stream_input)
-    )
-    agg = streaming_alert_counts(stream, match="magic", window_sec=2)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("alert_counts")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select sum(n_events) as n from alert_counts").collect()[0]["n"]
-    want = spark.read.parquet(stream_input).filter(F.col("text").rlike("magic")).count()
-    assert got == want
-    assert got > 0
-
-
-def test_streaming_watermark_drops_late_rows(spark, tmp_path):
-    """Late-data semantics: a row arriving in a later micro-batch with an
-    event time older than the watermark is DROPPED from the windowed alert
-    rollup (the reference has no late-data concept — documented divergence;
-    this pins ours)."""
-    import os as _os
-    import time as _time
-
-    import pandas as pd
-    from punt_spark.streaming import streaming_alert_counts
-
-    src = str(tmp_path / "late_in")
-    _os.makedirs(src)
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-
-    def write_one(fname, ts_list):
-        pdf = pd.DataFrame(
-            {
-                "conv_id": ["c"] * len(ts_list),
-                "turn_idx": range(len(ts_list)),
-                "role": ["user"] * len(ts_list),
-                "text": ["magic"] * len(ts_list),
-                "tool": ["none"] * len(ts_list),
-                "ts": pd.to_datetime(ts_list).astype("datetime64[us]"),
-            }
-        )
-        spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(src, fname)
-        )
-
-    # Spark's late-event filter applies the watermark as of the PREVIOUS
-    # batch (the 3.4+ lateEvents/eviction split), so the watermark needs
-    # one batch to take effect: batch 1 advances event time to 00:05:00,
-    # batch 2 commits watermark 00:04:50, batch 3 carries the late row.
-    write_one("b1", ["2017-01-01 00:05:00"])
-    _time.sleep(1.1)  # file source orders batches by mod time
-    write_one("b2", ["2017-01-01 00:05:04"])
-    _time.sleep(1.1)
-    write_one("b3", ["2017-01-01 00:00:00"])  # LATE: < watermark 00:04:50
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(src + "/*")
-    )
-    agg = streaming_alert_counts(
-        stream, match="magic", window_sec=2, watermark="10 seconds"
-    )
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("late_windows")
-        .option("checkpointLocation", str(tmp_path / "late_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    starts = {
-        str(r["window_start"])
-        for r in spark.sql("select * from late_windows").collect()
-    }
-    assert "2017-01-01 00:05:00" in starts  # batch-1 window present
-    assert "2017-01-01 00:05:04" in starts  # on-time batch-2 row counted
-    assert "2017-01-01 00:00:00" not in starts  # late row dropped
-    dropped = sum(
-        p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-        if p["stateOperators"]
-    )
-    assert dropped == 1
-
-
 def test_live_tail_follows_new_commits(spark, tmp_path):
     """The control-socket tail analog (control.go:80-143): a follow=True
     subscription picks up rows from commits that land AFTER the stream
@@ -480,53 +382,6 @@ def test_live_tail_sample_deterministic(spark, tmp_path):
         )
     assert counts[0] == counts[1]  # deterministic
     assert 30 <= len(counts[0]) <= 90  # ~30% of 200, generous band
-
-
-def test_stateful_event_aligned_windows(spark, tmp_path):
-    """Event-aligned windows (first match opens the window) — differs from
-    epoch-aligned tumbling when matches straddle an epoch boundary."""
-    import pandas as pd
-    from punt_spark.streaming import stateful_alert_windows
-
-    # events at t=1.0, 2.5, 10.0 with 2s windows:
-    # event-aligned → [1.0: {1.0, 2.5}], [10.0: {10.0}]
-    # (epoch tumbling would give three windows: [0,2), [2,4), [10,12))
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["c"] * 3,
-            "turn_idx": [0, 1, 2],
-            "role": ["user"] * 3,
-            "text": ["magic a", "magic b", "magic c"],
-            "tool": ["none"] * 3,
-            "ts": pd.to_datetime(
-                ["2017-01-01 00:00:01.000000", "2017-01-01 00:00:02.500000",
-                 "2017-01-01 00:00:10.000000"]
-            ).astype("datetime64[us]"),
-        }
-    )
-    src = str(tmp_path / "stateful_in")
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    ).parquet(src)
-    agg = stateful_alert_windows(stream, match="magic", window_sec=2)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stateful_windows")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (str(r["window_start"]), r["n_events"])
-        for r in spark.sql("select * from stateful_windows").collect()
-    }
-    # the completed first window must be emitted (the trailing open window
-    # stays in state until a later event closes it)
-    assert ("2017-01-01 00:00:01", 2) in got
 
 
 def test_cli_follow_attaches_to_nonempty_subset(spark, tmp_path, capsys):
@@ -695,15 +550,11 @@ def test_streaming_pipeline_ingest_dedup(spark, transcripts, tmp_path):
 
 
 def test_alert_window_straddling_micro_batch_boundary(spark, tmp_path):
-    """Pins BOTH documented alert-window semantics on one fixture whose
-    2-second rollup window straddles a micro-batch boundary:
-
-    * the foreachBatch pipeline rolls windows PER BATCH (the reference's
-      arrival-split wall-clock behavior, alert.go:50-65) — the straddling
-      window SPLITS into one row per micro-batch, total events preserved;
-    * the watermarked event-time path (``streaming_alert_counts``) merges
-      the same events into ONE window row regardless of batch boundaries.
-    """
+    """Pins the daemon's alert-window semantics on one fixture whose
+    2-second rollup window straddles a micro-batch boundary: the
+    foreachBatch pipeline rolls windows PER BATCH (the reference's
+    arrival-split wall-clock behavior, alert.go:50-65) — the straddling
+    window SPLITS into one row per micro-batch, total events preserved."""
     import os as _os
     import time as _time
 
@@ -748,32 +599,3 @@ def test_alert_window_straddling_micro_batch_boundary(spark, tmp_path):
     assert {r["n_events"] for r in alerts} == {1}
     assert len({str(r["window_start"]) for r in alerts}) == 1  # same window
     assert sum(r["n_events"] for r in alerts) == 2  # nothing lost
-
-    # event-time path over the SAME files: one merged window row
-    stream = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
-    from punt_spark.parse import with_parsed
-
-    parsed = with_parsed(stream, "text", 2017).select(
-        F.col("parsed.content").alias("content"),
-        F.col("parsed.ts").alias("ts"),
-    )
-    agg = streaming_alert_counts(
-        parsed, match="magic", window_sec=2, source_field="content"
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("straddle_merged")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    merged = spark.sql("select * from straddle_merged").collect()
-    assert len(merged) == 1 and merged[0]["n_events"] == 2

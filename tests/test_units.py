@@ -940,3 +940,40 @@ def test_perfbench_tracer_install_roundtrip():
     finally:
         tracer.uninstall()
     assert (pipeline.with_parsed, streaming.route) == before
+
+
+def test_every_module_is_reachable_from_an_entry_point():
+    """No dead modules: an ast walk of the imports from every entry point
+    (CLI, driver contract, bench, perfbench, scripts, examples) reaches
+    every ``punt_spark`` module. Starts no Spark."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    mods = {
+        ".".join(p.relative_to(root).with_suffix("").parts).removesuffix(".__init__"): p
+        for p in (root / "punt_spark").rglob("*.py")
+    }
+    todo = [root / "punt_spark" / "cli.py", root / "__spark_entry__.py", root / "bench.py"]
+    todo += [p for d in ("perfbench", "scripts", "examples") for p in (root / d).glob("*.py")]
+    seen = set()
+    while todo:
+        path = todo.pop()
+        seen.add(path)
+        pkg = path.relative_to(root).parts[:-1]  # the package relative imports start at
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = ".".join(pkg[: len(pkg) - node.level + 1]) if node.level else ""
+                base = ".".join(filter(None, [base, node.module]))
+                names = [base] + [f"{base}.{a.name}" for a in node.names]
+            else:
+                continue
+            for name in names:  # a module and every package above it
+                parts = name.split(".")
+                for i in range(1, len(parts) + 1):
+                    hit = mods.get(".".join(parts[:i]))
+                    if hit is not None and hit not in seen:
+                        todo.append(hit)
+    assert sorted(m for m, p in mods.items() if p not in seen) == []
