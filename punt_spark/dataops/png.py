@@ -1,23 +1,24 @@
 """Pure-stdlib PNG codec (RFC 2083 / ISO 15948) — zlib is in the standard
-library, so unlike JPEG no transform math is needed: chunk framing, per-
-scanline filters, and palette handling are the whole format. Completes the
-image-format triangle (BMP/JPEG/PNG) for the multimodal operators'
-sniffing decode.
+library, so no transform math is needed: chunk framing, per-scanline
+filters, and palette handling are the whole format.
+
+No entry point imports this module: its one caller, the multimodal
+operators, is deleted. It is the last module that ROADMAP item 4 still
+has to delete, with ``tests/test_png.py``.
 
 Scope:
 
 * ``png_decode``: 8-bit greyscale (type 0), RGB (2), palette (3), and
   RGBA (6) — alpha is composited over black to keep the (h, w, 3)/(h, w)
-  contract of the other decoders; all five scanline filters (None/Sub/Up/
+  contract image decoders use; all five scanline filters (None/Sub/Up/
   Average/Paeth). 16-bit depths, sub-8-bit depths, and Adam7 interlace
-  raise ``ValueError`` (the callers' per-row error path).
+  raise ``ValueError``.
 * ``png_encode``: 8-bit RGB or greyscale, Sub filter (cheap and
   effective on the gradient-ish content the fixtures use), one IDAT.
 
 The filter undo is a per-scanline loop (filters are sequentially
 dependent by construction); within a line the math is vectorized where
-the filter allows. Fine for the thumbnail/frame sizes the multimodal ops
-feed it.
+the filter allows. Fine for thumbnail-sized images.
 """
 
 from __future__ import annotations
@@ -155,7 +156,7 @@ def png_decode(payload: bytes) -> np.ndarray:
     if color_type == 2:
         return img.copy()
     # alpha (grey+alpha / RGBA): composite over black — keeps the
-    # (h, w, 3) contract of the sibling decoders
+    # (h, w, 3) RGB contract
     rgb = img[..., :1] if color_type == 4 else img[..., :3]
     if color_type == 4:
         rgb = np.repeat(rgb, 3, axis=2)

@@ -945,7 +945,8 @@ def test_perfbench_tracer_install_roundtrip():
 def test_every_module_is_reachable_from_an_entry_point():
     """No dead modules: an ast walk of the imports from every entry point
     (CLI, driver contract, bench, perfbench, scripts, examples) reaches
-    every ``punt_spark`` module. Starts no Spark."""
+    every ``punt_spark`` module but the one awaiting deletion. Starts no
+    Spark."""
     import ast
     from pathlib import Path
 
@@ -976,4 +977,6 @@ def test_every_module_is_reachable_from_an_entry_point():
                     hit = mods.get(".".join(parts[:i]))
                     if hit is not None and hit not in seen:
                         todo.append(hit)
-    assert sorted(m for m, p in mods.items() if p not in seen) == []
+    # dataops.png is still to be deleted (ROADMAP item 4); take it off this
+    # list when it goes.
+    assert sorted(m for m, p in mods.items() if p not in seen) == ["punt_spark.dataops.png"]
