@@ -14,10 +14,13 @@ list, ``data/batch=<id>/chunk=…/route_key=…/ts_day=…`` ≈ partitioned dat
 files — and the group-commit shape matches Iceberg's: ONE physical write
 can span many logical chunks (``commit_batch``), then one manifest per
 chunk is published, so a 30-day backfill is one Spark job per sink, not 30,
-while resume granularity stays per-chunk. On a real cluster the same
-interface binds to Iceberg; the sandbox has no Iceberg jars, so the
-manifest layer stands in. Every maintenance operation below is
-O(metadata), never a data rewrite.
+while resume granularity stays per-chunk. ``commit``, ``commit_batch`` and
+``compact_snapshots`` share one write-and-publish body
+(``SnapshotTable._write_snapshots``), so every manifest carries
+per-partition row counts read from the new files' parquet footers. On a
+real cluster the same interface binds to Iceberg; the sandbox has no
+Iceberg jars, so the manifest layer stands in. Retention and time travel
+are O(metadata); compaction is the one data rewrite.
 
 Partition spec per BASELINE.json north_star: ``(route_key, ts_day)`` — the
 ES ``prefix + date_format(ts)`` index naming (cluster.go:284) becomes the
@@ -31,6 +34,7 @@ import json
 import os
 import shutil
 import time
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +47,7 @@ CHUNK_COL = "chunk"
 # while resume marked their chunk committed (permanent unreported loss).
 # Distinct from every yyyy-MM-dd value and filesystem-safe.
 NULL_TS_CHUNK = "null-ts"
-_HIDDEN_COLS = ["batch", "snap", CHUNK_COL]
+_HIDDEN_COLS = ["batch", CHUNK_COL]
 
 
 def chunk_expr(ts_col: str = "ts"):
@@ -233,43 +237,78 @@ class SnapshotTable:
             n_rows += n
         return {"partition_rows": partition_rows, "n_rows": n_rows}
 
-    def commit(
+    def _write_snapshots(
         self,
         df: DataFrame,
-        snapshot_id: str,
-        partition_cols: list[str] | None = None,
-        lineage: dict | None = None,
-        footer_lineage: bool = False,
-    ) -> dict:
-        """Single-snapshot commit (side tables, streaming micro-batches,
-        tests). Idempotent: recommitting the same id replaces it atomically.
-        ``footer_lineage=True`` derives per-partition row counts from the
-        just-written parquet footers (same free lineage as
-        ``commit_batch``); an explicit ``lineage`` dict wins."""
+        batch_id: str,
+        partition_cols: list[str] | None,
+        chunks: list[str] | None = None,
+        snapshot_id: str | None = None,
+        **fields,
+    ) -> dict[str, dict]:
+        """THE snapshot write behind ``commit``, ``commit_batch`` and
+        ``compact_snapshots``: check the partition spec, write
+        ``data/batch=<batch_id>`` (atomic dir swap), list its files, read
+        their parquet footers and publish one manifest per label. With
+        ``chunks`` the files are grouped by their ``chunk=`` dir, one label
+        per chunk (absent chunks still get an empty snapshot, so resume can
+        trust manifest existence); without, the one label is
+        ``snapshot_id`` (default ``batch_id``). ``fields`` override manifest
+        entries (compaction keeps ``committed_at``).
+
+        Lineage comes FREE from the write itself: per-partition row counts
+        are read from the FOOTERS of the files just written — metadata-only
+        driver I/O, no Spark job, no data read; the Iceberg-manifest
+        row-count analog. Returns ``{label: manifest}``."""
         part_cols = (
             partition_cols
             if partition_cols is not None
             else [c for c in PARTITION_COLS if c in df.columns]
         )
+        if chunks is not None:
+            part_cols = [CHUNK_COL] + part_cols
         self._check_partition_spec(part_cols)
-        path = self._write_batch_dir(df, snapshot_id, part_cols)
-        files = [
-            os.path.relpath(f, self.root)
-            for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        ]
-        if lineage is None and footer_lineage:
-            lineage = self._partition_lineage(files, self._read_footers(files))
-        return self._publish(
-            {
-                "snapshot_id": snapshot_id,
-                "batch": snapshot_id,
-                "partition_cols": part_cols,
-                "files": files,
-                "n_files": len(files),
-                "lineage": lineage or {},
-                "committed_at": time.time(),
-            }
+        path = self._write_batch_dir(df, batch_id, part_cols)
+        one = snapshot_id or batch_id
+        by_label = {c: [] for c in chunks} if chunks is not None else {one: []}
+        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
+            rel = os.path.relpath(f, self.root)
+            # chunks given: rel is data/batch=<id>/chunk=<c>/…
+            label = one if chunks is None else rel.split(os.sep)[2].split("=", 1)[1]
+            by_label.setdefault(label, []).append(rel)
+        # Footer reads are independent metadata-only I/O — threaded across
+        # ALL labels' files so commit latency is bounded by the slowest
+        # read, not the file count (O(files) serial reads were the
+        # per-commit driver cost flagged at 10⁵-commit scale).
+        footer_rows = self._read_footers(
+            [rel for files in by_label.values() for rel in files]
         )
+        return {
+            label: self._publish(
+                {
+                    "snapshot_id": label,
+                    "batch": batch_id,
+                    "partition_cols": part_cols,
+                    "files": files,
+                    "n_files": len(files),
+                    "lineage": self._partition_lineage(files, footer_rows),
+                    "committed_at": time.time(),
+                    **fields,
+                }
+            )
+            for label, files in by_label.items()
+        }
+
+    def commit(
+        self,
+        df: DataFrame,
+        snapshot_id: str,
+        partition_cols: list[str] | None = None,
+    ) -> dict:
+        """Single-snapshot commit (side tables, streaming micro-batches,
+        tests). Idempotent: recommitting the same id replaces it atomically.
+        Returns the manifest."""
+        return self._write_snapshots(df, snapshot_id, partition_cols)[snapshot_id]
 
     def commit_batch(
         self,
@@ -277,58 +316,11 @@ class SnapshotTable:
         batch_id: str,
         chunks: list[str],
         partition_cols: list[str] | None = None,
-        footer_lineage: bool = True,
     ) -> dict[str, dict]:
         """ONE physical write spanning many chunks → one snapshot manifest
-        per chunk. ``df`` must carry a ``chunk`` column; chunks absent from
-        the data still get an (empty) snapshot so resume can trust manifest
-        existence.
-
-        Lineage comes FREE from the write itself: per-partition row counts
-        are read from the parquet FOOTERS of the files just written
-        (metadata-only driver I/O, no Spark job, no data read) — the
-        Iceberg-manifest row-count analog. This replaces what used to be
-        one extra groupBy().collect() job per sink per group."""
-        part_cols = [CHUNK_COL] + (
-            partition_cols
-            if partition_cols is not None
-            else [c for c in PARTITION_COLS if c in df.columns]
-        )
-        self._check_partition_spec(part_cols)
-        path = self._write_batch_dir(df, batch_id, part_cols)
-        by_chunk: dict[str, list[str]] = {c: [] for c in chunks}
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
-            rel = os.path.relpath(f, self.root)
-            for seg in rel.split(os.sep):
-                if seg.startswith(f"{CHUNK_COL}="):
-                    by_chunk.setdefault(seg.split("=", 1)[1], []).append(rel)
-                    break
-        # Footer reads are independent metadata-only I/O — threaded across
-        # ALL chunks' files so commit latency is bounded by the slowest
-        # read, not the file count (O(files) serial reads were the
-        # per-commit driver cost flagged at 10⁵-commit scale).
-        footer_rows: dict[str, int] = {}
-        if footer_lineage:
-            footer_rows = self._read_footers(
-                [rel for files in by_chunk.values() for rel in files]
-            )
-        out = {}
-        for chunk, files in by_chunk.items():
-            lineage: dict = {}
-            if footer_lineage:
-                lineage = self._partition_lineage(files, footer_rows)
-            out[chunk] = self._publish(
-                {
-                    "snapshot_id": chunk,
-                    "batch": batch_id,
-                    "partition_cols": part_cols,
-                    "files": files,
-                    "n_files": len(files),
-                    "lineage": lineage,
-                    "committed_at": time.time(),
-                }
-            )
-        return out
+        per chunk. ``df`` must carry a ``chunk`` column; it leads the
+        partition spec. Returns ``{chunk: manifest}``."""
+        return self._write_snapshots(df, batch_id, partition_cols, chunks=chunks)
 
     # -- read ----------------------------------------------------------------
 
@@ -418,12 +410,7 @@ class SnapshotTable:
                     pass
         return removed
 
-    def compact_snapshots(
-        self,
-        spark: SparkSession,
-        min_files: int = 2,
-        snapshot_ids: list[str] | None = None,
-    ) -> dict[str, dict]:
+    def compact_snapshots(self, spark: SparkSession) -> dict[str, dict]:
         """Small-file compaction — the third Iceberg-style maintenance op
         next to keep-N retention and time travel. Micro-batch commits
         (streaming mode: one snapshot per batch, salt_buckets files per
@@ -448,7 +435,8 @@ class SnapshotTable:
         the write-side salt.
 
         Returns {snapshot_id: {"files_before", "files_after"}} for the
-        snapshots actually rewritten (< ``min_files`` files are skipped).
+        snapshots actually rewritten (those already at one file per
+        partition value are skipped).
         """
         out: dict[str, dict] = {}
         # Partition values are STRINGS by table contract; the punt_spark
@@ -466,85 +454,49 @@ class SnapshotTable:
         saved_inf = spark.conf.get(inf_key)
         spark.conf.set(inf_key, "false")
         try:
-            return self._compact_snapshots_inner(
-                spark, min_files, snapshot_ids, out
-            )
+            for sid, m in self.snapshots().items():
+                files = [
+                    f for f in m["files"] if os.path.exists(os.path.join(self.root, f))
+                ]
+                per_dir = Counter(os.path.dirname(f) for f in files)
+                if max(per_dir.values(), default=0) <= 1:
+                    continue  # already one file per partition value
+                part_cols = m.get("partition_cols", [])
+                df = spark.read.option("basePath", self.data_dir).parquet(
+                    *[os.path.join(self.root, f) for f in files]
+                )
+                df = df.drop(*[c for c in ("batch",) if c in df.columns])
+                if part_cols:
+                    df = df.repartition(
+                        *[F.col(c) for c in part_cols]
+                    ).sortWithinPartitions(*part_cols)
+                else:
+                    df = df.coalesce(1)
+                gen = 0
+                while os.path.exists(
+                    os.path.join(self.data_dir, f"batch={sid}.c{gen}")
+                ):
+                    gen += 1
+                # committed_at is PRESERVED: the rows are identical, so a
+                # time-travel read(as_of=t) for any t after the original
+                # commit must keep seeing this snapshot; compacted_at
+                # records the maintenance event separately. _publish
+                # garbage-collects the replaced manifest's files.
+                new = self._write_snapshots(
+                    df,
+                    f"{sid}.c{gen}",
+                    part_cols,
+                    snapshot_id=sid,
+                    committed_at=m.get("committed_at", 0),
+                    compacted_from=len(m["files"]),
+                    compacted_at=time.time(),
+                )[sid]
+                out[sid] = {
+                    "files_before": len(m["files"]),
+                    "files_after": new["n_files"],
+                }
         finally:
             spark.conf.set(inf_key, saved_inf)
-
-    def _compact_snapshots_inner(
-        self,
-        spark: SparkSession,
-        min_files: int,
-        snapshot_ids: list[str] | None,
-        out: dict[str, dict],
-    ) -> dict[str, dict]:
-        for sid, m in self.snapshots().items():
-            if snapshot_ids is not None and sid not in snapshot_ids:
-                continue
-            files = [
-                os.path.join(self.root, f)
-                for f in m["files"]
-                if os.path.exists(os.path.join(self.root, f))
-            ]
-            if len(files) < min_files:
-                continue
-            per_dir: dict[str, int] = {}
-            for f in m["files"]:
-                d = os.path.dirname(f)
-                per_dir[d] = per_dir.get(d, 0) + 1
-            if max(per_dir.values()) <= 1:
-                continue  # already one file per partition value
-            part_cols = [c for c in m.get("partition_cols", []) if c]
-            df = (
-                spark.read.option("basePath", self.data_dir)
-                .parquet(*files)
-            )
-            df = df.drop(*[c for c in ("batch",) if c in df.columns])
-            gen = 0
-            while os.path.exists(
-                os.path.join(self.data_dir, f"batch={sid}.c{gen}")
-            ):
-                gen += 1
-            new_batch = f"{sid}.c{gen}"
-            if part_cols:
-                df = df.repartition(
-                    *[F.col(c) for c in part_cols]
-                ).sortWithinPartitions(*part_cols)
-            else:
-                df = df.coalesce(1)
-            path = self._write_batch_dir(df, new_batch, part_cols)
-            new_files = [
-                os.path.relpath(f, self.root)
-                for f in glob.glob(
-                    os.path.join(path, "**", "*.parquet"), recursive=True
-                )
-            ]
-            lineage = self._partition_lineage(
-                new_files, self._read_footers(new_files)
-            )
-            old_files = m["files"]
-            m = dict(m)
-            # committed_at is PRESERVED: the rows are identical, so a
-            # time-travel read(as_of=t) for any t after the original
-            # commit must keep seeing this snapshot; compacted_at records
-            # the maintenance event separately
-            m.update(
-                {
-                    "files": new_files,
-                    "n_files": len(new_files),
-                    "batch": new_batch,
-                    "lineage": lineage,
-                    "compacted_from": len(old_files),
-                    "compacted_at": time.time(),
-                }
-            )
-            # _publish garbage-collects the replaced manifest's files
-            self._publish(m)
-            out[sid] = {
-                "files_before": len(old_files),
-                "files_after": len(new_files),
-            }
         return out
 
     def partitions(self, prefix: str | None = None) -> list[str]:

@@ -230,6 +230,29 @@ def test_streaming_exactly_once_under_faults(
         assert sum(s["n_rows"] for s in lin.values()) == len(got), t.sink_name
 
 
+def test_streaming_lineage_without_metrics(
+    spark, fixtures_dir, multi_file_input, tmp_path
+):
+    """Manifest lineage does not depend on ``collect_metrics``: after a
+    three-micro-batch drain with metrics off, every sink's and the errors
+    table's ``lineage()`` rows add up to the rows that read back."""
+    cfg = default_config()
+    s = StreamingPipeline(
+        spark, cfg, out_dir=str(tmp_path / "out"),
+        lookups=load_lookups(spark, fixtures_dir), collect_metrics=False,
+    )
+    s.run_available_now(multi_file_input, max_files_per_trigger=2)
+    tables = dict(s.sinks, errors=s.errors_table)
+    total = 0
+    for name, tbl in tables.items():
+        assert len(tbl.snapshots()) == 3, name
+        df = tbl.read(spark)
+        n = df.count() if df is not None else 0
+        assert sum(v["n_rows"] for v in tbl.lineage().values()) == n, name
+        total += n
+    assert total > 0
+
+
 def test_live_tail_follows_new_commits(spark, tmp_path):
     """The control-socket tail analog (control.go:80-143): a follow=True
     subscription picks up rows from commits that land AFTER the stream

@@ -455,6 +455,7 @@ def test_snapshot_compaction(spark, tmp_path):
     assert got == set(rows)  # row-for-row identical through compaction
     # old files gone, compaction is idempotent-skippable
     assert tbl.compact_snapshots(spark) == {}
+    assert after["compacted_from"] == before["n_files"]
     # committed_at is PRESERVED: a time-travel read for a timestamp after
     # the original commit but before the compaction still sees the rows
     t_before_compact = before["committed_at"] + 1e-3
@@ -474,6 +475,14 @@ def test_snapshot_compaction(spark, tmp_path):
         )
     }
     assert on_disk == set(tbl.snapshots()["s1"]["files"])
+    # the commit and compaction knobs stay gone: lineage is always
+    # recorded, and compaction picks its snapshots from the files alone
+    import inspect
+
+    for fn in (tbl.commit, tbl.commit_batch, tbl.compact_snapshots):
+        assert not {"lineage", "footer_lineage", "min_files", "snapshot_ids"} & set(
+            inspect.signature(fn).parameters
+        ), fn.__name__
 
 
 def test_gc_orphan_files(spark, tmp_path):
@@ -924,19 +933,37 @@ def test_route_empty_registry_all_unhandled(spark):
     assert unhandled.count() == 1
 
 
-def test_perfbench_tracer_install_roundtrip():
+def test_perfbench_tracer_install_roundtrip(spark, tmp_path):
     """The benchmark's traced run wraps pipeline layers by module attribute
     name (perfbench/trace.py): a refactor that moves one of those names
     must fail here, not as an AttributeError deep in a traced run."""
     import punt_spark.pipeline as pipeline
     import punt_spark.streaming as streaming
     from perfbench.trace import Tracer
+    from punt_spark.sink import SnapshotTable
 
     before = (pipeline.with_parsed, streaming.route)
     tracer = Tracer("t")
     tracer.install()
     try:
         assert pipeline.with_parsed is not before[0]
+        # one commit call = one commit span: a public commit entry point
+        # calling the other would double sink.commits/files_written
+        tbl = SnapshotTable(str(tmp_path / "tbl"))
+        tbl2 = SnapshotTable(str(tmp_path / "tbl2"))
+        df = spark.createDataFrame(
+            [("a", "r1", "d1", "c1")],
+            "conv_id string, route_key string, ts_day string, chunk string",
+        )
+        tracer.enabled = True
+        for name, commit in (
+            ("SnapshotTable.commit", lambda: tbl.commit(df.drop("chunk"), "s1")),
+            ("SnapshotTable.commit_batch", lambda: tbl2.commit_batch(df, "b1", ["c1"])),
+        ):
+            n = len(tracer.spans)
+            commit()
+            spans = [s["name"] for s in tracer.spans[n:]]
+            assert [s for s in spans if s.startswith("SnapshotTable.commit")] == [name]
     finally:
         tracer.uninstall()
     assert (pipeline.with_parsed, streaming.route) == before
@@ -945,8 +972,7 @@ def test_perfbench_tracer_install_roundtrip():
 def test_every_module_is_reachable_from_an_entry_point():
     """No dead modules: an ast walk of the imports from every entry point
     (CLI, driver contract, bench, perfbench, scripts, examples) reaches
-    every ``punt_spark`` module but the one awaiting deletion. Starts no
-    Spark."""
+    every ``punt_spark`` module. Starts no Spark."""
     import ast
     from pathlib import Path
 
@@ -977,6 +1003,4 @@ def test_every_module_is_reachable_from_an_entry_point():
                     hit = mods.get(".".join(parts[:i]))
                     if hit is not None and hit not in seen:
                         todo.append(hit)
-    # dataops.png is still to be deleted (ROADMAP item 4); take it off this
-    # list when it goes.
-    assert sorted(m for m, p in mods.items() if p not in seen) == ["punt_spark.dataops.png"]
+    assert sorted(m for m, p in mods.items() if p not in seen) == []
