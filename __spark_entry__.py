@@ -17,6 +17,7 @@ names/aliases match exactly on both sides per the driver's compare rules.
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 from contextlib import contextmanager
 
@@ -81,6 +82,11 @@ _SCOPE_BYTES_PER_PART = 8 << 20
 # active-scope width stack: _t reads the top so input spreads built
 # INSIDE a scope match the scoped shuffle width (None = no scope)
 _scope_width_stack: list = [None]
+# Held for an engaged scope's whole lifetime: the conf swap is
+# session-wide, so two scopes interleaved from two threads would restore
+# each other's scoped values (AQE left off, shuffle width left pinned).
+# Scoped queries serialize; reentrant so a scope may nest in its thread.
+_scope_lock = threading.RLock()
 
 
 @contextmanager
@@ -96,25 +102,26 @@ def _small_input_scope(spark: SparkSession, sf_dir: str, *tables: str):
         os.path.getsize(os.path.join(sf_dir, f"{t}.parquet"))
         for t in tables
     )
-    default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     width = max(8, nbytes // _SCOPE_BYTES_PER_PART)
-    if width >= default_width:
-        yield None
-        return
-    scoped = {
-        "spark.sql.shuffle.partitions": str(width),
-        "spark.sql.adaptive.enabled": "false",
-    }
-    saved = {k: spark.conf.get(k) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    _scope_width_stack.append(width)
-    try:
-        yield width
-    finally:
-        _scope_width_stack.pop()
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    with _scope_lock:
+        default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if width < default_width:
+            scoped = {
+                "spark.sql.shuffle.partitions": str(width),
+                "spark.sql.adaptive.enabled": "false",
+            }
+            saved = {k: spark.conf.get(k) for k in scoped}
+            for k, v in scoped.items():
+                spark.conf.set(k, v)
+            _scope_width_stack.append(width)
+            try:
+                yield width
+            finally:
+                _scope_width_stack.pop()
+                for k, v in saved.items():
+                    spark.conf.set(k, v)
+            return
+    yield None
 
 
 def _scoped(spark, sf_dir, tables, build):

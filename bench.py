@@ -155,9 +155,10 @@ def run_pipeline_once(
 ) -> dict:
     """Full pipeline run. Metrics+lineage collection is ON by default —
     the north_rule requires per-partition lineage + metrics recorded, so
-    the HEADLINE number includes them (they ride existing jobs: observation
-    metrics on the sink writes + the cache-materialization aggregate +
-    parquet-footer reads; see pipeline._record_scan_stats)."""
+    the HEADLINE number includes them (they ride existing jobs: the
+    cache-materialization aggregate yields every per-tag counter, and
+    inserted counts come from parquet-footer reads; see
+    pipeline._record_scan_stats)."""
     from punt_spark.pipeline import Pipeline, load_lookups
 
     spark = _fresh_session(threads, f"punt_bench_pipe_{threads}")
@@ -209,7 +210,6 @@ def run_streaming_once(
             spark,
             out_dir=out_dir,
             lookups=load_lookups(spark, fixtures_path),
-            collect_metrics=True,
         )
         t0 = time.monotonic()
         s.run_available_now(os.path.join(fixtures_path, "transcripts.parquet"))

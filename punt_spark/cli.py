@@ -247,7 +247,6 @@ def main(argv: list[str] | None = None) -> int:
             out_dir=args.out,
             lookups=lookups,
             frame_mode=args.frame,
-            collect_metrics=True,
             dedup_within=args.dedup_within,
         )
         s.run_available_now(

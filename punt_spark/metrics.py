@@ -5,12 +5,13 @@ Reference: per-tag counters ``msgs.received/processed/failed/unhandled``
 ``msgs.dropped`` (cluster.go:369,377), and stage latencies
 (processing/write/commit — cluster.go:289,370,381).
 
-Here counters ride jobs that run anyway — observation metrics on the sink
-writes and the cache-materialization aggregate (pipeline.py) — latencies are
-driver wall-clock spans, and per-partition lineage rows record how many rows
-each Spark partition contributed to each commit — the `north_rule`'s lineage
+Here counters ride jobs that run anyway — every per-tag counter comes from
+the one aggregate that materializes the parse cache, and commit counters
+from the snapshot manifests (pipeline.py) — latencies are driver wall-clock
+spans, and per-partition lineage rows record how many rows each Spark
+partition contributed to each commit — the `north_rule`'s lineage
 requirement. This module is the accumulator the pipeline folds those
-observations into.
+counts into.
 """
 
 from __future__ import annotations

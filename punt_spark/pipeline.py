@@ -18,7 +18,9 @@ Execution shape (scale rationale):
   ``msgs.inserted`` and ``parse_errors`` counters read them.
 * The parse output (the one Python/Arrow stage) is cached once per group;
   routing is plan-time literal expressions over it (route.py), a narrow
-  projection each consumer recomputes at no job cost.
+  projection each consumer recomputes at no job cost. The aggregate that
+  materializes the cache also yields every ``msgs.received/processed/
+  failed/unhandled`` counter, static and data-dependent tags alike.
 * Sink writes are independent → submitted concurrently from driver threads
   (Spark schedules them in parallel), like the reference's per-type
   goroutine fan-out (R7).
@@ -59,6 +61,12 @@ from .sink import (
 )
 from .transform import apply_transformer
 
+# Metrics cap on data-dependent tags: the top-K named tags per chunk come
+# back to the driver, the rest fold into one '__other__' row per chunk.
+MAX_DYNAMIC_TAGS = 100
+# Chunks per batch group: one parse pass and one write job per sink.
+MAX_CHUNKS_PER_GROUP = 64
+
 
 def slim_parse_projection(raw: DataFrame) -> DataFrame:
     """The slim parse-boundary projection — envelope fields flattened, raw
@@ -92,10 +100,10 @@ class MetricsPlumbing:
     ``StreamingPipeline`` (streaming.py) — parse cache, scan stats,
     errors, route, concurrent per-sink writes, alert fan-in and the
     errors/alerts/actions commits — plus its counter/lineage machinery: the
-    scan-materialization aggregate, the per-sink observation metrics and
-    the metrics.parquet writer. The subclasses differ only in how they
-    form a group's input and what they do around it (chunk markers vs. the
-    streaming checkpoint)."""
+    scan-materialization aggregate that yields every ``msgs.*`` counter,
+    the commit-manifest counters and the metrics.parquet writer. The
+    subclasses differ only in how they form a group's input and what they
+    do around it (chunk markers vs. the streaming checkpoint)."""
 
     def __init__(
         self,
@@ -105,7 +113,6 @@ class MetricsPlumbing:
         lookups: dict[str, DataFrame] | None,
         collect_metrics: bool,
         frame_mode: str,
-        max_dynamic_tags: int,
     ):
         if frame_mode not in ("none", "newline", "octet"):
             raise ValueError(f"unknown frame_mode {frame_mode!r}")
@@ -115,8 +122,6 @@ class MetricsPlumbing:
         self.lookups = lookups or {}
         self.collect_metrics = collect_metrics
         self.frame_mode = frame_mode
-        # dynamic-tag metrics cap: top-K named tags per chunk + '__other__'
-        self.max_dynamic_tags = max_dynamic_tags
         self.metrics = MetricsCollector(self.cfg.job_id)
         self.sinks = {
             t.sink_name: SnapshotTable(os.path.join(out_dir, t.sink_name))
@@ -128,72 +133,59 @@ class MetricsPlumbing:
         self._routes = routes_df(spark, self.cfg)
         self._emit_ddl()
 
-    def _record_scan_stats(self, cached: DataFrame, glabel: str) -> list[str]:
-        """The counters only the parse scan can supply, recorded by the
-        CACHE-MATERIALIZATION action itself (a full-scan grouped aggregate
-        computes every cached partition exactly like ``count()`` would, so
-        this costs zero additional jobs):
+    def _record_scan_stats(self, cached: DataFrame, glabel: str) -> None:
+        """Every per-tag counter, recorded by the CACHE-MATERIALIZATION
+        action itself (a full-scan grouped aggregate computes every cached
+        partition exactly like ``count()`` would, so this costs zero
+        additional jobs):
 
         * ``lineage.routed.partition_rows`` — per-Spark-partition routed row
           counts (north_rule lineage; ``spark_partition_id`` is captured
           before the aggregation shuffle and is identical to the pid the
           downstream narrow route projection sees);
-        * the arbitrary-tag bucket, whose tag values are data-dependent and
-          so can never ride a plan-time observation: with a '*' type,
-          ``msgs.received/processed[/failed]`` per (chunk, tag) for
-          catch-all-routed rows (tag ∉ static type names); without one,
-          ``msgs.unhandled`` per (chunk, tag) (cluster.go:258-262).
+        * ``msgs.received/processed/failed/unhandled`` per (chunk, tag), the
+          reference's worker loop (cluster.go:249-277): every parsed row is
+          received; with no type to take it (no '*' type) it is unhandled;
+          otherwise it fails when its own type unpacks and the content is
+          not a JSON object, and is processed when it does not fail.
 
-        Static-tag sink counters are NOT computed here — they ride each
-        sink's own write job as observation metrics (see
-        ``_observe_sink_counters``), keeping this scan free of the unpack
-        JSON check for all statically-routed rows.
-
-        Driver-side cardinality is BOUNDED: dynamic tags are data-dependent
+        Driver-side cardinality is BOUNDED. Static tags are bounded by the
+        config and always come back named. Dynamic tags are data-dependent
         (adversarial tag cardinality is unbounded at 100 TB — the
         reference's per-tag statsd has the same exposure), so only the
-        top-``max_dynamic_tags`` tags per chunk (by count, ties by tag)
+        top-``MAX_DYNAMIC_TAGS`` of them per chunk (by count, ties by tag)
         come back as named rows; the rest collapse into one ``__other__``
         bucket per chunk, keeping totals exact. The whole thing stays ONE
         LINEAR plan / one job: a branched plan (pid rollup ∪ tag rollup)
         cannot share the base exchange because ``spark_partition_id`` is
         non-deterministic (sameResult() is false → no ReuseExchange →
         the cache would materialize once per branch; measured 3×
-        parse_latency). Instead each base row explodes into its applicable
-        (lineage / dynamic-tag / chunk-roster) accounting rows and ONE
-        second aggregate computes pid sums and per-chunk tag arrays
-        together; the top-K cut happens executor-side (sort_array + slice),
-        so the driver sees #pids + 2×#chunks rows. The collect_list buffer
-        holds one chunk's (tag, n) pairs on one executor —
-        vocabulary-bounded, and strictly smaller than the old plan, which
-        shipped the same set to the driver.
-
-        Returns the sorted list of chunks with ≥1 parsed row — the roster
-        the group body derives its per-sink observation expressions from
-        (a chunk with no parsed rows could only produce zero counts, which
-        are never emitted).
+        parse_latency). Instead each base row explodes into its lineage
+        and per-tag accounting rows and ONE second aggregate computes pid
+        sums and per-chunk tag arrays together; the top-K cut happens
+        executor-side (static tags sort first, then sort_array + slice), so
+        the driver sees #pids + #chunks rows. The collect_list buffer holds
+        one chunk's (tag, n) pairs on one executor — vocabulary-bounded.
         """
         from .transform import json_ok
 
         m = self.metrics
         cfg = self.cfg
-        k = self.max_dynamic_tags
-        static_tags = [t.name for t in cfg.types.values() if t.name != "*"]
+        k = MAX_DYNAMIC_TAGS
+        unpack = ("unpack-merge", "unpack-take")
+        static = [t for t in cfg.types.values() if t.name != "*"]
+        static_tags = [t.name for t in static]
         catch = cfg.catchall
         is_static = F.col("tag").isin(static_tags)
         # The unpack JSON check (the json.Unmarshal failure the reference
-        # counts, transformers.go:44) applies to dynamic-tag rows only when
-        # the catch-all type itself unpacks — evaluate it only then.
-        check_json = catch is not None and catch.transformer in (
-            "unpack-merge", "unpack-take",
+        # counts, transformers.go:44) runs only on rows whose own type
+        # unpacks: a static tag of an unpack type, or a dynamic tag when
+        # the catch-all unpacks.
+        checked = F.col("tag").isin(
+            [t.name for t in static if t.transformer in unpack]
         )
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if check_json:
-            aggs.append(
-                F.sum(
-                    F.when(~is_static & ~json_ok(), 1).otherwise(0)
-                ).alias("n_fail")
-            )
+        if catch is not None and catch.transformer in unpack:
+            checked = checked | ~is_static
         base = (
             cached.filter(F.col("parse_ok"))
             .groupBy(
@@ -201,13 +193,17 @@ class MetricsPlumbing:
                 F.col(CHUNK_COL),
                 F.col("tag"),
             )
-            .agg(*aggs)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(checked & ~json_ok(), 1).otherwise(0)).alias(
+                    "n_fail"
+                ),
+            )
         )
-        if not check_json:
-            base = base.withColumn("n_fail", F.lit(0).cast("bigint"))
         routed = is_static | F.lit(catch is not None)
         row_schema = (
-            "struct<kind:string,key:string,tag:string,n:bigint,n_fail:bigint>"
+            "struct<kind:string,key:string,tag:string,dyn:int,"
+            "n:bigint,n_fail:bigint>"
         )
         acct = F.filter(
             F.array(
@@ -217,25 +213,16 @@ class MetricsPlumbing:
                         F.lit("lin").alias("kind"),
                         F.col("pid").cast("string").alias("key"),
                         F.lit(None).cast("string").alias("tag"),
+                        F.lit(None).cast("int").alias("dyn"),
                         F.col("n"),
                         F.col("n_fail"),
                     ),
                 ).cast(row_schema),
-                F.when(
-                    ~is_static,
-                    F.struct(
-                        F.lit("dyn").alias("kind"),
-                        F.col(CHUNK_COL).alias("key"),
-                        F.col("tag"),
-                        F.col("n"),
-                        F.col("n_fail"),
-                    ),
-                ).cast(row_schema),
-                # chunk roster — every parsed chunk, static-only included
                 F.struct(
-                    F.lit("chk").alias("kind"),
+                    F.lit("tag").alias("kind"),
                     F.col(CHUNK_COL).alias("key"),
-                    F.lit(None).cast("string").alias("tag"),
+                    F.col("tag"),
+                    F.when(is_static, 0).otherwise(1).alias("dyn"),
                     F.col("n"),
                     F.col("n_fail"),
                 ).cast(row_schema),
@@ -249,21 +236,23 @@ class MetricsPlumbing:
             # FRAGMENTS — ranking those directly would compare one
             # partition's slice of a hot tag against whole small tags
             # (wrong top-K and duplicated named rows whenever a tag spans
-            # >1 cache partition); lin/chk rows (tag NULL) pass through as
-            # one group each
-            .groupBy("kind", "key", "tag")
+            # >1 cache partition); lin rows (tag NULL) pass through as one
+            # group each
+            .groupBy("kind", "key", "tag", "dyn")
             .agg(F.sum("n").alias("n"), F.sum("n_fail").alias("n_fail"))
             .groupBy("kind", "key")
             .agg(
                 F.sum("n").alias("total_n"),
                 F.sum("n_fail").alias("total_fail"),
-                # struct(-n, tag, …) sorts ascending ⇒ highest n first,
-                # ties by tag; lin/chk rows contribute NULL → skipped
+                # struct(dyn, -n, tag, …) sorts ascending ⇒ static tags
+                # first, then highest n first, ties by tag; lin rows
+                # contribute NULL → skipped
                 F.sort_array(
                     F.collect_list(
                         F.when(
-                            F.col("kind") == "dyn",
+                            F.col("kind") == "tag",
                             F.struct(
+                                F.col("dyn"),
                                 (-F.col("n")).alias("neg_n"),
                                 F.col("tag"),
                                 F.col("n_fail"),
@@ -277,15 +266,14 @@ class MetricsPlumbing:
                 "key",
                 "total_n",
                 "total_fail",
-                F.slice(F.col("arr"), 1, k).alias("top"),
+                # every static tag + the top-K dynamic ones
+                F.expr(
+                    f"slice(arr, 1, size(filter(arr, x -> x.dyn = 0)) + {k})"
+                ).alias("top"),
             )
             .collect()
         )
-        chunks: list[str] = []
         for r in sorted(stats, key=lambda r: (r["kind"], r["key"])):
-            if r["kind"] == "chk":
-                chunks.append(r["key"])
-                continue
             if r["kind"] == "lin":
                 if r["total_n"]:
                     m.rows.append(
@@ -306,78 +294,14 @@ class MetricsPlumbing:
             if other_n:
                 named.append(("__other__", other_n, other_fail))
             for tag, n, n_fail in named:
-                if catch is None:
+                m.count("msgs.received", c, n, tag=tag)
+                if catch is None and tag not in static_tags:
                     m.count("msgs.unhandled", c, n, tag=tag)
                     continue
-                m.count("msgs.received", c, n, tag=tag)
                 if n_fail:
                     m.count("msgs.failed", c, n_fail, tag=tag)
                 if n - n_fail:
                     m.count("msgs.processed", c, n - n_fail, tag=tag)
-        return chunks
-
-    @staticmethod
-    def _sink_counter_exprs(t: TypeConfig, group) -> list:
-        """Per-chunk received/failed aggregate expressions for one
-        static-tag sink's pre-transform frame."""
-        from .transform import json_ok
-
-        exprs = []
-        for c in group:
-            exprs.append(
-                F.coalesce(
-                    F.sum(F.when(F.col(CHUNK_COL) == c, 1).otherwise(0)),
-                    F.lit(0),
-                ).alias(f"recv|{c}")
-            )
-        if t.transformer in ("unpack-merge", "unpack-take"):
-            bad = ~json_ok()
-            for c in group:
-                exprs.append(
-                    F.coalesce(
-                        F.sum(
-                            F.when((F.col(CHUNK_COL) == c) & bad, 1).otherwise(0)
-                        ),
-                        F.lit(0),
-                    ).alias(f"fail|{c}")
-                )
-        return exprs
-
-    def _observe_sink_counters(self, sub: DataFrame, t: TypeConfig, group):
-        """Attach per-chunk received/failed observation metrics to a
-        static-tag sink's pre-transform frame. The CollectMetrics node
-        evaluates during the sink's own write job — the counters are free.
-        Returns (Observation, observed_df)."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        return obs, sub.observe(obs, *self._sink_counter_exprs(t, group))
-
-    def _record_observed_counters(self, obs, t: TypeConfig, group, sub):
-        """Fold a sink write's observation into msgs.received/failed/
-        processed per (chunk, tag=t.name) — cluster.go:249-277 semantics."""
-        m = self.metrics
-        try:
-            # latched by the completed write job; never blocks here
-            vals = obs.get
-        except Exception:
-            # When the sink's shuffle stage outputs ZERO rows (empty sub, or
-            # every row dropped by the unpack transformer), AQE's
-            # empty-relation propagation prunes the CollectMetrics node from
-            # the final plan and the observation latches a schema-less row
-            # that the Py4J row conversion rejects. Recompute the same
-            # aggregates directly — this reads the warm parse cache and only
-            # fires for (near-)empty sinks, so it stays off the hot path.
-            vals = sub.agg(*self._sink_counter_exprs(t, group)).first().asDict()
-        for c in group:
-            n = int(vals.get(f"recv|{c}", 0) or 0)
-            n_fail = int(vals.get(f"fail|{c}", 0) or 0)
-            if n:
-                m.count("msgs.received", c, n, tag=t.name)
-            if n_fail:
-                m.count("msgs.failed", c, n_fail, tag=t.name)
-            if n - n_fail:
-                m.count("msgs.processed", c, n - n_fail, tag=t.name)
 
     def _write_metrics(self):
         pdf = self.metrics.to_pandas()
@@ -489,20 +413,16 @@ class MetricsPlumbing:
                 # Materialize BEFORE the concurrent sink writes — cold cache
                 # + parallel consumers would duplicate the parse work. When
                 # metrics are on, the materialization ACTION doubles as the
-                # one counter Spark can't observe statically: the per-(chunk,
-                # tag) breakdown of the arbitrary-tag bucket (catch-all rows
-                # when a '*' type exists, unhandled rows otherwise — tag
-                # values there are data-dependent, so no plan-time when/sum
-                # enumeration is possible) — and it yields the chunk roster
-                # for the per-sink observation expressions. A full-scan
-                # aggregate materializes every cached partition exactly like
-                # count() does, so this costs zero additional jobs.
+                # counter pass: every msgs.* row per (chunk, tag), static
+                # and data-dependent tags alike, plus per-partition routed
+                # lineage. A full-scan aggregate materializes every cached
+                # partition exactly like count() does, so this costs zero
+                # additional jobs.
                 with m.timing("parse_latency", label):
                     if self.collect_metrics:
-                        roster = self._record_scan_stats(cached, label)
+                        self._record_scan_stats(cached, label)
                     else:
                         cached.count()
-                        roster = []
                 errors = cached.filter(~F.col("parse_ok")).select(
                     F.col(CHUNK_COL),
                     F.col("raw_text").alias("data"),
@@ -518,12 +438,8 @@ class MetricsPlumbing:
                 # Tag dispatch is plan-time literal expressions (route.py):
                 # no join, no broadcast and no Spark job for any consumer.
                 routed, _ = route(envelope, self._routes, job_id=cfg.job_id)
-                # Row-level counters ride jobs that run anyway: each
-                # static-tag sink's per-chunk received/failed sums sit on
-                # its pre-transform frame as observation metrics
-                # (CollectMetrics nodes — Spark never pushes filters through
-                # them), evaluated by the sink's own write job; lineage and
-                # the arbitrary-tag bucket rode the cache-materialization
+                # Counters ride jobs that run anyway: the per-tag counters
+                # and routed lineage rode the cache-materialization
                 # aggregate above; inserted counts and per-(route_key,
                 # ts_day) lineage come from the commit manifests (parquet
                 # footers) below. Metrics collection adds ZERO Spark jobs.
@@ -545,14 +461,6 @@ class MetricsPlumbing:
 
                 def write_sink(t: TypeConfig):
                     sub = routed.filter(F.col("sink") == t.sink_name)
-                    obs = None
-                    # Static-tag sinks (every row's tag == t.name): observe
-                    # per-chunk received + unpack-failure counts on the
-                    # pre-transform frame — they ride the write job free.
-                    # The catch-all sink's per-tag counts were recorded by
-                    # the cache-materialization aggregate instead.
-                    if self.collect_metrics and t.name != "*" and roster:
-                        obs, sub = self._observe_sink_counters(sub, t, roster)
                     transformed, _failed = apply_transformer(sub, t)
                     enriched = apply_mutators(transformed, t.mutators, self.lookups)
                     # declared-mapping enforcement (the ES index-template
@@ -565,7 +473,7 @@ class MetricsPlumbing:
                         manifests = self._commit(
                             self.sinks[t.sink_name], out, sid, chunks
                         )
-                    return t, enriched, manifests, obs, sub
+                    return t, enriched, manifests
 
                 types = list(cfg.types.values())
                 # NOTE (measured dead end): folding the errors commit into
@@ -577,13 +485,11 @@ class MetricsPlumbing:
                     results = list(ex.map(write_sink, types))
 
                 alert_events: dict[str, list] = {a.name: [] for a in cfg.alerts}
-                for t, enriched, manifests, obs, sub in results:
+                for t, enriched, manifests in results:
                     if self.collect_metrics:
                         self._count_committed(
                             "msgs.inserted", manifests, tag=t.sink_name
                         )
-                        if obs is not None:
-                            self._record_observed_counters(obs, t, roster, sub)
                     for a in cfg.alerts:
                         ev = matched_events(enriched, a, t.name)
                         if ev is not None:
@@ -631,10 +537,8 @@ class Pipeline(MetricsPlumbing):
         out_dir: str = "./punt_out",
         lookups: dict[str, DataFrame] | None = None,
         collect_metrics: bool = True,
-        max_chunks_per_group: int = 64,
         frame_mode: str = "none",
         cluster: str | None = None,
-        max_dynamic_tags: int = 100,
     ):
         """``cluster`` selects a ClusterConfig lane (reference: one Punt
         Config drives several clusters, each with its own ES URL + worker
@@ -649,11 +553,9 @@ class Pipeline(MetricsPlumbing):
             if cc.out_root:
                 out_dir = cc.out_root
         super().__init__(
-            spark, cfg, out_dir, lookups, collect_metrics, frame_mode,
-            max_dynamic_tags,
+            spark, cfg, out_dir, lookups, collect_metrics, frame_mode
         )
         self.cluster = cluster
-        self.max_chunks_per_group = max_chunks_per_group
         os.makedirs(os.path.join(out_dir, "_chunks"), exist_ok=True)
 
     # -- resume bookkeeping ----------------------------------------------------
@@ -689,8 +591,8 @@ class Pipeline(MetricsPlumbing):
         ]
         skipped = [c for c in chunks if c not in pending]
         done: list[str] = []
-        for i in range(0, len(pending), self.max_chunks_per_group):
-            group = pending[i : i + self.max_chunks_per_group]
+        for i in range(0, len(pending), MAX_CHUNKS_PER_GROUP):
+            group = pending[i : i + MAX_CHUNKS_PER_GROUP]
             self._run_group(transcripts, group)
             done.extend(group)
         self._write_metrics()

@@ -53,9 +53,8 @@ class StreamingPipeline(MetricsPlumbing):
         out_dir: str = "./punt_stream_out",
         lookups: dict[str, DataFrame] | None = None,
         dedup_within: str | None = None,
-        collect_metrics: bool = False,
+        collect_metrics: bool = True,
         frame_mode: str = "none",
-        max_dynamic_tags: int = 100,
     ):
         """``dedup_within`` (e.g. "10 minutes") enables ingest-time exact
         dedup on (conv_id, turn_idx) via ``dedup_stream`` — an
@@ -63,9 +62,9 @@ class StreamingPipeline(MetricsPlumbing):
         producer) stops double-counting without unbounded state.
 
         The processing knobs are the batch ``Pipeline``'s: ``frame_mode``
-        (newline/octet framing before parse) and ``collect_metrics`` — the
-        same zero-extra-job counter set as batch (scan-materialization
-        aggregate + per-sink observe() + manifest footer lineage),
+        (newline/octet framing before parse) and ``collect_metrics`` (on by
+        default) — the same zero-extra-job counter set as batch (the
+        scan-materialization aggregate + manifest footer lineage),
         accumulated across micro-batches and written to
         ``<out>/metrics.parquet`` when the drain finishes. Counter
         attribution granularity differs ONLY for commit-derived counters
@@ -73,8 +72,7 @@ class StreamingPipeline(MetricsPlumbing):
         micro-batch id, because one streaming snapshot may span several
         ts-days; per-tag totals still line up with batch exactly."""
         super().__init__(
-            spark, cfg, out_dir, lookups, collect_metrics, frame_mode,
-            max_dynamic_tags,
+            spark, cfg, out_dir, lookups, collect_metrics, frame_mode
         )
         self.dedup_within = dedup_within
         self.checkpoint = os.path.join(out_dir, "_checkpoint")

@@ -66,6 +66,73 @@ QUERY_NAMES = sorted(entrymod.oracle_sql().keys())
 ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
 
 
+def test_small_input_scope_interleaved_threads_restore_conf(tmp_path):
+    """Two scoped queries on one session from two threads — A enters, B
+    enters, A exits, B exits — leave the session conf as it was. Without
+    serialization B saves A's scoped values and restores them last,
+    leaving AQE off and the shuffle width pinned. A stand-in session conf
+    takes the swaps, so no Spark starts."""
+    import threading
+    from types import SimpleNamespace
+
+    # A's input scopes to width 16 (a sparse 128 MiB file), B's to 8: B
+    # engages inside A's scope rather than reading A's width as the
+    # session default and no-opping
+    with open(tmp_path / "big.parquet", "wb") as f:
+        f.truncate(16 * entrymod._SCOPE_BYTES_PER_PART)
+    (tmp_path / "small.parquet").write_bytes(b"x")
+    original = {
+        "spark.sql.shuffle.partitions": "64",
+        "spark.sql.adaptive.enabled": "true",
+    }
+    conf = dict(original)
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(get=conf.__getitem__, set=conf.__setitem__)
+    )
+    a_in, a_exit, a_done, b_trying, b_in = (threading.Event() for _ in range(5))
+    seen, errors = {}, []
+
+    def scope(name, table, entered, hold, after=None):
+        try:
+            with entrymod._small_input_scope(spark, str(tmp_path), table) as w:
+                seen[name] = (w, dict(conf))
+                entered.set()
+                assert hold.wait(timeout=60)
+        except BaseException as e:  # surfaced by the asserts below
+            errors.append(e)
+        finally:
+            if after is not None:
+                after.set()
+
+    def b_body():
+        b_trying.set()
+        scope("B", "small", b_in, a_done)
+
+    a = threading.Thread(target=scope, args=("A", "big", a_in, a_exit, a_done))
+    b = threading.Thread(target=b_body)
+    a.start()
+    assert a_in.wait(timeout=60)
+    b.start()
+    assert b_trying.wait(timeout=60)
+    # B enters now unless scopes serialize; either way A exits next
+    b_in.wait(timeout=1)
+    a_exit.set()
+    a.join(timeout=60)
+    b.join(timeout=60)
+    assert not a.is_alive() and not b.is_alive()
+    assert not errors, errors
+
+    def scoped(width):
+        return {
+            "spark.sql.shuffle.partitions": str(width),
+            "spark.sql.adaptive.enabled": "false",
+        }
+
+    assert seen == {"A": (16, scoped(16)), "B": (8, scoped(8))}
+    assert conf == original
+    assert entrymod._scope_width_stack == [None]
+
+
 def test_oracle_covers_queries():
     # every query has an oracle (simhash gained one in round 2 via the
     # 16-bit md5-nibble formulation)

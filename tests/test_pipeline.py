@@ -16,6 +16,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import punt_spark.pipeline as pipeline_mod
 from punt_spark.config import default_config
 from punt_spark.fixtures import lookup_role_pdf, lookup_tool_pdf
 from punt_spark.pipeline import Pipeline, load_lookups
@@ -121,19 +122,100 @@ def test_sink_counts(spark, run):
         assert cells > 0 or n == 0, t.sink_name
 
 
-def test_metrics_counters_match_oracle(run):
-    pipe, result, oracle, cfg = run
+def _msgs_counters(metrics) -> dict[str, int]:
+    """``msgs.*`` totals per ``metric|tag``, minus the commit-derived
+    ``msgs.inserted`` — the oracle's per-row counter keys."""
     got: dict[str, int] = {}
-    for r in pipe.metrics.rows:
+    for r in metrics.rows:
         if r["metric"].startswith("msgs.") and r["metric"] != "msgs.inserted":
             key = f"{r['metric']}|{r['tag']}"
             got[key] = got.get(key, 0) + r["value"]
+    return got
+
+
+def test_metrics_counters_match_oracle(run):
+    pipe, result, oracle, cfg = run
+    got = _msgs_counters(pipe.metrics)
     want = {
         k: v
         for k, v in oracle["counters"].items()
         if not k.startswith("msgs.inserted")
     }
     assert got == want
+
+
+def test_empty_static_sink_writes_match_oracle(spark, fixtures_dir, tmp_path):
+    """Static sinks whose write is EMPTY count like the oracle: every
+    ``app-json`` row is malformed JSON (the unpack transformer drops them
+    all) and no row has the ``audit`` tag. A batch group and a streaming
+    drain over the same rows both match ``run_reference``'s ``msgs.*``
+    counters, and every sink reads back what the oracle holds."""
+    import datetime
+
+    from punt_spark.streaming import StreamingPipeline
+
+    kinds = [
+        ("app-json", "{not json"),
+        ("logs", "plain line"),
+        ("app-json", "oops"),
+        ("metrics-json", '{"level": "info", "user": "u1", "epoch": "1489464000"}'),
+        ("webhook", "a dynamic tag"),
+        ("app-json", '{"level": "warn"'),
+    ]
+    rows = []
+    for i in range(13):
+        day = 14 + i % 2
+        if i == 12:
+            text = "no syslog header"  # one parse error
+        else:
+            tag, content = kinds[i % len(kinds)]
+            text = f"<13>Mar {day} 04:00:{i:02d} h1 {tag}: {content}"
+        rows.append(
+            {
+                "conv_id": f"c{i}",
+                "turn_idx": i,
+                "role": "user",
+                "text": text,
+                "tool": "none",
+                "ts": datetime.datetime(2017, 3, day, 4, 0, i),
+            }
+        )
+    pdf = pd.DataFrame(rows)
+    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    transcripts = spark.createDataFrame(pdf)
+    src = str(tmp_path / "in")
+    transcripts.write.parquet(src)
+    cfg = default_config()
+    oracle = reference_oracle(transcripts, cfg)
+    want = {
+        k: v for k, v in oracle["counters"].items()
+        if not k.startswith("msgs.inserted")
+    }
+    # the premise: app-json's transformed frame and audit's routed frame
+    # are both empty
+    assert want["msgs.failed|app-json"] == 6
+    assert "msgs.processed|app-json" not in want
+    assert not oracle["sinks"]["sink_audit"]
+    assert not oracle["sinks"]["sink_app-json"]
+
+    lookups = load_lookups(spark, fixtures_dir)
+    batch = Pipeline(spark, cfg, out_dir=str(tmp_path / "b"), lookups=lookups)
+    batch.run(transcripts)
+    stream = StreamingPipeline(
+        spark, cfg, out_dir=str(tmp_path / "s"), lookups=lookups
+    )
+    stream.run_available_now(src)
+    for name, pipe in (("batch", batch), ("stream", stream)):
+        assert _msgs_counters(pipe.metrics) == want, name
+        for t in cfg.types.values():
+            sdf = pipe.sinks[t.sink_name].read(spark)
+            _compare(
+                sdf.toPandas() if sdf is not None else pd.DataFrame(),
+                oracle["sinks"][t.sink_name],
+                ["conv_id", "turn_idx"],
+                ctx=f"{name}:{t.sink_name}",
+            )
 
 
 def test_runtime_gauges_snapshot(run):
@@ -165,9 +247,9 @@ def test_runtime_gauges_snapshot(run):
     assert totals["gauge.jvm_heap_used_bytes"] == last_heap
 
 
-def test_dynamic_tag_metrics_bounded(spark, tmp_path):
+def test_dynamic_tag_metrics_bounded(spark, tmp_path, monkeypatch):
     """Adversarial dynamic-tag cardinality must not land on the driver:
-    with 10k distinct tags and max_dynamic_tags=5 the driver receives at
+    with 10k distinct tags and MAX_DYNAMIC_TAGS=5 the driver receives at
     most 6 named tag rows per chunk (top-5 + '__other__') while the chunk
     total stays exact."""
     cfg = default_config()
@@ -191,9 +273,8 @@ def test_dynamic_tag_metrics_bounded(spark, tmp_path):
         F.lit("t").alias("tool"),
         F.lit("2017-03-10 04:00:00").cast("timestamp").alias("ts"),
     )
-    pipe = Pipeline(
-        spark, cfg, out_dir=str(tmp_path / "out"), max_dynamic_tags=5
-    )
+    monkeypatch.setattr(pipeline_mod, "MAX_DYNAMIC_TAGS", 5)
+    pipe = Pipeline(spark, cfg, out_dir=str(tmp_path / "out"))
     pipe.run(df)
     static = {t.name for t in cfg.types.values() if t.name != "*"}
     recv = [

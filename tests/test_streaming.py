@@ -85,12 +85,10 @@ def test_streaming_metrics_match_batch(
     lookups = load_lookups(spark, fixtures_dir)
     batch = Pipeline(
         spark, cfg, out_dir=str(tmp_path / "b"), lookups=lookups,
-        collect_metrics=True,
     )
     batch.run(transcripts)
     s = StreamingPipeline(
         spark, cfg, out_dir=str(tmp_path / "s"), lookups=lookups,
-        collect_metrics=True,
     )
     # several micro-batches, so cross-batch accumulation is exercised
     s.run_available_now(multi_file_input, max_files_per_trigger=2)
@@ -148,7 +146,6 @@ def test_streaming_framing(spark, tmp_path):
         default_config(),
         out_dir=str(tmp_path / "framed_out"),
         frame_mode="newline",
-        collect_metrics=True,
     )
     s.run_available_now(src)
     out = s.sinks["sink_logs"].read(spark)
@@ -201,9 +198,7 @@ def test_streaming_exactly_once_under_faults(
             raise RuntimeError("simulated crash before the checkpoint commit")
         return man
 
-    s1 = StreamingPipeline(
-        spark, cfg, out_dir=out, lookups=lookups, collect_metrics=True
-    )
+    s1 = StreamingPipeline(spark, cfg, out_dir=out, lookups=lookups)
     actions_table = s1.actions_table
     with monkeypatch.context() as mp:
         mp.setattr(SnapshotTable, "commit", crashing_commit)
@@ -211,9 +206,7 @@ def test_streaming_exactly_once_under_faults(
             s1.run_available_now(multi_file_input, max_files_per_trigger=2)
     assert s1.sinks["sink_logs"].has_snapshot("batch-00000000")
 
-    s2 = StreamingPipeline(
-        spark, cfg, out_dir=out, lookups=lookups, collect_metrics=True
-    )
+    s2 = StreamingPipeline(spark, cfg, out_dir=out, lookups=lookups)
     s2.run_available_now(multi_file_input, max_files_per_trigger=2)
     assert s2.sinks["sink_logs"].has_snapshot("batch-00000002")
 

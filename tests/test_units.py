@@ -485,6 +485,26 @@ def test_snapshot_compaction(spark, tmp_path):
         ), fn.__name__
 
 
+def test_counter_options_and_observation_path_stay_gone():
+    """Every msgs.* counter comes from the scan aggregate: the pipelines
+    take no per-instance tag or chunk caps, and no code attaches
+    ``observe()`` metrics. Starts no Spark."""
+    import inspect
+    from pathlib import Path
+
+    from punt_spark.pipeline import Pipeline
+    from punt_spark.streaming import StreamingPipeline
+
+    for cls in (Pipeline, StreamingPipeline):
+        params = set(inspect.signature(cls.__init__).parameters)
+        assert not {"max_chunks_per_group", "max_dynamic_tags"} & params, cls
+    pkg = Path(__file__).resolve().parent.parent / "punt_spark"
+    for path in pkg.rglob("*.py"):
+        src = path.read_text()
+        assert ".observe(" not in src, path
+        assert "Observation" not in src, path
+
+
 def test_gc_orphan_files(spark, tmp_path):
     """The sweep for the _publish crash window: unreferenced data files
     (visible to the glob-based tail reader) are removed; referenced ones
@@ -753,6 +773,49 @@ def test_pipeline_catchall_only_config(spark, tmp_path):
             by_tag[r["tag"]] = by_tag.get(r["tag"], 0) + r["value"]
     assert by_tag == {"alpha": 1, "beta": 1}
     assert pipe.sinks["sink_catchall"].read(spark).count() == 2
+
+
+def test_pipeline_without_catchall_counts_like_oracle(spark, tmp_path):
+    """Without a '*' type, a tag no type takes is received AND unhandled
+    (cluster.go:249-262), next to the static tags' counters."""
+    import datetime
+
+    from punt_spark.config import PipelineConfig, TypeConfig
+    from punt_spark.pipeline import Pipeline
+    from punt_spark.reference_impl import run_reference
+    from test_pipeline import _msgs_counters
+
+    cfg = PipelineConfig(
+        types={
+            "logs": TypeConfig(name="logs", prefix="logs-"),
+            "app-json": TypeConfig(
+                name="app-json", prefix="app-", transformer="unpack-merge"
+            ),
+        },
+        alerts=[],
+        gc=[],
+    )
+    rows = [
+        {
+            "conv_id": "c1", "turn_idx": i, "role": "user",
+            "text": f"<13>Mar 14 04:00:0{i} h1 {tag}: {content}",
+            "tool": "none", "ts": datetime.datetime(2017, 3, 14, 4, 0, i),
+        }
+        for i, (tag, content) in enumerate(
+            [("logs", "one"), ("webhook", "two"), ("webhook", "three"),
+             ("app-json", "{bad"), ("app-json", '{"a": "1"}')]
+        )
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp",
+    )
+    pipe = Pipeline(spark, cfg, out_dir=str(tmp_path / "nc_out"))
+    pipe.run(df)
+    got = _msgs_counters(pipe.metrics)
+    assert got == dict(run_reference(rows, cfg)["counters"])
+    assert got["msgs.unhandled|webhook"] == 2
 
 
 def test_alert_rollup_tie_break_deterministic(spark):
