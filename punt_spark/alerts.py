@@ -11,9 +11,14 @@ than one event rolled up (action.go:113-115, N = count-1).
 One Alert instance is shared by every Type it's wired to (state.go:39-52) —
 the rollup window is GLOBAL across types. So the batch shape is: per type,
 ``filter(rlike)`` + render (match-time rendering, like MatchAlert.Check);
-union the per-type event frames; one ``groupBy(window(ts, w))`` per alert
-with ``min_by`` over the full rendered tuple picking the first event
+union the per-type event frames; one ``groupBy(chunk, window(ts, w))`` per
+alert with ``min_by`` over the full rendered tuple picking the first event
 (deterministic under timestamp ties — see ``rollup``).
+
+Rollups are per chunk: ``CHUNK_COL``, when present, passes through events,
+rollups and actions, which commit per chunk like the sinks. Only a window
+straddling a day boundary splits, as one straddling a group or micro-batch
+boundary does.
 
 Window semantics divergence (documented): the reference's windows open at
 wall-clock *arrival* of the first match (alert.go:50-65) — unreproducible by
@@ -30,11 +35,13 @@ type assertion — divergence in our favor).
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .config import AlertConfig
+from .sink import CHUNK_COL
 
 _FIELD_RE = re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)\}")
 
@@ -76,7 +83,7 @@ def matched_events(
         return None
     matched = df.filter(F.col(alert.source_field).rlike(alert.match))
     cols = df.columns
-    out = matched.select(
+    return matched.select(
         F.lit(alert.name).alias("alert_name"),
         F.col(ts_col).alias("ts"),
         render_template(alert.title, cols).alias("title"),
@@ -85,8 +92,13 @@ def matched_events(
             render_template(v, cols).alias(f"field_{k}")
             for k, v in alert.fields.items()
         ],
+        *_chunk(df),
     )
-    return out
+
+
+def _chunk(df: DataFrame) -> list[str]:
+    """``[CHUNK_COL]`` when ``df`` carries it (rollups stay per chunk)."""
+    return [CHUNK_COL] if CHUNK_COL in df.columns else []
 
 
 def rollup(events: DataFrame, alert: AlertConfig) -> DataFrame:
@@ -100,6 +112,7 @@ def rollup(events: DataFrame, alert: AlertConfig) -> DataFrame:
     reference renders it into the embed (action.go:109,
     ``infos[0].Log["timestamp"]``)."""
     field_names = [f"field_{k}" for k in alert.fields]
+    chunk = _chunk(events)
     if alert.rollup_window_sec == 0:
         return events.select(
             F.lit(alert.name).alias("alert_name"),
@@ -110,6 +123,7 @@ def rollup(events: DataFrame, alert: AlertConfig) -> DataFrame:
             F.col("description"),
             F.col("ts").alias("first_ts"),
             *field_names,
+            *chunk,
         )
     w = F.window(F.col("ts"), f"{alert.rollup_window_sec} seconds")
     # "first" event = lexicographic min of the full rendered tuple, not of
@@ -124,7 +138,7 @@ def rollup(events: DataFrame, alert: AlertConfig) -> DataFrame:
         *[F.col(f) for f in field_names],
     )
     first_by = lambda c: F.min_by(c, order_key)  # noqa: E731
-    agg = events.groupBy(w.alias("w")).agg(
+    agg = events.groupBy(*chunk, w.alias("w")).agg(
         F.count(F.lit(1)).alias("n_events"),
         first_by(F.col("title")).alias("__title"),
         first_by(F.col("description")).alias("description"),
@@ -149,6 +163,7 @@ def rollup(events: DataFrame, alert: AlertConfig) -> DataFrame:
         F.col("description"),
         F.col("first_ts"),
         *field_names,
+        *chunk,
     )
 
 
@@ -209,32 +224,21 @@ def render_actions(
                     "timestamp"
                 ),
                 fields_json.alias("fields_json"),
+                *_chunk(rolled),
             )
         )
-    if not frames:
-        return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return reduce(DataFrame.unionByName, frames) if frames else None
 
 
 def rollup_all(
     per_alert_events: dict[str, list[DataFrame]], alerts: list[AlertConfig]
 ) -> DataFrame | None:
-    """Union each alert's per-type event frames and roll up globally."""
-    frames = []
-    by_name = {a.name: a for a in alerts}
-    for name, evs in per_alert_events.items():
-        if not evs:
-            continue
-        u = evs[0]
-        for e in evs[1:]:
-            u = u.unionByName(e)
-        frames.append(rollup(u, by_name[name]))
+    """Union each alert's per-type event frames and roll up across types."""
+    frames = [
+        rollup(reduce(DataFrame.unionByName, evs), a)
+        for a in alerts
+        if (evs := per_alert_events.get(a.name))
+    ]
     if not frames:
         return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+    return reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), frames)

@@ -21,18 +21,13 @@ Execution shape (scale rationale):
   projection each consumer recomputes at no job cost. The aggregate that
   materializes the cache also yields every ``msgs.received/processed/
   failed/unhandled`` counter, static and data-dependent tags alike.
-* Sink writes are independent → submitted concurrently from driver threads
-  (Spark schedules them in parallel), like the reference's per-type
-  goroutine fan-out (R7).
+* Group outputs (sinks, errors, alerts, actions) are independent → all
+  commit concurrently from one pool of driver threads (Spark schedules
+  them in parallel), like the reference's per-type goroutine fan-out (R7).
 * Groups are formed deterministically from the sorted pending-chunk list,
   so a crash-resume re-forms identical groups → identical batch ids →
-  idempotent overwrite. (If NEW chunks appear between crash and resume the
-  re-formed group gets a DIFFERENT id: sink and errors tables stay
-  exactly-once because their manifests are per-chunk, but an
-  alerts/actions snapshot committed by the crashed group lingers next to
-  the new group's — duplicate alert rows in that narrow window. Accepted
-  + documented: the reference loses alert windows outright on crash
-  (in-memory rollup buffers, alert.go:19-21); we err on re-delivery.)
+  idempotent overwrite; every output's manifests are per chunk, so one
+  that finds NEW chunks (a different group id) overwrites them too.
 """
 
 from __future__ import annotations
@@ -42,14 +37,16 @@ import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import nullcontext
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .alerts import matched_events, render_actions, rollup_all
-from .config import PipelineConfig, TypeConfig, default_config
+from .config import PipelineConfig, default_config
 from .enrich import apply_mutators
-from .metrics import MetricsCollector
+from .metrics import MetricsCollector, runtime_gauges
 from .parse import with_parsed
 from .route import route, routes_df
 from .sink import (
@@ -66,6 +63,18 @@ from .transform import apply_transformer
 MAX_DYNAMIC_TAGS = 100
 # Chunks per batch group: one parse pass and one write job per sink.
 MAX_CHUNKS_PER_GROUP = 64
+
+
+class _Output(NamedTuple):
+    """One group output to commit; its jobs are described ``punt:<job>``
+    and its manifests' rows fold into ``counter``/``tag``."""
+
+    job: str
+    table: SnapshotTable
+    df: DataFrame
+    partition_cols: list[str] | None = None
+    counter: str | None = None
+    tag: str | None = None
 
 
 def slim_parse_projection(raw: DataFrame) -> DataFrame:
@@ -98,10 +107,10 @@ def slim_parse_projection(raw: DataFrame) -> DataFrame:
 class MetricsPlumbing:
     """The group body shared by the batch ``Pipeline`` and the
     ``StreamingPipeline`` (streaming.py) — parse cache, scan stats,
-    errors, route, concurrent per-sink writes, alert fan-in and the
-    errors/alerts/actions commits — plus its counter/lineage machinery: the
-    scan-materialization aggregate that yields every ``msgs.*`` counter,
-    the commit-manifest counters and the metrics.parquet writer. The
+    errors, route, alert fan-in and the concurrent commits of every
+    output — plus its counter/lineage machinery: the scan-materialization
+    aggregate that yields every ``msgs.*`` counter, the commit-manifest
+    counters and the metrics.parquet writer. The
     subclasses differ only in how they form a group's input and what they
     do around it (chunk markers vs. the streaming checkpoint)."""
 
@@ -309,15 +318,6 @@ class MetricsPlumbing:
         if len(pdf):
             pdf.to_parquet(path, index=False)
 
-    def _snapshot_gauges(self, chunk: str):
-        """A5 runtime gauges at a commit boundary (reference
-        RunRuntimeCollector, metrics.go:17-27): driver-side JMX bean reads
-        only — adds ZERO Spark jobs to the group budget."""
-        from .metrics import runtime_gauges
-
-        for k, v in runtime_gauges(self.spark).items():
-            self.metrics.gauge(k, chunk, v)
-
     def _emit_ddl(self):
         """Write each sink's CREATE TABLE DDL to ``<out>/_ddl/<sink>.sql``
         at init — the reference pushes its index templates at startup
@@ -338,16 +338,20 @@ class MetricsPlumbing:
             os.replace(tmp, os.path.join(ddl_dir, f"{sink_name}.sql"))
 
     def _commit(
-        self, table: SnapshotTable, df: DataFrame, sid: str,
-        chunks: list[str] | None, **kw,
+        self, o: _Output, sid: str, label: str, chunks: list[str] | None
     ) -> dict[str, dict]:
         """Commit one group output; returns ``{label: manifest}``. Known
         chunks (batch) → ONE write sliced into per-chunk manifests
         (``commit_batch``, chunk as a partition dir, labels per chunk);
-        ``chunks=None`` (streaming) → one snapshot labelled ``sid``."""
-        if chunks is None:
-            return {sid: table.commit(df, snapshot_id=sid, **kw)}
-        return table.commit_batch(df, batch_id=sid, chunks=chunks, **kw)
+        ``chunks=None`` (streaming) → one snapshot labelled ``sid``. Jobs
+        are described ``punt:<job>``; sinks (outputs with a ``tag``) time
+        the reference's per-type write latency (cluster.go:370)."""
+        self.spark.sparkContext.setJobDescription(f"punt:{o.job}")
+        latency = f"write_latency.{o.tag}"
+        with self.metrics.timing(latency, label) if o.tag else nullcontext():
+            if chunks is None:
+                return {sid: o.table.commit(o.df, sid, o.partition_cols)}
+            return o.table.commit_batch(o.df, sid, chunks, o.partition_cols)
 
     def _side_width(self, cached: DataFrame) -> int:
         """Partition count for the group's side outputs (errors, alert
@@ -409,20 +413,25 @@ class MetricsPlumbing:
             # ordering guarantee. Per-sink layout + warm parse cache wins.)
             raw = with_parsed(gdf, "text", cfg.reference_year)
             cached = slim_parse_projection(raw).cache()
+            rolled = None
             try:
-                # Materialize BEFORE the concurrent sink writes — cold cache
-                # + parallel consumers would duplicate the parse work. When
-                # metrics are on, the materialization ACTION doubles as the
-                # counter pass: every msgs.* row per (chunk, tag), static
-                # and data-dependent tags alike, plus per-partition routed
-                # lineage. A full-scan aggregate materializes every cached
-                # partition exactly like count() does, so this costs zero
-                # additional jobs.
-                with m.timing("parse_latency", label):
-                    if self.collect_metrics:
-                        self._record_scan_stats(cached, label)
-                    else:
-                        cached.count()
+                # Materialize BEFORE the concurrent commits — cold cache +
+                # parallel consumers would duplicate the parse work. With
+                # metrics on, the materializing action is the counter pass
+                # (every msgs.* row per (chunk, tag) and the routed
+                # lineage): a full-scan aggregate fills the cache exactly
+                # like count() does, so it costs zero additional jobs.
+                sc = self.spark.sparkContext
+                sc.setJobDescription("punt:scan_stats")
+                try:
+                    with m.timing("parse_latency", label):
+                        if self.collect_metrics:
+                            self._record_scan_stats(cached, label)
+                        else:
+                            cached.count()
+                finally:
+                    sc.setJobDescription(None)
+                side_width = self._side_width(cached)
                 errors = cached.filter(~F.col("parse_ok")).select(
                     F.col(CHUNK_COL),
                     F.col("raw_text").alias("data"),
@@ -438,28 +447,25 @@ class MetricsPlumbing:
                 # Tag dispatch is plan-time literal expressions (route.py):
                 # no join, no broadcast and no Spark job for any consumer.
                 routed, _ = route(envelope, self._routes, job_id=cfg.job_id)
-                # Counters ride jobs that run anyway: the per-tag counters
-                # and routed lineage rode the cache-materialization
-                # aggregate above; inserted counts and per-(route_key,
-                # ts_day) lineage come from the commit manifests (parquet
-                # footers) below. Metrics collection adds ZERO Spark jobs.
-                drop = [
-                    "prefix", "mapping_type", "date_format", "transformer",
-                    "sink",
-                ]
+                # Counters ride jobs that run anyway: per-tag counters and
+                # routed lineage rode the aggregate above; inserted counts
+                # and per-partition lineage come from the commit manifests
+                # (parquet footers). Metrics collection adds ZERO jobs.
+                drop = ["prefix", "mapping_type", "date_format", "transformer", "sink"]
                 if chunks is None:
-                    # A snapshot spanning several ts-days partitions on
-                    # (route_key, ts_day) only, so CHUNK_COL is bookkeeping,
-                    # not sink data: retained, it would (a) be stored in
-                    # every sink file (batch stores it only as a partition
-                    # dir) and (b) lead salted_write_layout's
-                    # sortWithinPartitions, which the V1 writer's
-                    # (route_key, ts_day) required ordering is not a prefix
-                    # of — Spark would discard the salted sort and re-sort
-                    # every task.
+                    # One streaming snapshot spans several ts-days and
+                    # partitions on (route_key, ts_day) only: a retained
+                    # CHUNK_COL would be stored in every sink file and lead
+                    # salted_write_layout's sort, which the writer's
+                    # required ordering is not a prefix of — every task
+                    # would re-sort.
                     drop.append(CHUNK_COL)
 
-                def write_sink(t: TypeConfig):
+                # Every group output is one pool entry (a list one thread
+                # commits in order); building the lazy plans runs no job.
+                entries: list[list[_Output]] = []
+                alert_events: dict[str, list] = {a.name: [] for a in cfg.alerts}
+                for t in cfg.types.values():
                     sub = routed.filter(F.col("sink") == t.sink_name)
                     transformed, _failed = apply_transformer(sub, t)
                     enriched = apply_mutators(transformed, t.mutators, self.lookups)
@@ -468,64 +474,51 @@ class MetricsPlumbing:
                     final = enforce_mapping(
                         enriched.drop(*drop), cfg.mappings.get(t.mapping_type)
                     )
-                    out = salted_write_layout(final, cfg.salt_buckets)
-                    with m.timing(f"write_latency.{t.sink_name}", label):
-                        manifests = self._commit(
-                            self.sinks[t.sink_name], out, sid, chunks
-                        )
-                    return t, enriched, manifests
-
-                types = list(cfg.types.values())
-                # NOTE (measured dead end): folding the errors commit into
-                # this pool — either as a 5th concurrent writer or queued
-                # behind the sinks on 4 workers — read equal-or-slower on
-                # this shared-disk box (more concurrent writers = more seek
-                # contention); errors stays a serial tail below.
-                with ThreadPoolExecutor(max_workers=min(4, len(types)) or 1) as ex:
-                    results = list(ex.map(write_sink, types))
-
-                alert_events: dict[str, list] = {a.name: [] for a in cfg.alerts}
-                for t, enriched, manifests in results:
-                    if self.collect_metrics:
-                        self._count_committed(
-                            "msgs.inserted", manifests, tag=t.sink_name
-                        )
+                    entries.append([_Output(
+                        f"sink:{t.sink_name}", self.sinks[t.sink_name],
+                        salted_write_layout(final, cfg.salt_buckets),
+                        counter="msgs.inserted", tag=t.sink_name,
+                    )])
                     for a in cfg.alerts:
                         ev = matched_events(enriched, a, t.name)
                         if ev is not None:
                             alert_events[a.name].append(ev)
-
-                side_width = self._side_width(cached)
-                err_manifests = self._commit(
-                    self.errors_table, errors.coalesce(side_width), sid, chunks,
-                    partition_cols=[],
-                )
-                if self.collect_metrics:
-                    self._count_committed("parse_errors", err_manifests)
-
-                # Alert rollup + rendered actions per group, same idempotent
-                # snapshot id. (Windows straddling a group or micro-batch
-                # boundary roll up per group — the reference's wall-clock
-                # windows have the same arrival-split behavior,
-                # alert.go:50-65.)
-                all_alerts = rollup_all(alert_events, cfg.alerts)
-                if all_alerts is not None:
-                    # The rollups feed two commits — cache so the second
-                    # (actions render) doesn't recompute the window agg.
-                    all_alerts = all_alerts.coalesce(side_width).cache()
-                    self.alerts_table.commit(
-                        all_alerts, snapshot_id=sid, partition_cols=[],
-                    )
-                    acts = render_actions(all_alerts, cfg.alerts, cfg.actions)
+                entries.append([_Output(
+                    "errors", self.errors_table, errors.coalesce(side_width),
+                    partition_cols=[], counter="parse_errors",
+                )])
+                # Alerts then actions is ONE entry: the actions render reads
+                # the rollup cache the alerts commit fills, instead of
+                # recomputing the window aggregate. Rollups are per chunk.
+                rolled = rollup_all(alert_events, cfg.alerts)
+                if rolled is not None:
+                    rolled = rolled.coalesce(side_width).cache()
+                    entry = [_Output("alerts", self.alerts_table, rolled, [])]
+                    acts = render_actions(rolled, cfg.alerts, cfg.actions)
                     if acts is not None:
-                        self.actions_table.commit(
-                            acts, snapshot_id=sid, partition_cols=[],
-                        )
-                    all_alerts.unpersist()
+                        entry.append(_Output("actions", self.actions_table, acts, []))
+                    entries.append(entry)
+
+                # One thread per entry; Spark's scheduler shares the cores.
+                # Leaving the pool waits for every submitted commit, also
+                # when one raises, before the error propagates.
+                with ThreadPoolExecutor(max_workers=len(entries)) as ex:
+                    results = list(ex.map(
+                        lambda e: [(o, self._commit(o, sid, label, chunks)) for o in e],
+                        entries,
+                    ))
                 if self.collect_metrics:
-                    # A5 gauges at the group commit boundary
-                    self._snapshot_gauges(label)
+                    for o, manifests in (r for entry in results for r in entry):
+                        if o.counter is not None:
+                            self._count_committed(o.counter, manifests, tag=o.tag)
+                    # A5 runtime gauges at the group commit boundary
+                    # (RunRuntimeCollector, metrics.go:17-27): driver-side
+                    # JMX bean reads, zero Spark jobs
+                    for k, v in runtime_gauges(self.spark).items():
+                        m.gauge(k, label, v)
             finally:
+                if rolled is not None:
+                    rolled.unpersist()
                 cached.unpersist()
 
 

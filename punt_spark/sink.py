@@ -305,8 +305,8 @@ class SnapshotTable:
         snapshot_id: str,
         partition_cols: list[str] | None = None,
     ) -> dict:
-        """Single-snapshot commit (side tables, streaming micro-batches,
-        tests). Idempotent: recommitting the same id replaces it atomically.
+        """Single-snapshot commit (streaming micro-batches, tests).
+        Idempotent: recommitting the same id replaces it atomically.
         Returns the manifest."""
         return self._write_snapshots(df, snapshot_id, partition_cols)[snapshot_id]
 

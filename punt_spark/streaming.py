@@ -13,11 +13,9 @@ exactly-once via the streaming checkpoint + idempotent snapshot ids).
 boundary is just a trigger choice: each micro-batch runs the same group
 body as a batch group (``MetricsPlumbing._process_group`` in pipeline.py).
 
-Alerts in the daemon use that body's ``rollup_all`` per micro-batch: the
-epoch-aligned tumbling windows of batch and the ``reference_impl`` oracle,
-so a window straddling a micro-batch boundary rolls up once per batch
-(alerts.py records why the reference's arrival-anchored windows are not
-reproduced).
+Alerts roll up per micro-batch (and per chunk) on the epoch-aligned windows
+of batch and the ``reference_impl`` oracle, so a window straddling a
+micro-batch boundary rolls up once per batch (alerts.py).
 """
 
 from __future__ import annotations

@@ -420,7 +420,7 @@ def test_resume_skips_committed_chunks(
 ):
     """Exactly-once: a killed run resumes from the last committed chunk
     without reprocessing or duplicating rows. The crash is injected into
-    the group's second sink commit, while the other sinks are committing
+    the group's second commit, while the group's other outputs commit
     concurrently."""
     out_dir = str(tmp_path / "resume_out")
     cfg = default_config()
@@ -435,7 +435,7 @@ def test_resume_skips_committed_chunks(
             calls[0] += 1
             n = calls[0]
         if n == 2:
-            raise RuntimeError("simulated crash in the second sink commit")
+            raise RuntimeError("simulated crash in the second commit")
         return orig(self, *args, **kwargs)
 
     pipe1 = Pipeline(spark, cfg, out_dir=out_dir, lookups=lookups)
@@ -487,6 +487,101 @@ def test_resume_skips_committed_chunks(
                 for k, v in s["partition_rows"].items():
                     lin_parts[k] = lin_parts.get(k, 0) + v
             assert lin_parts == by_part, t.sink_name
+
+
+def test_alerts_exactly_once_when_resume_forms_a_new_group(
+    spark, fixtures_dir, transcripts, tmp_path, monkeypatch
+):
+    """A batch run over two days crashes after every commit but before its
+    chunk markers; the rerun over all days forms a DIFFERENT group id.
+    Alerts and actions still equal the oracle with no duplicated window,
+    because in batch every table commits per chunk, through
+    ``commit_batch`` only."""
+    from collections import Counter
+
+    from punt_spark.sink import chunk_expr
+
+    out_dir = str(tmp_path / "out")
+    cfg = default_config()
+    lookups = load_lookups(spark, fixtures_dir)
+    days = sorted(
+        r["c"] for r in transcripts.select(chunk_expr("ts").alias("c")).distinct().collect()
+    )
+    assert len(days) > 2
+    first_two = transcripts.filter(chunk_expr("ts").isin(days[:2]))
+
+    calls = {"commit": Counter(), "commit_batch": Counter()}
+    lock = threading.Lock()
+
+    def counted(name):
+        orig = getattr(SnapshotTable, name)
+
+        def wrapper(self, *args, **kwargs):
+            with lock:
+                calls[name][os.path.basename(self.root)] += 1
+            return orig(self, *args, **kwargs)
+
+        return wrapper
+
+    for name in calls:
+        monkeypatch.setattr(SnapshotTable, name, counted(name))
+
+    def crash(self, chunk, info):
+        raise RuntimeError("simulated crash before the chunk markers")
+
+    pipe1 = Pipeline(spark, cfg, out_dir=out_dir, lookups=lookups)
+    with monkeypatch.context() as mp:
+        mp.setattr(Pipeline, "_mark_chunk", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pipe1.run(first_two)
+
+    pipe2 = Pipeline(spark, cfg, out_dir=out_dir, lookups=lookups)
+    assert pipe2.run(transcripts)["chunks_processed"] == days
+    oracle = reference_oracle(transcripts, cfg)
+    for name in ("alerts", "actions"):
+        df = getattr(pipe2, f"{name}_table").read(spark)
+        got = df.toPandas()
+        _compare(got, oracle[name], ["alert_name", "window_start"], ctx=name)
+        assert not got.duplicated(["alert_name", "window_start"]).any(), name
+        # keyed per chunk: the rerun replaced the crashed group's snapshots
+        assert set(getattr(pipe2, f"{name}_table").snapshots()) == set(days), name
+
+    tables = {*pipe2.sinks, "errors", "alerts", "actions"}
+    assert calls["commit"] == Counter()
+    assert set(calls["commit_batch"]) == tables
+    # both runs commit every table once
+    assert set(calls["commit_batch"].values()) == {2}
+
+
+def test_group_jobs_are_described_by_layer(spark, fixtures_dir, transcripts, tmp_path):
+    """Every Spark job the group body submits carries its layer as the job
+    description (Spark UI / event log): the scan-stats materialization and
+    each output's commit, from the pool threads as well."""
+    cfg = default_config()
+    jsc = spark.sparkContext._jsc.sc()
+
+    def descriptions() -> dict[int, str | None]:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        out = {}
+        for i in range(jobs.size()):
+            j = jobs.apply(i)
+            d = j.description()
+            out[j.jobId()] = d.get() if d.isDefined() else None
+        return out
+
+    before = max(descriptions(), default=-1)
+    pipe = Pipeline(
+        spark, cfg, out_dir=str(tmp_path / "out"),
+        lookups=load_lookups(spark, fixtures_dir),
+    )
+    pipe.run(transcripts)
+    seen = {d for j, d in descriptions().items() if j > before}
+    want = {"punt:scan_stats", "punt:errors", "punt:alerts", "punt:actions"}
+    want |= {f"punt:sink:{t.sink_name}" for t in cfg.types.values()}
+    assert want <= seen, want - seen
+    # cleared on the main thread once the scan stats ran
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
 
 
 def test_retention_keep_n(spark, run):

@@ -170,8 +170,8 @@ def test_streaming_exactly_once_under_faults(
     spark, fixtures_dir, transcripts, multi_file_input, tmp_path, monkeypatch,
     crash,
 ):
-    """A drain that crashes inside its second micro-batch — in a sink
-    commit while the other sinks commit concurrently, or after every
+    """A drain that crashes inside its second micro-batch — in a commit
+    while the group's other outputs commit concurrently, or after every
     write of the batch but before the checkpoint commit — and is restarted
     on the same dirs loses no row and doubles none: every sink equals the
     reference row for row, and the manifest lineage accounts for exactly
@@ -190,9 +190,9 @@ def test_streaming_exactly_once_under_faults(
         with lock:
             calls[0] += 1
             n = calls[0]
-        # the batch's first five commits are its concurrent sink commits
+        # a commit while the group's other outputs commit concurrently
         if crash == "second_sink_commit" and n == 2:
-            raise RuntimeError("simulated crash in a sink commit")
+            raise RuntimeError("simulated crash in a commit")
         man = orig(self, df, snapshot_id, *args, **kwargs)
         if crash == "after_actions_commit" and self is actions_table:
             raise RuntimeError("simulated crash before the checkpoint commit")

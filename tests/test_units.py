@@ -485,6 +485,89 @@ def test_snapshot_compaction(spark, tmp_path):
         ), fn.__name__
 
 
+def test_compaction_crash_before_publish_loses_nothing(spark, tmp_path, monkeypatch):
+    """A compaction that dies on its first manifest publish leaves every
+    row readable as before; ``gc_orphan_files()`` sweeps the stranded
+    ``batch=<sid>.c0`` generation, and a second compaction finishes with
+    identical rows."""
+    from punt_spark.sink import SnapshotTable
+
+    tbl = SnapshotTable(str(tmp_path / "cmp_fault"))
+    df = spark.createDataFrame(
+        [(f"c{i}", i, f"r{i % 2}", f"d{i % 2}") for i in range(40)],
+        "conv_id string, turn_idx int, route_key string, ts_day string",
+    )
+    for sid in ("s1", "s2"):
+        tbl.commit(df.repartition(8), sid)
+
+    def rows():
+        return sorted(map(tuple, tbl.read(spark).select(*df.columns).collect()))
+
+    want = rows()
+
+    def crashing_publish(self, manifest):
+        raise RuntimeError("simulated crash before the compaction's publish")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotTable, "_publish", crashing_publish)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            tbl.compact_snapshots(spark)
+    assert rows() == want
+    removed = tbl.gc_orphan_files()
+    assert removed
+    assert {r.split(os.sep)[1] for r in removed} == {"batch=s1.c0"}
+    assert set(tbl.compact_snapshots(spark)) == {"s1", "s2"}
+    assert rows() == want
+    assert tbl.gc_orphan_files() == []
+
+
+def test_retention_crash_after_first_manifest_rewrite(spark, tmp_path, monkeypatch):
+    """keep-N retention that dies right after its first manifest rewrite:
+    a rerun expires exactly the keep-N set, and ``lineage()`` accounts for
+    exactly the rows ``read`` returns, per (route_key, ts_day)."""
+    from collections import Counter
+
+    from punt_spark.sink import SnapshotTable
+
+    tbl = SnapshotTable(str(tmp_path / "ret_fault"))
+    days = [f"2017.03.1{d}" for d in range(6)]
+    for s in range(3):
+        tbl.commit(
+            spark.createDataFrame(
+                [(f"c{s}-{i}", i, f"logs-{days[i % 6]}", days[i % 6]) for i in range(24)],
+                "conv_id string, turn_idx int, route_key string, ts_day string",
+            ),
+            f"s{s}",
+        )
+    before = tbl.partitions("logs-")
+    assert len(before) == 6
+    orig = SnapshotTable._publish
+
+    def publish_then_crash(self, manifest):
+        orig(self, manifest)
+        raise RuntimeError("simulated crash after the first manifest rewrite")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotTable, "_publish", publish_then_crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            tbl.expire_partitions("logs-", keep=2)
+    assert tbl.expire_partitions("logs-", keep=2) == before[:-2]
+    assert tbl.partitions("logs-") == before[-2:]
+
+    df = tbl.read(spark)
+    assert {r["route_key"] for r in df.select("route_key").collect()} == set(before[-2:])
+    lin = tbl.lineage()
+    assert sum(s["n_rows"] for s in lin.values()) == df.count() == 3 * 8
+    lin_parts: Counter = Counter()
+    for s in lin.values():
+        lin_parts.update(s["partition_rows"])
+    got_parts = {
+        f"{r['route_key']}|{r['ts_day']}": r["count"]
+        for r in df.groupBy("route_key", "ts_day").count().collect()
+    }
+    assert dict(lin_parts) == got_parts
+
+
 def test_counter_options_and_observation_path_stay_gone():
     """Every msgs.* counter comes from the scan aggregate: the pipelines
     take no per-instance tag or chunk caps, and no code attaches
