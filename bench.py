@@ -7,7 +7,7 @@ Headline (BASELINE.json metric): parsed+routed turns/sec, reported two ways:
   fan-out snapshot commits, resume bookkeeping included) over a
   deterministically synthesized transcript table sized to the scale factor,
   at local[CPUS].
-* ``scaling.core`` — the parsed+routed core (scan → pandas-UDF regex parse
+* ``scaling.core`` — the parsed+routed core (scan → Arrow-UDF regex parse
   → literal route dispatch, no sinks) at N vs 4N cores on a fixed 9.6M-turn
   input: the sandbox proxy for N vs 4N executors required by the north rule.
   The core is CPU-bound and demonstrates the scaling efficiency; the full
@@ -245,7 +245,7 @@ def _warm_page_cache(fixtures_path: str):
 
 
 def run_core_once(threads: int, fixtures_path: str, n_rows: int) -> dict:
-    """parsed+routed core: scan → pandas-UDF parse → literal route dispatch."""
+    """parsed+routed core: scan → Arrow-UDF parse → literal route dispatch."""
     _warm_page_cache(fixtures_path)
     from pyspark.sql import functions as F
 
@@ -406,7 +406,7 @@ def main() -> int:
         "n_turns": n_rows,
         "scaling": {
             "core": {
-                "what": "scan + pandas-UDF RFC3164 parse + literal route dispatch",
+                "what": "scan + Arrow-UDF RFC3164 parse + literal route dispatch",
                 "n_turns": core_n,
                 "low": core_low,
                 "high": core_high,

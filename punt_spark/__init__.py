@@ -6,7 +6,7 @@ The reference is a continuously-running row-at-a-time Go dataflow
 (goroutines + channels → Elasticsearch bulk writes). This engine
 re-expresses the same semantics as set-oriented DataFrame transforms:
 
-* per-message parse stage      → vectorized pandas-UDF regex bank (parse.py)
+* per-message parse stage      → vectorized Arrow-UDF regex parse (parse.py)
 * transformer chain            → from_json column transforms (transform.py)
 * mutator chain                → column exprs + broadcast joins (enrich.py)
 * tag→type dispatch            → plan-time literal CASE on the tag (route.py)

@@ -82,15 +82,6 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def exact_dup_stats(df: DataFrame, cols: list[str]) -> DataFrame:
-    key = exact_key(cols)
-    return df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct(key).alias("n_unique"),
-        (F.count(F.lit(1)) - F.countDistinct(key)).alias("n_dupes"),
-    )
-
-
 # --- MinHash + LSH ------------------------------------------------------------
 
 
@@ -1049,26 +1040,6 @@ def _dup_clusters_loop(
     return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
 
 
-def minhash_dedup_keep(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Near-dup dedup with TRANSITIVE closure: verified pairs → connected
-    components → keep the min-id representative of each cluster."""
-    from pyspark.sql import functions as F
-
-    pairs = minhash_dedup(df, text_col, id_col, num_hashes, bands, threshold)
-    clusters = dup_clusters(pairs)
-    drop = clusters.filter(F.col("id") != F.col("cluster_id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(drop, id_col, "left_anti")
-
-
 def cluster_winners(
     clusters: DataFrame,
     scored: DataFrame,
@@ -1119,29 +1090,6 @@ def cluster_winners(
         .join(sizes, "cluster_id")
         .select("cluster_id", "keep_id", "n_members", "best_score")
     )
-
-
-def minhash_dedup_keep_best(
-    df: DataFrame,
-    score_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """:func:`minhash_dedup_keep` variant keeping the argmax-``score_col``
-    member of each component (tie: lowest id) instead of the min-id one.
-    Same transitive-closure semantics; singletons always survive."""
-    pairs = minhash_dedup(df, text_col, id_col, num_hashes, bands, threshold)
-    clusters = dup_clusters(pairs)
-    winners = cluster_winners(clusters, df, id_col, score_col)
-    drop = (
-        clusters.join(winners.select("cluster_id", "keep_id"), "cluster_id")
-        .filter(F.col("id") != F.col("keep_id"))
-        .select(F.col("id").alias(id_col))
-    )
-    return df.join(drop, id_col, "left_anti")
 
 
 # --- incremental dedup (continuous ingestion) -------------------------------------

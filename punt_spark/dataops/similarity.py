@@ -25,15 +25,6 @@ from .sampling import round_signed
 
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
-# Integer-code dot product: accumulate in BIGINT so the sum is exact (no
-# float accumulation-order effects) — int8/int16 code products are ≤ 2^30
-# per element, so even million-dim vectors stay far from bigint overflow.
-_DOT_INT = (
-    "aggregate(zip_with({a}, {b},"
-    " (x, y) -> cast(x as bigint) * cast(y as bigint)),"
-    " 0L, (acc, x) -> acc + x)"
-)
-
 
 def _cos(a: str, b: str) -> str:
     """Cosine similarity with degenerate inputs mapped to NULL, never an
@@ -48,20 +39,6 @@ def _cos(a: str, b: str) -> str:
     return (
         f"nullif(try_divide({_DOT.format(a=a, b=b)}, "
         f"sqrt({_DOT.format(a=a, b=a)}) * sqrt({_DOT.format(a=b, b=b)})), "
-        f"double('NaN'))"
-    )
-
-
-def _cos_int(a: str, b: str) -> str:
-    """Cosine over INTEGER code arrays: all three dot products accumulate
-    exactly in bigint; floats appear only at the final divide/sqrt. Same
-    degenerate-input contract as ``_cos`` (zero-norm → NULL via
-    try_divide; the bigint dots cannot produce NaN, but the nullif keeps
-    the two expressions behaviorally identical)."""
-    return (
-        f"nullif(try_divide(cast({_DOT_INT.format(a=a, b=b)} as double), "
-        f"sqrt(cast({_DOT_INT.format(a=a, b=a)} as double)) * "
-        f"sqrt(cast({_DOT_INT.format(a=b, b=b)} as double))), "
         f"double('NaN'))"
     )
 
@@ -188,51 +165,6 @@ def lsh_topk(
         sims.filter(F.col("sim").isNotNull())
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def embedding_near_dup_pairs(
-    vectors: DataFrame,
-    dim: int,
-    threshold: float = 0.8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 8,
-    n_tables: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs at scale: sign-LSH bucketed
-    candidates (a < b within a shared (table, bucket)) → exact cosine
-    verify ≥ threshold.
-
-    Precision is exact (every emitted pair is verified); recall is the LSH
-    collision probability — with p = 1 - θ/π per plane, a cos=θ pair
-    collides in one table with p^n_planes, across tables
-    1-(1-p^n_planes)^n_tables (≈0.99 for cos≥0.95 at 8×8). The O(n²)
-    all-pairs compare never happens: only bucket-mates join, the same
-    shape as dedup.lsh_candidate_pairs. Deterministic given the seed."""
-    vb = lsh_cosine_buckets(
-        vectors, dim, vec_col, id_col, n_planes, n_tables, seed
-    )
-    a = vb.select(
-        "table_idx", "bucket",
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).cast("array<double>").alias("va"),
-    )
-    b = vb.select(
-        "table_idx", "bucket",
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).cast("array<double>").alias("vb"),
-    )
-    cand = (
-        a.join(b, ["table_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.withColumn("sim", F.expr(_cos("va", "vb")))
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", "sim")
     )
 
 
@@ -399,84 +331,6 @@ def quantize_embeddings(
         d.withColumn(out, q)
         .withColumn(f"{out}_scale", F.col("__scale"))
         .drop("__v", "__scale")
-    )
-
-
-def quantized_cosine_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    bits: int = 8,
-) -> DataFrame:
-    """Brute-force cosine top-k over QUANTIZED vectors (both sides) — the
-    per-vector scale cancels in cosine, so this is simply cosine over the
-    integer codes: 4× less data scanned/shuffled for a small, bounded
-    ranking perturbation (pytest pins recall@10 ≥ 0.9 vs exact on the
-    fixture). The three dot products accumulate exactly in BIGINT
-    (``_cos_int``) — the codes stay at tinyint/smallint width end to end
-    and floats appear only at the final divide — so the similarity is a
-    deterministic function of the codes with no float summation-order
-    effects. Same result contract as ``cosine_topk``."""
-    qv = quantize_embeddings(vectors, vec_col, out="__q", bits=bits).select(
-        F.col(id_col), F.col("__q").alias("v")
-    )
-    qq = quantize_embeddings(queries, vec_col, out="__q", bits=bits).select(
-        F.col(query_id_col), F.col("__q").alias("qv")
-    )
-    sims = qv.crossJoin(F.broadcast(qq)).select(
-        query_id_col, id_col, F.expr(_cos_int("v", "qv")).alias("sim")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
-    return (
-        sims.filter(F.col("sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def ivf_topk_quantized(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-    bits: int = 8,
-    index=None,
-) -> DataFrame:
-    """IVF search over int8-quantized codes — D8 (IVF) composed with D28
-    (quantization), the full 100 TB scale path: candidates scanned ≈
-    nprobe/n_cells of the corpus AND each candidate is ``bits``-wide
-    integer codes instead of float64 (4× less scanned per probed cell at
-    int8 vs float32; 8× vs float64). The per-vector scale cancels in
-    cosine, so ranking is cosine over the raw codes; the codes stay at
-    tinyint width through the cell join and only widen to double inside
-    the per-row dot product. Recall loss = IVF cell misses + a bounded
-    quantization ranking perturbation (pytest pins recall@5 ≥ 0.9 against
-    exact search on the clustered fixture).
-
-    ``index`` reuses a prebuilt coarse quantizer across query batches
-    (see :func:`ivf_topk`); it must have been trained on the SAME
-    representation this function searches — the quantized codes, i.e.
-    ``ivf_index(quantize_embeddings(vectors, ...), ...)`` — or cell
-    assignment and probe selection would disagree about geometry."""
-    qv = quantize_embeddings(vectors, vec_col, out="__q", bits=bits).select(
-        F.col(id_col), F.col("__q").alias(vec_col)
-    )
-    qq = quantize_embeddings(queries, vec_col, out="__q", bits=bits).select(
-        F.col(query_id_col), F.col("__q").alias(vec_col)
-    )
-    return ivf_topk(
-        qv, qq, k, n_cells, nprobe, vec_col, id_col, query_id_col, seed,
-        index=index,
     )
 
 

@@ -16,28 +16,15 @@ from pyspark.sql.functions import pandas_udf
 
 # --- token counting -------------------------------------------------------------
 
-# BPE-ish word/number/punct splitter: letters+digits runs, or single
-# punctuation — a cheap proxy for subword tokenizers.
-BPE_ISH = r"[A-Za-z]+|\d+|[^\sA-Za-z\d]"
-
 
 def _ws_token_count(text_col: str):
     """Whitespace token count with the empty-split artifact removed:
     ``split(trim(''), '\\s+')`` yields [''] (one phantom token), so
     empty/whitespace-only text must filter empties to report 0 —
-    consistent with n_bpe_tokens and with every explode consumer in this
-    module (which all filter t != '')."""
+    consistent with every explode consumer in this module (which all
+    filter t != '')."""
     return F.size(
         F.expr(f"filter(split(trim({text_col}), '\\\\s+'), t -> t != '')")
-    )
-
-
-def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn(
-        "n_ws_tokens", _ws_token_count(text_col)
-    ).withColumn(
-        "n_bpe_tokens",
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH), 0)),
     )
 
 
@@ -530,24 +517,6 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fingerprint_md5", fingerprint_expr(text_col)).withColumn(
         "fingerprint_x64", F.xxhash64(norm)
     )
-
-
-def rolling_fingerprints(
-    df: DataFrame, text_col: str = "text", window_tokens: int = 8
-) -> DataFrame:
-    """Winnowing-style rolling fingerprints: hash every ``window_tokens``-gram
-    and keep the per-document minimum per window offset — array column, no
-    explode."""
-    d = df.withColumn("__tokens", F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-    return d.withColumn(
-        "rolling_fp",
-        F.expr(
-            f"CASE WHEN size(__tokens) >= {window_tokens} THEN "
-            f"transform(sequence(1, size(__tokens) - {window_tokens - 1}),"
-            f" i -> xxhash64(concat_ws(' ', slice(__tokens, i, {window_tokens})))) "
-            f"ELSE array() END"
-        ),
-    ).drop("__tokens")
 
 
 # --- corpus-level informativeness (IDF) ------------------------------------------

@@ -27,13 +27,6 @@ from pyspark.sql.functions import pandas_udf
 _SIZE_RE = re.compile(r"(\d+) ")
 
 
-def frame_newlines(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One row per newline-delimited record; empty trailing record dropped
-    (buffer.go:88-95 returns only complete lines)."""
-    rec = F.explode(F.split(F.col(text_col), "\n")).alias("record")
-    return df.select("*", rec).filter(F.col("record") != "")
-
-
 def frame_octets_str(buf: str) -> list[str]:
     """Pure-Python port of SyslogBuffer.Next/scanSize (buffer.go:27-81):
     skip garbage until ``<digits><space>``, take that many chars, repeat.
@@ -63,13 +56,6 @@ def _frame_octets_udf():
         )
 
     return frame_octets
-
-
-def frame_octet_counted(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Explode octet-counted buffers into one row per framed record."""
-    return df.withColumn("__records", _frame_octets_udf()(F.col(text_col))).select(
-        "*", F.explode("__records").alias("record")
-    ).drop("__records")
 
 
 def frame_records(

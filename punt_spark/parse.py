@@ -5,15 +5,15 @@ parser.go:47-106 (ParseRFC3164Inplace). The reference parses one line at a
 time inside a per-connection goroutine; here the same regex bank is applied
 to an entire Arrow batch at once.
 
-``parse_rfc3164`` is a scalar pandas UDF returning a struct column. All
-six capture groups extract in a single pass over the batch via pyarrow's
-RE2 ``extract_regex`` + C++ ``strptime`` (the contract path per
+``parse_rfc3164`` is a scalar Arrow UDF (``arrow_udf``) returning a struct
+column: Arrow in, Arrow out, no pandas conversion on either side. All six
+capture groups extract in one pass over the batch via pyarrow's RE2
+``extract_regex``; the timestamp parses with the C++ ``strptime``, and
+every check below is an Arrow compute kernel (the contract path per
 BASELINE.json input_hint: "vectorized pandas/Arrow UDFs, no per-row
-Python"; measured 2.05× the original pandas ``str.extract``+``to_datetime``
-formulation, which remains as the tested-equal fallback). A JVM-only
-``regexp_extract``×6 variant was removed: a warm 20k-turn backfill at
-local[4] (third run in a fresh session) took 10.1/9.7 s with it against
-7.7/7.9 s with this UDF.
+Python"). A JVM-only ``regexp_extract``×6 variant was removed: a warm
+20k-turn backfill at local[4] (third run in a fresh session) took
+10.1/9.7 s with it against 7.7/7.9 s with the UDF.
 
 Error semantics (parser.go:13-16, 56-106): a line yields exactly one of a
 parsed record or an error tag (Invalid Message / Invalid Priority /
@@ -24,85 +24,51 @@ Punt forwards malformed rows downstream with stale struct contents
 
 RFC3164 timestamps carry no year; the reference back-fills the *wall-clock*
 year (parser.go:73-84). For reproducibility the year is a pinned parameter.
+
+``reference_impl.parse_line`` is an independent row-at-a-time port of the
+same semantics over Python ``re``; tests pin this batch parse to it.
 """
 
 from __future__ import annotations
 
-import re
+from functools import reduce
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-# Port of the Go RE2 pattern at parser.go:11. Inner alternation `(.|\n)*`
-# rewritten `[\s\S]*` (equivalent, and keeps the group count at 6).
-RFC3164_REGEX = (
-    r"<([0-9]+)>([A-Z][a-z][a-z]\s{1,2}\d{1,2}\s\d{2}[:]\d{2}[:]\d{2})"
-    r"\s([\w][\w\d\.@-]*)\s([^: \[]+)(?:\[([0-9]+)\])?[: \[] ?([\s\S]*)"
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import (
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
 )
-# re.ASCII pins \w/\d/\s to ASCII — the RE2 semantics of both the Go
-# reference (parser.go:11) and the pyarrow fast path. Without it the
-# fallback alone would accept non-ASCII hostnames ('hést') and NBSP
-# separators, silently shifting behavior when pyarrow is absent.
-RFC3164_PATTERN = re.compile(RFC3164_REGEX, re.ASCII)
 
-# Named-group variant for the pyarrow RE2 fast path (extract_regex requires
-# named groups). Same pattern — the reference's Go regexp IS RE2
-# (parser.go:11), so RE2 semantics are the native semantics here.
-RFC3164_REGEX_NAMED = (
+# Port of the Go RE2 pattern at parser.go:11 — the reference's Go regexp
+# IS RE2, so pyarrow's RE2 gives the native semantics (\w, \d, \s are
+# ASCII-only). Named groups because extract_regex requires them; the inner
+# alternation `(.|\n)*` is written `(?s:.*)` (equivalent: any character).
+RFC3164_REGEX = (
     r"<(?P<pri>[0-9]+)>"
     r"(?P<ts_raw>[A-Z][a-z][a-z]\s{1,2}\d{1,2}\s\d{2}[:]\d{2}[:]\d{2})"
     r"\s(?P<hostname>[\w][\w\d\.@-]*)\s(?P<tag>[^: \[]+)"
-    r"(?:\[(?P<pid>[0-9]+)\])?[: \[] ?(?P<content>[\s\S]*)"
+    r"(?:\[(?P<pid>[0-9]+)\])?[: \[] ?(?P<content>(?s:.*))"
 )
-_GROUPS = ["pri", "ts_raw", "hostname", "tag", "pid", "content"]
 
-try:  # C++ RE2 extraction (measured ~1.8× the Python-re path per batch)
-    import pyarrow as _pa
-    import pyarrow.compute as _pc
-
-    _ARROW_RE = True
-except ImportError:  # pragma: no cover
-    _ARROW_RE = False
-
-
-def _extract_groups(text: pd.Series) -> tuple[pd.DataFrame, pd.Series]:
-    """→ (capture-group frame, matched mask). PyArrow RE2 fast path with
-    the pandas Python-re path as fallback; the two are pinned equal by
-    tests/test_parse.py::test_arrow_extract_matches_python (one
-    convention difference is normalized here: RE2 yields '' for an
-    unparticipating optional group where Python re yields NaN — downstream
-    handles both, see pid_missing)."""
-    if _ARROW_RE:
-        arr = _pa.Array.from_pandas(text.astype(object), type=_pa.string())
-        res = _pc.extract_regex(arr, RFC3164_REGEX_NAMED)
-        matched = pd.Series(
-            _pc.is_valid(res).to_pandas().to_numpy(), index=text.index
-        )
-        cols = {}
-        for name in _GROUPS:
-            f = res.field(name)
-            if name == "ts_raw":
-                # normalize "Jan  2"-style padding while still in Arrow
-                # (RE2 replace — cheaper than the pandas str.replace)
-                f = _pc.replace_substring_regex(f, r"\s+", " ")
-            s = f.to_pandas()
-            s.index = text.index
-            # parent-null (non-matching) slots surface as '' — mask to NaN
-            # so error precedence sees "no match", not "bad priority"
-            cols[name] = s.where(matched)
-        return pd.DataFrame(cols), matched
-    ext = text.str.extract(RFC3164_PATTERN)
-    ext.columns = _GROUPS
-    ext["ts_raw"] = ext["ts_raw"].str.replace(r"\s+", " ", regex=True)
-    return ext, ext["pri"].notna()
-
-# Struct produced by the parse stage. `error` is null on success.
-PARSED_SCHEMA = (
-    "priority int, ts timestamp, hostname string, tag string, "
-    "pid int, content string, error string"
+# Struct produced by the parse stage. `error` is null on success. A
+# StructType, not a DDL string: parsing DDL needs an active session.
+PARSED_SCHEMA = StructType(
+    [
+        StructField("priority", IntegerType()),
+        StructField("ts", TimestampType()),
+        StructField("hostname", StringType()),
+        StructField("tag", StringType()),
+        StructField("pid", IntegerType()),
+        StructField("content", StringType()),
+        StructField("error", StringType()),
+    ]
 )
 
 ERR_INVALID_MESSAGE = "Invalid Message"
@@ -110,113 +76,98 @@ ERR_INVALID_PRIORITY = "Invalid Priority"
 ERR_INVALID_TIMESTAMP = "Invalid Timestamp"
 ERR_INVALID_PID = "Invalid PID"
 
+I32_MAX = 2_147_483_647
 
-def _parse_ts(ts_norm: pd.Series, year: int) -> pd.Series:
-    """Whitespace-normalized "%b %d %H:%M:%S" → timestamp (NaT on any
-    invalid). Arrow C++ strptime fast path (measured 2.4× the pandas
-    strptime on a 200k batch) with one semantic repair: C strptime ROLLS
-    invalid calendar dates over ("Feb 30" → Mar 2) where Go's time.Parse —
-    the reference semantics (parser.go:69) — and pandas both reject, so a
-    parsed row whose day-of-month no longer equals the day claimed in the
-    string is nulled. Pinned equal to the pandas path by
-    tests/test_parse.py::test_arrow_extract_matches_python."""
-    if _ARROW_RE:
-        arr = _pa.Array.from_pandas(
-            (str(year) + " " + ts_norm).astype(object), type=_pa.string()
-        )
-        ts = _pc.strptime(
-            arr, format="%Y %b %d %H:%M:%S", unit="us", error_is_null=True
-        )
-        day_ext = _pc.extract_regex(
-            _pa.Array.from_pandas(ts_norm.astype(object), type=_pa.string()),
-            r"^[A-Za-z]{3}\s+(?P<d>\d{1,2})\s",
-        )
-        day_claimed = _pc.cast(
-            _pc.if_else(_pc.is_valid(day_ext), day_ext.field("d"), None),
-            _pa.int64(),
-        )
-        ok = _pc.fill_null(_pc.equal(_pc.day(ts), day_claimed), False)
-        out = _pc.if_else(ok, ts, _pa.scalar(None, _pa.timestamp("us")))
-        # ns dtype for bit-identical parity with the pandas fallback (the
-        # Spark conversion truncates to µs either way)
-        s = out.to_pandas().astype("datetime64[ns]")
-        s.index = ts_norm.index
-        return s
-    return pd.to_datetime(
-        str(year) + " " + ts_norm, format="%Y %b %d %H:%M:%S", errors="coerce"
+def _int32(digits: pa.Array) -> pa.Array:
+    """Digit strings → int32, null where the value does not fit. Leading
+    zeros are trimmed first, so ``00000000001`` is 1 and only a value of
+    more than ten significant digits is too long to cast."""
+    sig = pc.utf8_ltrim(digits, characters="0")
+    sig = pc.if_else(pc.equal(sig, ""), pa.scalar("0", sig.type), sig)
+    fits = pc.less_equal(pc.utf8_length(sig), 10)
+    n = pc.cast(pc.if_else(fits, sig, pa.scalar(None, sig.type)), pa.int64())
+    return pc.cast(pc.if_else(pc.less_equal(n, I32_MAX), n, None), pa.int32())
+
+
+def _parse_ts(ts_raw: pa.Array, year: int) -> pa.Array:
+    """"%b %d %H:%M:%S" (either reference layout, parser.go:18-21) → naive
+    timestamp[us], null on any invalid. C strptime ROLLS an out-of-range
+    day or second over ("Feb 30" → Mar 2, "04:20:61" → 04:21:01) where
+    Go's time.Parse (parser.go:69) rejects it, so a timestamp whose day,
+    hour, minute or second differs from the one the string claims is
+    nulled. The year is pinned, never wall clock (parser.go:74 uses
+    time.Now().Year())."""
+    norm = pc.replace_substring_regex(ts_raw, r"\s+", " ")
+    t = norm.type
+    ts = pc.strptime(
+        pc.binary_join_element_wise(pa.scalar(str(year), t), norm, pa.scalar(" ", t)),
+        format="%Y %b %d %H:%M:%S",
+        unit="us",
+        error_is_null=True,
     )
+    # each date part against its code units in "Mon D HH:MM:SS"
+    claimed = [(pc.day, 4, -9), (pc.hour, -8, -6), (pc.minute, -5, -3), (pc.second, -2, None)]
+    kept = reduce(
+        pc.and_kleene,
+        (
+            pc.equal(part(ts), pc.cast(pc.utf8_slice_codeunits(norm, a, b), pa.int64()))
+            for part, a, b in claimed
+        ),
+    )
+    return pc.if_else(kept, ts, None)
 
 
-def parse_rfc3164_batch(text: pd.Series, year: int) -> pd.DataFrame:
-    """Vectorized parse of a batch of raw lines. Pure pandas — shared by the
-    Spark UDF and the pure-Python reference oracle so goldens pin one code
-    path."""
-    ext, matched = _extract_groups(text)
-
-    pri = pd.to_numeric(ext["pri"], errors="coerce")
-    # Both reference layouts ("Jan 02" / "Jan  2", parser.go:18-21) collapse
-    # to one format after whitespace normalization (done inside
-    # _extract_groups); year pinned, never wall clock (parser.go:74 uses
-    # time.Now().Year() — wall-clock dependent).
-    ts = _parse_ts(ext["ts_raw"], year)
-    pid_num = pd.to_numeric(ext["pid"], errors="coerce")
-    pid_missing = ext["pid"].isna() | (ext["pid"] == "")
-    pid = pid_num.fillna(0).astype("int64")
+def parse_rfc3164_batch(text: pa.Array, year: int) -> pa.StructArray:
+    """Vectorized parse of a batch of raw lines → ``PARSED_SCHEMA`` struct."""
+    m = pc.extract_regex(text, RFC3164_REGEX)
+    # struct_field keeps the parent null of a non-matching row (where
+    # StructArray.field would yield '')
+    g = {f.name: pc.struct_field(m, f.name) for f in m.type}
+    pri = _int32(g["pri"])
+    ts = _parse_ts(g["ts_raw"], year)
+    pid = _int32(g["pid"])  # an absent pid group extracts as '' → 0
 
     # Error precedence mirrors ParseRFC3164Inplace's check order
     # (parser.go:56-106): match → priority → timestamp → pid. Values that
     # don't fit the declared int32 schema count as INVALID, not as a job
     # crash: a single adversarial line like <99999999999> would otherwise
-    # fail the whole task at Arrow conversion (Int64 → int32), violating
-    # the totality contract.
-    _I32_MAX = 2_147_483_647
-    error = np.select(
-        [
-            ~matched,
-            pri.isna() | (pri > _I32_MAX),
-            ts.isna(),
-            (pid_num.isna() & ~pid_missing) | (pid_num > _I32_MAX),
-        ],
-        [
-            ERR_INVALID_MESSAGE,
-            ERR_INVALID_PRIORITY,
-            ERR_INVALID_TIMESTAMP,
-            ERR_INVALID_PID,
-        ],
-        default=None,
+    # fail the whole task at the int32 cast, violating the totality contract.
+    failed = [pc.is_null(m), pc.is_null(pri), pc.is_null(ts), pc.is_null(pid)]
+    error = pc.case_when(
+        pc.make_struct(*failed, field_names=["m", "pri", "ts", "pid"]),
+        ERR_INVALID_MESSAGE,
+        ERR_INVALID_PRIORITY,
+        ERR_INVALID_TIMESTAMP,
+        ERR_INVALID_PID,
     )
-    ok = pd.isna(pd.Series(error, index=text.index))
-
-    out = pd.DataFrame(
-        {
-            "priority": pri.where(ok).astype("Int64"),
-            "ts": ts.where(ok),
-            "hostname": ext["hostname"].where(ok),
-            "tag": ext["tag"].where(ok),
-            "pid": pid.where(ok).astype("Int64"),
-            "content": ext["content"].where(ok),
-            "error": pd.Series(error, index=text.index, dtype=object),
-        }
+    ok = pc.is_null(error)
+    fields = {
+        "priority": pri,
+        "ts": ts,
+        "hostname": g["hostname"],
+        "tag": g["tag"],
+        "pid": pid,
+        "content": g["content"],
+    }
+    return pa.StructArray.from_arrays(
+        [pc.if_else(ok, v, None) for v in fields.values()] + [error],
+        names=[*fields, "error"],
     )
-    return out
 
 
 def make_parse_udf(year: int):
-    """Scalar pandas UDF: text → parsed struct. The regex is compiled once
-    per executor (module global), matching the reference's package-level
-    compiled regex (parser.go:11)."""
+    """Scalar Arrow UDF: text → parsed struct, with ``year`` pinned."""
 
-    @pandas_udf(PARSED_SCHEMA)
-    def parse_rfc3164(text: pd.Series) -> pd.DataFrame:
+    @arrow_udf(PARSED_SCHEMA)
+    def parse_rfc3164(text: pa.Array) -> pa.Array:
         return parse_rfc3164_batch(text, year)
 
     return parse_rfc3164
 
 
 def with_parsed(df: DataFrame, text_col: str = "text", year: int = 2017) -> DataFrame:
-    """Attach ``parsed`` struct + ``parse_ok`` flag via the pandas UDF path."""
+    """Attach ``parsed`` struct + ``parse_ok`` flag via the Arrow UDF."""
     parse_udf = make_parse_udf(year)
     return df.withColumn("parsed", parse_udf(F.col(text_col))).withColumn(
         "parse_ok", F.col("parsed.error").isNull()
     )
-

@@ -12,7 +12,9 @@ Documented divergences (shared with the Spark engine, SURVEY.md §7):
 * unixtime epoch math is correct (mutators.go:54 double-counts seconds);
 * alert rollup windows are event-time tumbling (the reference's windows are
   wall-clock arrival-time, unreproducible by construction);
-* delivery is exactly-once (msgs.dropped ≡ 0).
+* delivery is exactly-once (msgs.dropped ≡ 0);
+* a priority or pid that does not fit the int32 schema is invalid (Invalid
+  Priority / Invalid PID), never a wider integer (COVERAGE P2).
 """
 
 from __future__ import annotations
@@ -25,11 +27,16 @@ from datetime import datetime, timedelta, timezone
 from .config import PipelineConfig
 from .parse import (
     ERR_INVALID_MESSAGE,
+    ERR_INVALID_PID,
+    ERR_INVALID_PRIORITY,
     ERR_INVALID_TIMESTAMP,
+    I32_MAX,
     RFC3164_REGEX,
 )
 
-_PATTERN = re.compile(RFC3164_REGEX)
+# RE2 semantics, as in Go (parser.go:11): re.ASCII keeps \w and \d ASCII,
+# and \s is spelled out because Python's ASCII \s also takes \v.
+_PATTERN = re.compile(RFC3164_REGEX.replace(r"\s", r"[\t\n\f\r ]"), re.ASCII)
 
 # Go layout "2006.01.02.15" etc. → strftime for the oracle side.
 _GO_TO_STRFTIME = [
@@ -50,19 +57,24 @@ def go_format_to_strftime(layout: str) -> str:
     return out
 
 
-def parse_line(line: str, year: int) -> tuple[dict | None, str | None]:
-    """Port of ParseRFC3164Inplace: returns (envelope, error)."""
-    m = _PATTERN.search(line)
+def parse_line(line: str | None, year: int) -> tuple[dict | None, str | None]:
+    """Port of ParseRFC3164Inplace: returns (envelope, error). NULL text is
+    an Invalid Message, as in the pipeline's errors sink."""
+    m = _PATTERN.search(line) if line is not None else None
     if m is None:
         return None, ERR_INVALID_MESSAGE
     pri_s, ts_s, hostname, tag, pid_s, content = m.group(1, 2, 3, 4, 5, 6)
     priority = int(pri_s)  # regex guarantees digits (parser.go:64-67)
+    if priority > I32_MAX:
+        return None, ERR_INVALID_PRIORITY
     ts_norm = re.sub(r"\s+", " ", ts_s)
-    try:
+    try:  # rejects a second of 60 or 61, as Go's time.Parse does
         ts = datetime.strptime(f"{year} {ts_norm}", "%Y %b %d %H:%M:%S")
     except ValueError:
         return None, ERR_INVALID_TIMESTAMP
     pid = int(pid_s) if pid_s else 0
+    if pid > I32_MAX:
+        return None, ERR_INVALID_PID
     return (
         {
             "priority": priority,

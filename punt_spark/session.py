@@ -21,7 +21,8 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #
 # * AQE on: runtime coalescing + skew-join splitting — load-bearing for the
 #   hot-conversation skew called out in SURVEY.md §4.
-# * Arrow on: every Python-side stage is a pandas UDF over Arrow batches.
+# * Arrow on: every Python-side stage is a pandas or Arrow UDF over Arrow
+#   batches.
 # * Session timezone pinned UTC: the reference formats ``@timestamp`` as
 #   ``2006-01-02T15:04:05+00:00`` (cluster.go:285); reproducibility demands
 #   wall-clock independence.

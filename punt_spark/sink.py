@@ -747,20 +747,6 @@ def expire_by_config(cfg, sinks: dict[str, SnapshotTable]) -> dict[str, list[str
     return expired
 
 
-def ddl_for_session_catalog(ddl: str, location: str | None = None) -> str:
-    """Render an emitted Iceberg CREATE TABLE for execution against a
-    plain Spark session catalog (this sandbox has no Iceberg jars):
-    ``USING parquet`` with an optional LOCATION. Everything else —
-    column list, partitioning, table properties — executes verbatim, so
-    running these statements proves the emitted DDL is syntactically LIVE
-    and binds the declared schema, the closest in-sandbox analog of the
-    reference's startup template push (type.go:63-97)."""
-    out = ddl.replace(") USING iceberg\n", ") USING parquet\n")
-    if location:
-        out += f"\nLOCATION '{location}'"
-    return out
-
-
 def salted_write_layout(
     df: DataFrame,
     salt_buckets: int,

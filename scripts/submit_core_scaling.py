@@ -1,5 +1,5 @@
 """spark-submit entry for the north-rule scaling measurement — the
-parsed+routed CORE job (scan → pandas-UDF RFC3164 parse → literal route
+parsed+routed CORE job (scan → Arrow-UDF RFC3164 parse → literal route
 dispatch → noop write) run under the exact deployment shape the rule names:
 
     zip -r punt_spark.zip punt_spark

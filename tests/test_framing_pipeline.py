@@ -15,6 +15,20 @@ LINE1 = "<13>Mar 14 04:00:00 h1 logs: first record"
 LINE2 = "<14>Mar 14 04:00:01 h1 logs: second record"
 
 
+def ddl_for_session_catalog(ddl: str, location: str | None = None) -> str:
+    """Render an emitted Iceberg CREATE TABLE for execution against a
+    plain Spark session catalog (no Iceberg jars needed): ``USING parquet``
+    with an optional LOCATION. Everything else — column list,
+    partitioning, table properties — executes verbatim, so running these
+    statements proves the emitted DDL is syntactically LIVE and binds the
+    declared schema, the closest local analog of the reference's startup
+    template push (type.go:63-97)."""
+    out = ddl.replace(") USING iceberg\n", ") USING parquet\n")
+    if location:
+        out += f"\nLOCATION '{location}'"
+    return out
+
+
 def _table(spark, text_rows):
     pdf = pd.DataFrame(
         {
@@ -155,7 +169,6 @@ def test_sink_ddl_executes_against_session_catalog(spark, tmp_path):
     import re
 
     from punt_spark.fixtures import lookup_role_pdf, lookup_tool_pdf, make_transcripts
-    from punt_spark.sink import ddl_for_session_catalog, sink_ddl
 
     cfg = default_config()
     lookups = {

@@ -1,10 +1,12 @@
 """Parse-stage goldens — every literal line from the reference's unit tests
 (lib/syslog/parser_test.go, buffer_test.go) must round-trip exactly through
-the pandas-UDF parse."""
+the Arrow-UDF parse."""
 
+import ast
 import datetime
+import inspect
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from punt_spark.fixtures import GOLDEN_AUDIT, GOLDEN_MULTILINE, GOLDEN_SIMPLE
@@ -73,84 +75,77 @@ class TestGoldens:
 
 
 def test_bad_calendar_date_is_invalid_timestamp(spark):
-    # regex matches (digits fine) but Feb 30 is not a date → timestamp error,
-    # mirroring Go time.Parse "day out of range" (parser.go:69-88)
-    df = spark.createDataFrame([("<13>Feb 30 01:02:03 host t: x",)], "text string")
-    r = with_parsed(df, "text", YEAR).select("parsed.*").collect()[0]
-    assert r.error == "Invalid Timestamp"
+    # regex matches (digits fine) but Feb 30 is not a date, nor is second 60
+    # or 61 → timestamp error, mirroring Go time.Parse "day out of range" /
+    # "second out of range" (parser.go:69-88); C strptime would roll each
+    # over (Mar 2, 04:21:00, 04:21:01, 2018-01-01)
+    lines = [
+        "<13>Feb 30 01:02:03 host t: x",
+        "<13>Mar 14 04:20:60 h tag: x",
+        "<13>Mar 14 04:20:61 h tag: x",
+        "<13>Dec 31 23:59:60 h tag: x",
+    ]
+    df = spark.createDataFrame([(line,) for line in lines], "text string")
+    rows = with_parsed(df, "text", YEAR).select("text", "parsed.*").collect()
+    assert {r.text: r.error for r in rows} == dict.fromkeys(lines, "Invalid Timestamp")
 
 
-def test_batch_matches_pandas_oracle(transcripts):
-    """The Spark UDF body and the pure-pandas batch function are one code
-    path; pin the batch function against the row-at-a-time oracle parser."""
-    from punt_spark.reference_impl import parse_line
-
-    pdf = transcripts.toPandas()
-    got = parse_rfc3164_batch(pdf["text"], YEAR)
-    for i in range(len(pdf)):
-        env, err = parse_line(pdf["text"].iloc[i], YEAR)
-        row = got.iloc[i]
-        if err is not None:
-            assert row["error"] == err, pdf["text"].iloc[i]
-        else:
-            assert row["error"] is None or pd.isna(row["error"])
-            assert row["priority"] == env["priority"]
-            assert row["hostname"] == env["hostname"]
-            assert row["tag"] == env["tag"]
-            assert row["pid"] == env["pid"]
-            assert row["content"] == env["content"]
-            assert row["ts"].to_pydatetime() == env["ts"]
-
-
-def test_arrow_extract_matches_python():
-    """The pyarrow RE2 extraction path and the pandas Python-re fallback
-    must agree exactly (modulo the documented ''-vs-NaN convention for the
-    unparticipating optional pid group) over the full fixture corpus."""
-    import punt_spark.parse as P
-    from punt_spark.fixtures import make_transcripts
-
-    assert P._ARROW_RE  # the container ships pyarrow
-    texts = make_transcripts(20_000, seed=11)["text"]
-    # exercise edge inputs too
-    texts = pd.concat(
-        [texts, pd.Series(["", None, "<13>", "no match at all",
-                           "<999>Mar 14 04:00:00 h tag: x",
-                           # non-ASCII: \w/\s are ASCII-only under RE2 (the
-                           # Go reference's semantics); the Python fallback
-                           # is compiled with re.ASCII to pin the same —
-                           # both must REJECT these
-                           "<13>Mar 14 04:20:19 hést tag: x",
-                           "<13>Mar 14 04:20:19 h tag: x",
-                           "<13>Mar 14 04:20:19 h tag: x"],
-                          dtype=object)],
-        ignore_index=True,
-    )
-    fast_ext, fast_m = P._extract_groups(texts)
-    # the three non-ASCII probes are rejected by BOTH paths
-    assert not fast_m.iloc[-3:].any()
-    ext = texts.str.extract(P.RFC3164_PATTERN)
-    ext.columns = P._GROUPS
-    slow_m = ext["pri"].notna()
-    assert (fast_m.to_numpy() == slow_m.to_numpy()).all()
-    for c in P._GROUPS:
-        a = fast_ext[c].fillna("")
-        b = ext[c].fillna("")
-        assert (a.to_numpy() == b.to_numpy()).all(), c
-    # and the full batch parser output is identical through either path
-    # calendar-edge corpus: every month x day combo + weird times — the C
-    # strptime fast path must reject exactly what Go time.Parse rejects
-    # (rollover dates like Feb 30), matching the pandas path bit-for-bit
-    edges = []
+def _edge_corpus():
+    """Inputs where a regex engine, a calendar or an int32 can disagree."""
+    edges = ["", None, "<13>", "no match at all", "<999>Mar 14 04:00:00 h tag: x"]
     for m in ["Jan", "Feb", "Mar", "Apr", "Jun", "Dec", "Xxx"]:
         for d in [0, 1, 9, 28, 29, 30, 31, 32]:
             edges.append(f"<13>{m} {d} 04:20:19 h tag: x")
-    for t in ["23:59:59", "24:00:00", "04:20:60", "04:60:19", "00:00:00"]:
+    for t in ["23:59:59", "24:00:00", "04:20:60", "04:20:61", "04:60:19", "00:00:00"]:
         edges.append(f"<13>Mar 14 {t} h tag: x")
-    texts = pd.concat([texts, pd.Series(edges, dtype=object)], ignore_index=True)
-    fast = P.parse_rfc3164_batch(texts, 2017)
-    P._ARROW_RE = False
-    try:
-        slow = P.parse_rfc3164_batch(texts, 2017)
-    finally:
-        P._ARROW_RE = True
-    pd.testing.assert_frame_equal(fast, slow)
+    edges += [
+        "<13>Dec 31 23:59:60 h tag: x",
+        # \w and \s are ASCII-only under RE2 (Go's and pyarrow's regexp);
+        # RE2's \s also excludes \v
+        "<13>Mar 14 04:20:19 hést tag: x",
+        "<13>Mar 14 04:20:19\u00a0h tag: x",
+        "<13>Mar 14 04:20:19\u3000h tag: x",
+        "<13>Mar 14 04:20:19\vh tag: x",
+        # out of int32 → invalid; leading zeros don't count
+        "<2147483647>Mar 14 04:20:19 h tag[2147483647]: x",
+        "<2147483648>Mar 14 04:20:19 h tag: x",
+        "<99999999999>Mar 14 04:20:19 h tag: x",
+        "<00000000001>Mar 14 04:20:19 h tag[000000000042]: x",
+        "<13>Mar 14 04:20:19 h tag[2147483648]: x",
+    ]
+    return edges
+
+
+def test_batch_matches_pandas_oracle(transcripts):
+    """Pin the Arrow batch parse (the UDF body) row for row against the
+    independent row-at-a-time oracle parser, over the fixture corpus plus
+    the edge corpus."""
+    from punt_spark.reference_impl import parse_line
+
+    texts = [r.text for r in transcripts.select("text").collect()] + _edge_corpus()
+    got = parse_rfc3164_batch(pa.array(texts, pa.string()), YEAR).to_pylist()
+    for text, row in zip(texts, got, strict=True):
+        env, err = parse_line(text, YEAR)
+        if err is not None:
+            assert row["error"] == err, text
+        else:
+            assert row == {**env, "error": None}, text
+
+
+def test_parse_module_is_one_arrow_path():
+    """One parse implementation: no pandas/numpy in parse.py, no fallback
+    switch or second compiled pattern, and the UDF is an Arrow UDF.
+    Starts no Spark."""
+    from pyspark.util import PythonEvalType
+
+    import punt_spark.parse as P
+
+    imported = set()
+    for node in ast.walk(ast.parse(inspect.getsource(P))):
+        if isinstance(node, ast.Import):
+            imported |= {a.name.split(".")[0] for a in node.names}
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            imported.add(node.module.split(".")[0])
+    assert not imported & {"pandas", "numpy"}
+    assert not hasattr(P, "_ARROW_RE") and not hasattr(P, "RFC3164_PATTERN")
+    assert P.make_parse_udf(YEAR).evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
