@@ -78,6 +78,7 @@ ERR_INVALID_PID = "Invalid PID"
 
 I32_MAX = 2_147_483_647
 
+
 def _int32(digits: pa.Array) -> pa.Array:
     """Digit strings → int32, null where the value does not fit. Leading
     zeros are trimmed first, so ``00000000001`` is 1 and only a value of

@@ -20,7 +20,8 @@ def _parse_one(spark, line, parse):
     return parse(df, "text", YEAR).select("parsed.*").collect()[0]
 
 
-# One parse path; the id keeps the goldens' test names stable.
+# One parse path, the Arrow UDF; the id predates it and is kept so the
+# goldens' test names stay stable.
 @pytest.mark.parametrize("parse", [with_parsed], ids=["pandas_udf"])
 class TestGoldens:
     def test_simple(self, spark, parse):
